@@ -71,8 +71,9 @@ object SeriesMath {
     * ~3 buckets and ANSI mode faults loudly. Coarsening the bucket
     * does NOT buy headroom here (n shrinks but the sums grow in step);
     * the remedies are a shorter time range or pre-scaled values
-    * (val DIV s before the rollup). */
-  /** `groupExpr` must be a function of `series` only — it is
+    * (val DIV s before the rollup).
+    *
+    * `groupExpr` must be a function of `series` only — it is
     * evaluated on the (series, bucket) rollup (see [[shareOfTotal]]),
     * so an expression over ts/val fails analysis. */
   def laggedPearson(points: DataFrame, bucket: Long = 3600L,

@@ -56,11 +56,6 @@ final class ApiCore(spark: SparkSession, storeDir: String,
 
   private def metaHome: String = metaDirOpt.getOrElse(storeDir)
 
-  /** Store directory, exposed for the cluster's combined-relation
-    * read path (PoolCluster builds one flat scan over every pool's
-    * shard directories). */
-  private[server] def dir: String = storeDir
-
   /** Physical shard granularity of this server's Ingest store; also
     * drives the shards view / drop shards mapping via EngineEnv.
     * Numeric and log (string) series keep separate durations like the
@@ -138,115 +133,87 @@ final class ApiCore(spark: SparkSession, storeDir: String,
   private val ExpireIntervalMs = 30000L
   private val lastExpireMs = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** Typed frames over the Ingest store, cached per store generation:
-    * building a frame lists parquet files (not free at scale, and it
-    * freezes the file set), so the cache is invalidated exactly when
-    * the store mutates (inserts here, drop shards in the planner). */
-  @volatile private var framesCache: (Long, Frames) = null
-
-  /** Shard metadata listed once per store generation, not per `list
-    * shards` query — the listing is O(#shards) driver filesystem work
-    * the reference pays only on shard open (shard.c keeps headers in
-    * memory), so repeated metadata queries must not re-walk the store. */
-  @volatile private var shardsCache: (Long, DataFrame) = null
-
-  private def shardsMetaCached(): DataFrame = {
-    val gen = meta.storeGeneration.get()
-    val c = shardsCache
-    if (c != null && c._1 == gen) c._2
-    else {
-      val built = Ingest.shardsMeta(spark, storeDir, shardDuration, durationLog)
+  /** Everything a query reads from the store, each part built at most
+    * once per store generation and only when first asked for: resolving
+    * a parquet relation lists files and runs a schema-inference job
+    * (not free at scale, and it freezes the file set), so the view is
+    * replaced exactly when the store mutates (inserts here, drop shards
+    * in the planner, another process's mutation via [[syncWithStore]]).
+    * Ranged and unranged frames share one points relation and one
+    * catalog, so a ranged select re-lists and re-reads nothing. */
+  private final class StoreView(val gen: Long) {
+    /** The `points/` relation with its partition columns kept (None for
+      * an empty store); ranged reads filter the `shard` column, so
+      * out-of-range shard directories are pruned. */
+    lazy val base: Option[DataFrame] = Ingest.rangedBase(spark, storeDir)
+    lazy val catalog: DataFrame = Ingest.catalog(spark, storeDir)
+    lazy val frames: Frames = ranged(None, None)
+    /** Shard metadata, listed once per generation rather than per `list
+      * shards` query: the listing is O(#shards) driver filesystem work
+      * the reference pays only on shard open (shard.c keeps headers in
+      * memory). */
+    lazy val shards: DataFrame =
+      Ingest.shardsMeta(spark, storeDir, shardDuration, durationLog)
         .localCheckpoint(eager = true)
-      shardsCache = (gen, built)
-      built
-    }
-  }
-
-  /** Typed family frames over an arbitrary point source. */
-  private def typedFrames(pts: DataFrame): Frames = {
-    val cat = Ingest.catalog(spark, storeDir)
-    val typed = pts.join(cat.select(col("series"), col("type")), Seq("series"))
-    val f = typed.where(col("type") === "float")
-      .select(col("series"), col("ts"), col("val"), col("pid"))
-    // integer series read the exact int64 column (values past 2^53
-    // never pass through a double)
-    val i = typed.where(col("type") === "integer")
-      .select(col("series"), col("ts"), col("val_int").as("val"), col("pid"))
-    val s = typed.where(col("type") === "string")
-      .select(col("series"), col("ts"), col("val_str").as("val"), col("pid"))
-    val m = typed.select(col("series"), col("ts"), col("val"), col("pid"))
-    Frames(f, i, s, m, cat)
-  }
-
-  private def frames(): Frames = {
-    val gen = meta.storeGeneration.get()
-    val c = framesCache
-    if (c != null && c._1 == gen) c._2
-    else {
-      val built = typedFrames(Ingest.points(spark, storeDir))
-      framesCache = (gen, built)
-      built
-    }
-  }
-
-  /** Standing-rollup discovery: a store-owned rollup (a
-    * Rollup.fromPoints backfill under `<storeDir>/rollup/<bucket>`,
-    * kept exact by Ingest's maintenance hooks on every insert / expiry
-    * / shard drop / re-index) lets eligible coarse selects answer from
-    * pre-aggregates instead of raw points (the Planner's rollup read
-    * path). Live streaming-sink dirs (Rollup.startBucketed,
-    * `_spark_metadata` present) are skipped: their watermark drops
-    * late points the raw store accepts, so they cannot answer exactly
-    * (Ingest.rollupDirs). Re-resolved per store generation like the
-    * frames — the parquet file listing must not freeze across
-    * mutations. */
-  @volatile private var rollupCache: (Long, Option[(Long, DataFrame)]) = null
-
-  private[server] def rollupView(): Option[(Long, DataFrame)] = {
-    val gen = meta.storeGeneration.get()
-    val c = rollupCache
-    if (c != null && c._1 == gen) c._2
-    else {
-      val found = Ingest.rollupDirs(spark, storeDir)
+    /** Standing-rollup discovery: a store-owned rollup (a
+      * Rollup.fromPoints backfill under `<storeDir>/rollup/<bucket>`,
+      * kept exact by Ingest's maintenance hooks on every insert / expiry
+      * / shard drop / re-index) lets eligible coarse selects answer from
+      * pre-aggregates instead of raw points (the Planner's rollup read
+      * path). Live streaming-sink dirs (Rollup.startBucketed,
+      * `_spark_metadata` present) are skipped: their watermark drops
+      * late points the raw store accepts, so they cannot answer exactly
+      * (Ingest.rollupDirs). */
+    lazy val rollup: Option[(Long, DataFrame)] =
+      Ingest.rollupDirs(spark, storeDir)
         .headOption // finest rollup wins: most selects divide it
         .map { case (r, p) => (r, spark.read.parquet(p.toString)) }
-      rollupCache = (gen, found)
-      found
+
+    /** Typed family frames over the points in [after, before). */
+    def ranged(after: Option[Long], before: Option[Long]): Frames = {
+      val pts = Ingest.pointsRangeOver(spark, storeDir, base, after, before,
+        shardDuration, durationLog)
+      val typed = pts.join(catalog.select(col("series"), col("type")), Seq("series"))
+      val f = typed.where(col("type") === "float")
+        .select(col("series"), col("ts"), col("val"), col("pid"))
+      // integer series read the exact int64 column (values past 2^53
+      // never pass through a double)
+      val i = typed.where(col("type") === "integer")
+        .select(col("series"), col("ts"), col("val_int").as("val"), col("pid"))
+      val s = typed.where(col("type") === "string")
+        .select(col("series"), col("ts"), col("val_str").as("val"), col("pid"))
+      val m = typed.select(col("series"), col("ts"), col("val"), col("pid"))
+      Frames(f, i, s, m, catalog)
     }
   }
 
-  /** Raw ranged-read relation (partition columns kept), resolved once
-    * per store generation: without this every `between`/`after`
-    * select re-lists the shard directories and re-reads footers at
-    * PLAN time — a per-query driver cost that doubles in a cluster
-    * (one listing per pool per query). */
-  @volatile private var rangedBaseCache: (Long, Option[DataFrame]) = null
+  @volatile private var storeView: StoreView = null
 
-  private def rangedBase(): Option[DataFrame] = {
+  private def view(): StoreView = {
     val gen = meta.storeGeneration.get()
-    val c = rangedBaseCache
-    if (c != null && c._1 == gen) c._2
+    val v = storeView
+    if (v != null && v.gen == gen) v
     else {
-      val b = Ingest.rangedBase(spark, storeDir)
-      rangedBaseCache = (gen, b)
-      b
+      val built = new StoreView(gen)
+      storeView = built
+      built
     }
   }
 
-  private[graft] def env(user: String): EngineEnv =
+  private[graft] def env(user: String): EngineEnv = {
+    val v = view()
     EngineEnv(spark, storeDir,
-      frames = Some(frames()), meta = meta,
+      frames = Some(v.frames), meta = meta,
       user = Some(user), shardDuration = shardDuration,
       durationLog = durationLog, factor = factor,
       // time-ranged selects prune whole shard directories
       // (Ingest.pointsRangeOver translates ts bounds onto the shard
-      // partition column; the base relation is generation-cached)
-      rangedFrames = Some((a, b) => typedFrames(
-        Ingest.pointsRangeOver(spark, storeDir, rangedBase(), a, b,
-          shardDuration, durationLog))),
+      // partition column of the view's points relation)
+      rangedFrames = Some(v.ranged),
       // list/count shards answers from shard-file metadata, not points
-      shardsView = Some(() => shardsMetaCached()),
-      rollup = rollupView())
+      shardsView = Some(() => v.shards),
+      rollup = v.rollup)
+  }
 
   /** Run one query; select results use the reference's
     * {series: [[ts,val],...]} encoding with output timestamps scaled
@@ -262,8 +229,8 @@ final class ApiCore(spark: SparkSession, storeDir: String,
   /** Multi-process coherence: another server process over this store
     * advances `meta/generation` on every mutation; when the on-disk
     * generation is ahead of ours, re-load the metastore (their DDL)
-    * and adopt it (their inserts — every store-derived cache keys on
-    * the generation, so frames/shards/rollup views rebuild lazily).
+    * and adopt it (their inserts — the store view keys on the
+    * generation, so its frames/shards/rollup rebuild lazily).
     * One small-file read per request; a standalone store (no second
     * process) pays nothing else. The generation lives at the META
     * HOME: for a cluster that is pool 0, so ONE file versions every
@@ -361,15 +328,9 @@ final class ApiCore(spark: SparkSession, storeDir: String,
     }
     stmt match {
       case TimeitStmt(_) =>
-        val timeit = mapper.createArrayNode()
-        val entry = mapper.createObjectNode()
-        entry.put("server", "local")
-        entry.put("time", (System.nanoTime() - t0) / 1e9)
-        timeit.add(entry)
-        node.asInstanceOf[ObjectNode].set[JsonNode]("__timeit__", timeit)
-      case _ => ()
+        ApiCore.timeit(node, Seq("local" -> (System.nanoTime() - t0) / 1e9))
+      case _ => node
     }
-    node
   }
 
   /** {series: [[ts,val],...], ...}, points sorted by ts then insertion
@@ -499,11 +460,6 @@ final class ApiCore(spark: SparkSession, storeDir: String,
     resolve("duration_log", isLog = true)
   }
 
-  /** Structural `drop shards` for the cluster fan-out (PoolCluster):
-    * same access check, metastore persistence and expire-gate reset as
-    * the query path, but the dropped count returns TYPED — the cluster
-    * re-sums per-pool counts and renders the reference message once,
-    * instead of regex-scraping its own success strings. */
   /** (matching, total) shard counts for `stmt`'s cexpr, counting only —
     * the cluster's drop-threshold guard sums these across every pool
     * (including an unpublished expansion target) before any deletes. */
@@ -511,6 +467,11 @@ final class ApiCore(spark: SparkSession, storeDir: String,
       user: String): (Long, Long) =
     Planner.matchShardsCount(stmt.where, env(user))
 
+  /** Structural `drop shards` for the cluster fan-out (PoolCluster):
+    * same access check, metastore persistence and expire-gate reset as
+    * the query path, but the dropped count returns TYPED — the cluster
+    * re-sums per-pool counts and renders the reference message once,
+    * instead of regex-scraping its own success strings. */
   private[server] def dropShardsCount(stmt: graft.parser.DropShards,
       user: String): Long =
     try {
@@ -675,5 +636,21 @@ final class ApiCore(spark: SparkSession, storeDir: String,
     }
     maybeOptimize()
     meta.bumpGeneration(spark, metaHome)
+  }
+}
+
+object ApiCore {
+  /** Adds the `__timeit__` array — one {server, time} entry per
+    * (server, seconds) row — to a query reply (listener.c:5026-5064). */
+  private[server] def timeit(node: JsonNode, rows: Seq[(String, Double)]): JsonNode = {
+    node match {
+      case on: ObjectNode =>
+        val arr = on.putArray("__timeit__")
+        rows.foreach { case (server, s) =>
+          arr.addObject().put("server", server).put("time", s)
+        }
+      case _ => ()
+    }
+    node
   }
 }

@@ -169,4 +169,27 @@ private[graft] object Cproto {
       case _: EOFException | _: IOException => () // client went away
     }
   }
+
+  /** The accept loop both listeners share (TCP and unix socket): a
+    * daemon thread named `name` accepts connections while `running()`
+    * holds and serves each one on a daemon thread of its own. Closing
+    * the listener makes `accept` throw, which ends the loop once
+    * `running()` is false. */
+  def acceptLoop[C](name: String, running: () => Boolean, accept: () => C)(
+      serve: C => Unit): Unit = {
+    val acceptor = new Thread(() => {
+      while (running()) {
+        try {
+          val conn = accept()
+          val t = new Thread(() => serve(conn))
+          t.setDaemon(true)
+          t.start()
+        } catch {
+          case _: IOException => () // listener closed on stop()
+        }
+      }
+    }, name)
+    acceptor.setDaemon(true)
+    acceptor.start()
+  }
 }

@@ -1,6 +1,5 @@
 package graft.server
 
-import java.io.IOException
 import java.net.{StandardProtocolFamily, UnixDomainSocketAddress}
 import java.nio.channels.{Channels, ServerSocketChannel, SocketChannel}
 import java.nio.file.{Files, Path}
@@ -34,21 +33,7 @@ final class PipeApi(spark: SparkSession, storeDir: String, pipePath: String,
     server = ServerSocketChannel.open(StandardProtocolFamily.UNIX)
     server.bind(address)
     running = true
-    val acceptor = new Thread(() => {
-      while (running) {
-        try {
-          val ch = server.accept()
-          val t = new Thread(() => serve(ch))
-          t.setDaemon(true)
-          t.start()
-        } catch {
-          case _: IOException => () // channel closed on stop()
-          case _: java.nio.channels.ClosedChannelException => ()
-        }
-      }
-    }, "graft-pipe-accept")
-    acceptor.setDaemon(true)
-    acceptor.start()
+    Cproto.acceptLoop("graft-pipe-accept", () => running, () => server.accept())(serve)
     pipePath
   }
 

@@ -431,12 +431,9 @@ final class PoolCluster(spark: org.apache.spark.sql.SparkSession,
           s"Successfully dropped $total shards. (this number does not include replica shards)")
         stmt match {
           case graft.parser.TimeitStmt(_) =>
-            val entry = out.putArray("__timeit__").addObject()
-            entry.put("server", "local")
-            entry.put("time", (System.nanoTime() - t0) / 1e9)
-          case _ => ()
+            ApiCore.timeit(out, Seq("local" -> (System.nanoTime() - t0) / 1e9))
+          case _ => out
         }
-        out
       case _: graft.parser.AlterDatabase =>
         val out = pools(0).runQuery(q, tsFactor, user)
         // config is cluster-shared, so a new expiration must take
@@ -459,31 +456,15 @@ final class PoolCluster(spark: org.apache.spark.sql.SparkSession,
         val poolTimes = pools.indices.map { k =>
           val p0 = System.nanoTime()
           pools(k).env(user)
-          (k, (System.nanoTime() - p0) / 1e9)
+          s"pool$k" -> (System.nanoTime() - p0) / 1e9
         }
         val out = pools(0).runQueryIn(mergedEnv(user), q, tsFactor)
-        out match {
-          case on: com.fasterxml.jackson.databind.node.ObjectNode =>
-            val arr = on.putArray("__timeit__")
-            poolTimes.foreach { case (k, s) =>
-              val e = arr.addObject()
-              e.put("server", s"pool$k"); e.put("time", s)
-            }
-            val m = arr.addObject()
-            m.put("server", "master")
-            m.put("time", (System.nanoTime() - t0) / 1e9)
-          case _ => ()
-        }
-        out
+        ApiCore.timeit(out,
+          poolTimes :+ ("master" -> (System.nanoTime() - t0) / 1e9))
       case _ =>
         pools(0).runQueryIn(mergedEnv(user), q, tsFactor)
     }
   }
-
-  private def mergedCat(cats: Seq[DataFrame]): DataFrame =
-    cats.zipWithIndex
-      .map { case (c, k) => c.withColumn("pool", lit(k.toLong)) }
-      .reduce(_ unionByName _)
 
   private def mergedFrames(fs: Seq[Frames]): Frames =
     Frames(
@@ -491,94 +472,22 @@ final class PoolCluster(spark: org.apache.spark.sql.SparkSession,
       fs.map(_.i).reduce(_ unionByName _),
       fs.map(_.s).reduce(_ unionByName _),
       fs.map(_.m).reduce(_ unionByName _),
-      mergedCat(fs.map(_.cat)))
+      // the pool column is the real owning store (list pools, where pool == k)
+      fs.zipWithIndex
+        .map { case (fr, k) => fr.cat.withColumn("pool", lit(k.toLong)) }
+        .reduce(_ unionByName _))
 
   private def filterFrames(fr: Frames,
       keep: org.apache.spark.sql.Column): Frames =
     Frames(fr.f.where(keep), fr.i.where(keep), fr.s.where(keep),
       fr.m.where(keep), fr.cat.where(keep))
 
-  /** Steady-state cluster read: ONE flat parquet relation over every
-    * pool's shard directories, instead of an N-way `unionByName` of
-    * per-pool relations. Spark refuses a single partition-discovered
-    * relation across N roots (CONFLICTING_DIRECTORY_STRUCTURES), so
-    * the shard pruning moves into the driver: the per-generation
-    * shard-directory listing across all pools is pruned by the same
-    * bounds `Ingest.pointsRangeOver` pushes onto the partition
-    * columns, and the surviving leaf directories feed one
-    * `spark.read.schema(...).parquet(dirs: _*)` — the schema is
-    * provided so no footer is opened for inference, and the ts
-    * predicates still push into the row groups. The result is a plan
-    * whose analysis cost and scan-stage count do NOT grow with pool
-    * count: executors see one file list, exactly as they would for a
-    * standalone store holding the union (probe: the union plan made a
-    * 2-pool ranged select ~2.2× the standalone at sf0.1 — ~0.28 s
-    * extra plan + a second scan; this path removes both terms).
-    * Cached per (store generation, pool set); ranged variants memoized
-    * per bounds so a repeated dashboard window re-lists nothing. The
-    * expansion window (masked sources) keeps the union path — the
-    * slot mask is per-pool there, and correctness owns that phase. */
-  @volatile private var flatCache: (Long, Vector[String],
-    Seq[(String, Long, String)], Frames) = null
-  private val rangedMemo = new java.util.concurrent.ConcurrentHashMap[
-    (Long, Option[Long], Option[Long]), Frames]()
-
-  private def emptyPoints: DataFrame = spark.sql(
-    "SELECT '' AS series, 0L AS ts, 0D AS val, 0L AS val_int, " +
-      "'' AS val_str, 0L AS pid").limit(0)
-
-  private def flatRead(paths: Seq[String]): DataFrame =
-    if (paths.isEmpty) emptyPoints
-    else spark.read.schema(PoolCluster.pointSchema).parquet(paths: _*)
-      .select(col("series"), col("ts"), col("val"), col("val_int"),
-        col("val_str"), col("pid"))
-
-  private def typedOver(pts: DataFrame, cat: DataFrame): Frames = {
-    val typed = pts.join(cat.select(col("series"), col("type")), Seq("series"))
-    Frames(
-      typed.where(col("type") === "float")
-        .select(col("series"), col("ts"), col("val"), col("pid")),
-      typed.where(col("type") === "integer")
-        .select(col("series"), col("ts"), col("val_int").as("val"), col("pid")),
-      typed.where(col("type") === "string")
-        .select(col("series"), col("ts"), col("val_str").as("val"), col("pid")),
-      typed.select(col("series"), col("ts"), col("val"), col("pid")),
-      cat)
-  }
-
-  private def flatState(viewPools: Vector[ApiCore], envs: Vector[EngineEnv])
-      : (Long, Seq[(String, Long, String)], Frames) = {
-    val gen = meta.storeGeneration.get()
-    val dirs = viewPools.map(_.dir)
-    val c = flatCache
-    if (c != null && c._1 == gen && c._2 == dirs) (c._1, c._3, c._4)
-    else {
-      val listed = viewPools.flatMap(p =>
-        Ingest.shardDirs(spark, p.dir).map { case (g, sid, path) =>
-          (g, sid, path.toString) })
-      // per-pool cats are ApiCore-generation-cached; the merged view
-      // keeps the pool column (catalog queries attribute by store)
-      val all = typedOver(flatRead(listed.map(_._3)),
-        mergedCat(envs.map(_.frames.get.cat)))
-      rangedMemo.clear()
-      flatCache = (gen, dirs, listed, all)
-      (gen, listed, all)
-    }
-  }
-
-  private def flatRanged(listed: Seq[(String, Long, String)], cat: DataFrame,
-      a: Option[Long], b: Option[Long]): Frames = {
-    val sd = pools(0).shardDuration
-    val dl = pools(0).durationLog // cluster-wide agreement (autoDuration)
-    val keep = listed.filter { case (g, sid, _) =>
-      val dur = if (g == "log") dl else sd
-      a.forall(x => sid >= x / dur) && b.forall(x => sid <= x / dur)
-    }
-    val raw = flatRead(keep.map(_._3))
-    val flt = Seq(a.map(x => col("ts") >= x), b.map(x => col("ts") < x)).flatten
-    typedOver(flt.foldLeft(raw)(_ where _), cat)
-  }
-
+  /** One merged env over every pool: each pool contributes the frames
+    * its own [[ApiCore.env]] serves — built at most once per store
+    * generation, ranged reads pruned to the pool's in-range shard
+    * directories — and the cluster only unions them, like the
+    * reference merges per-pool answers (query.c:263-394). Outside an
+    * expansion hand-over the mask is a no-op. */
   private[graft] def mergedEnv(user: String): EngineEnv = {
     val (viewPools, excluded) = queryView
     val envs = viewPools.map(_.env(user))
@@ -594,32 +503,17 @@ final class PoolCluster(spark: org.apache.spark.sql.SparkSession,
       case Some(k) => fs.zipWithIndex.map { case (fr, i) =>
         if (i == fs.size - 1) fr else filterFrames(fr, k) } // target last
     }
-    val e0 = envs.head
-    val base = e0.copy(
+    envs.head.copy(
       dir = baseDir, // distinct select-memo identity from any one pool
+      frames = Some(mergedFrames(masked(envs.map(_.frames.get)))),
+      rangedFrames = Some((a, b) =>
+        mergedFrames(masked(envs.map(_.rangedFrames.get(a, b))))),
       shardsView = Some(() => envs.zipWithIndex
         .map { case (e, k) =>
           e.shardsView.get().withColumn("pool", lit(k.toLong)) }
         .reduce(_ unionByName _)),
       fleet = fleet,
-      rollup = mergedRollup(viewPools))
-    if (excluded.isEmpty) {
-      // the memo key carries the generation the LISTING was built at
-      // (not a re-read at call time): a mutation landing between env
-      // build and the ranged call must not file this snapshot's
-      // frames under the new generation's key
-      val (gen, listed, all) = flatState(viewPools, envs)
-      base.copy(
-        frames = Some(all),
-        rangedFrames = Some((a, b) => {
-          if (rangedMemo.size > 64) rangedMemo.clear()
-          rangedMemo.computeIfAbsent((gen, a, b),
-            _ => flatRanged(listed, all.cat, a, b))
-        }))
-    } else base.copy(
-      frames = Some(mergedFrames(masked(envs.map(_.frames.get)))),
-      rangedFrames = Some((a, b) =>
-        mergedFrames(masked(envs.map(_.rangedFrames.get(a, b))))))
+      rollup = mergedRollup(envs.map(_.rollup)))
   }
 
   /** Cluster rollup view: the union of every pool's store-owned rollup
@@ -635,9 +529,8 @@ final class PoolCluster(spark: org.apache.spark.sql.SparkSession,
     * carry moved rows; [[expand]] phase 4b backfills the target
     * (after the sweeps prune the sources) so the view re-enables
     * before UNMASK. */
-  private def mergedRollup(viewPools: Vector[ApiCore])
+  private def mergedRollup(views: Vector[Option[(Long, DataFrame)]])
       : Option[(Long, DataFrame)] = {
-    val views = viewPools.map(_.rollupView())
     if (views.isEmpty || views.exists(_.isEmpty)) None
     else {
       def gcd(a: Long, b: Long): Long = if (b == 0) a else gcd(b, a % b)
@@ -720,9 +613,7 @@ final class PoolCluster(spark: org.apache.spark.sql.SparkSession,
       afterSwitch: () => Unit = () => ()): Int = synchronized {
     val newIdx = pools.size
     val newLookup = Lookup(newIdx + 1)
-    val target = new ApiCore(spark, dirOf(newIdx), dbName,
-      autoDuration = autoDuration, sharedMeta = Some(meta),
-      timePrecision = timePrecision, metaDirOpt = Some(dirOf(0)))
+    val target = newPoolServer(newIdx)
     val movedSlots = (0 until Lookup.Size)
       .filter(s => newLookup.slots(s) == newIdx).toSet
     import spark.implicits._
@@ -864,18 +755,5 @@ final class PoolCluster(spark: org.apache.spark.sql.SparkSession,
       meta.persistTo(spark, dirOf(0))
       meta.bumpGeneration(spark, dirOf(0))
     }
-  }
-}
-
-object PoolCluster {
-  /** Data columns of a shard parquet file (sgroup/shard are directory
-    * names, not file columns) — provided to the flat multi-directory
-    * read so schema inference never opens a footer. */
-  private[server] val pointSchema: org.apache.spark.sql.types.StructType = {
-    import org.apache.spark.sql.types._
-    StructType(Seq(
-      StructField("series", StringType), StructField("ts", LongType),
-      StructField("val", DoubleType), StructField("val_int", LongType),
-      StructField("val_str", StringType), StructField("pid", LongType)))
   }
 }

@@ -1,6 +1,5 @@
 package graft.server
 
-import java.io.IOException
 import java.net.{InetAddress, ServerSocket, Socket}
 
 import org.apache.spark.sql.SparkSession
@@ -25,20 +24,7 @@ final class TcpApi(spark: SparkSession, storeDir: String, port: Int = 0,
 
   def start(): Int = {
     running = true
-    val acceptor = new Thread(() => {
-      while (running) {
-        try {
-          val sock = server.accept()
-          val t = new Thread(() => serve(sock))
-          t.setDaemon(true)
-          t.start()
-        } catch {
-          case _: IOException => () // socket closed on stop()
-        }
-      }
-    }, "graft-tcp-accept")
-    acceptor.setDaemon(true)
-    acceptor.start()
+    Cproto.acceptLoop("graft-tcp-accept", () => running, () => server.accept())(serve)
     server.getLocalPort
   }
 

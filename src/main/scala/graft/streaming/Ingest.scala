@@ -611,7 +611,8 @@ object Ingest {
     * to [[pointsRangeOver]]: `spark.read.parquet` lists the shard
     * directories and reads footers eagerly, so re-resolving it on
     * every query turns file listing into a per-query cost
-    * (ApiCore caches it exactly like the unranged frames). */
+    * (ApiCore's store view resolves it once per generation and reads
+    * its ranged and unranged frames through it). */
   def rangedBase(spark: SparkSession, storeDir: String): Option[DataFrame] =
     if (!existsNonEmpty(spark, pointsPath(storeDir))) None
     else Some(spark.read.parquet(pointsPath(storeDir)))

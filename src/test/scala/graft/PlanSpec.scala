@@ -52,27 +52,44 @@ class PlanSpec extends AnyFunSuite {
     // plan-time type dispatch and encode-time output names both come
     // from ONE memoized (series, type) collect — a second catalog job
     // per select was pure overhead the reference never pays
+    val sc = spark.sparkContext
+    def catalogJobs(env: EngineEnv, q: String): Int = {
+      val group = s"one-catalog-job-${System.nanoTime()}"
+      sc.setJobGroup(group, "catalog jobs for one select")
+      try {
+        val stmt = graft.parser.QueryParser.parse(q, 1706000000L)
+          .asInstanceOf[graft.parser.SelectStmt]
+        Planner.run(stmt, env)            // plan: type dispatch
+        Planner.selectNames(stmt, env)    // encode: output names
+      } finally sc.clearJobGroup()
+      // the status store is fed asynchronously — wait for it to settle
+      def jobs() = sc.statusTracker.getJobIdsForGroup(group).length
+      val deadline = System.currentTimeMillis() + 5000
+      while (jobs() < 1 && System.currentTimeMillis() < deadline) Thread.sleep(50)
+      Thread.sleep(300) // catch a late-arriving second job
+      Planner.drainQueryCaches()
+      jobs()
+    }
     val env = EngineEnv(spark, dir)
     // warm the persisted catalog + parquet footers outside the count
     Planner.query("select count() from /^f\\..*/", env).collect()
     Planner.drainQueryCaches()
-    val sc = spark.sparkContext
-    val group = s"one-catalog-job-${System.nanoTime()}"
-    sc.setJobGroup(group, "catalog jobs for one select")
-    try {
-      val stmt = graft.parser.QueryParser
-        .parse("select sum(3600) from /^f\\..*/", 1706000000L)
-        .asInstanceOf[graft.parser.SelectStmt]
-      Planner.run(stmt, env)            // plan: type dispatch
-      Planner.selectNames(stmt, env)    // encode: output names
-    } finally sc.clearJobGroup()
-    // the status store is fed asynchronously — wait for it to settle
-    def jobs() = sc.statusTracker.getJobIdsForGroup(group).length
-    val deadline = System.currentTimeMillis() + 5000
-    while (jobs() < 1 && System.currentTimeMillis() < deadline) Thread.sleep(50)
-    Thread.sleep(300) // catch a late-arriving second job
-    assert(jobs() === 1, "plan+names must share one catalog collect")
+    assert(catalogJobs(env, "select sum(3600) from /^f\\..*/") === 1,
+      "plan+names must share one catalog collect")
+    // a server's ranged select: the shard-pruned frames reuse the
+    // store view's catalog instead of re-reading catalog.parquet
+    import spark.implicits._
+    val store = java.nio.file.Files.createTempDirectory("graft-one-cat").toString
+    graft.streaming.Ingest.appendBatch((0 until 40).map(i =>
+      graft.streaming.Ingest.PointIn(s"f.s${i % 4}", i * 20000L, i.toDouble,
+        "float", i.toLong)).toDF(), store, shardDuration = 86400L)
+    val apiEnv = new graft.server.ApiCore(spark, store).env("iris")
+    Planner.query("select sum(3600) from /^f\\..*/ between 0 and 90000",
+      apiEnv).collect()
     Planner.drainQueryCaches()
+    assert(catalogJobs(apiEnv,
+      "select sum(3600) from /^f\\..*/ between 100000 and 500000") === 1,
+      "a ranged select must not re-read the catalog")
   }
 
   test("ANN top-k has no global per-query sort of the scored corpus") {

@@ -784,4 +784,47 @@ class PoolSpec extends AnyFunSuite {
       .remove("__timeit__")
     assert(res.toString === plain.toString)
   }
+
+  test("a cluster ranged select reads only in-range shards of every pool — series.c:927-938") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    val cbase = Files.createTempDirectory("graft-cluster-prune").toString
+    val sbase = Files.createTempDirectory("graft-single-prune").toString
+    val cluster = new PoolCluster(spark, cbase, initialPools = 2)
+    val single = new ApiCore(spark, sbase)
+    // one point per day for five days: five day-shards per pool
+    val body = mapper.readTree(names.map { n =>
+      (0 until 5).map(d => s"[${1700000000L + d * 86400L}, ${d + n.length}]")
+        .mkString(s""""$n": [""", ",", "]")
+    }.mkString("{", ",", "}"))
+    cluster.runInsert(body, "iris")
+    single.runInsert(body, "iris")
+    // 1700150000 / 86400 = 1700175000 / 86400 = shard 19677 (day 2)
+    val q = "select * from /^metric\\.cpu\\..*/ between 1700150000 and 1700175000"
+    // the point files the plan's scans select after partition pruning
+    // (Dataset.inputFiles lists a path-read relation whole)
+    def pointFiles(): Seq[String] =
+      graft.parser.Planner.query(q, cluster.mergedEnv("iris"))
+        .queryExecution.sparkPlan.collect { case s: FileSourceScanExec =>
+          s.relation.location.listFiles(s.partitionFilters, s.dataFilters)
+            .flatMap(_.files.map(_.getPath.toString))
+        }.flatten.filter(_.contains("/points/"))
+    def check(pools: Int): Unit = {
+      val files = pointFiles()
+      assert(files.nonEmpty)
+      assert(files.forall(_.contains("/shard=19677/")), files)
+      (0 until pools).foreach(k =>
+        assert(files.exists(_.contains(s"/pool$k/")), s"pool $k unread: $files"))
+      val answer = cluster.runQuery(q, 1L, "iris")
+      assert(answer.toString === single.runQuery(q, 1L, "iris").toString)
+      assert(names.map(answer.get(_).size()).sum === names.size) // a point each
+    }
+    check(pools = 2) // steady state
+    var switched = false
+    cluster.expandPhased(afterSwitch = () => {
+      switched = true
+      check(pools = 3) // target published, sources masked
+    })
+    assert(switched)
+    check(pools = 3)
+  }
 }
