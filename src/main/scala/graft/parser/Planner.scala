@@ -17,9 +17,16 @@ import graft.engine.SeriesMatch.{All, Env, Name, Sel, Regex => SelRegex}
   */
 /** Typed point frames + catalog backing a query session; defaults to
   * the driver's events-derived families, overridable (e.g. with an
-  * Ingest store — see graft.server.HttpApi). */
-final case class Frames(
-    f: DataFrame, i: DataFrame, s: DataFrame, m: DataFrame, cat: DataFrame)
+  * Ingest store — see graft.server.HttpApi). Each family frame is built
+  * on first use: constructing a DataFrame analyses its plan, and most
+  * selects read one family of a store served fresh per query. */
+final class Frames(f0: => DataFrame, i0: => DataFrame, s0: => DataFrame,
+    m0: => DataFrame, val cat: DataFrame) {
+  lazy val f: DataFrame = f0
+  lazy val i: DataFrame = i0
+  lazy val s: DataFrame = s0
+  lazy val m: DataFrame = m0
+}
 
 final case class EngineEnv(
     spark: SparkSession,

@@ -141,7 +141,7 @@ final class ApiCore(spark: SparkSession, storeDir: String,
     * in the planner, another process's mutation via [[syncWithStore]]).
     * Ranged and unranged frames share one points relation and one
     * catalog, so a ranged select re-lists and re-reads nothing. */
-  private final class StoreView(val gen: Long) {
+  private[server] final class StoreView(val gen: Long) {
     /** The `points/` relation with its partition columns kept (None for
       * an empty store); ranged reads filter the `shard` column, so
       * out-of-range shard directories are pruned. */
@@ -169,27 +169,20 @@ final class ApiCore(spark: SparkSession, storeDir: String,
         .headOption // finest rollup wins: most selects divide it
         .map { case (r, p) => (r, spark.read.parquet(p.toString)) }
 
-    /** Typed family frames over the points in [after, before). */
-    def ranged(after: Option[Long], before: Option[Long]): Frames = {
-      val pts = Ingest.pointsRangeOver(spark, storeDir, base, after, before,
+    /** The raw points in [after, before), pruned to the in-range
+      * shard directories. */
+    def points(after: Option[Long], before: Option[Long]): DataFrame =
+      Ingest.pointsRangeOver(spark, storeDir, base, after, before,
         shardDuration, durationLog)
-      val typed = pts.join(catalog.select(col("series"), col("type")), Seq("series"))
-      val f = typed.where(col("type") === "float")
-        .select(col("series"), col("ts"), col("val"), col("pid"))
-      // integer series read the exact int64 column (values past 2^53
-      // never pass through a double)
-      val i = typed.where(col("type") === "integer")
-        .select(col("series"), col("ts"), col("val_int").as("val"), col("pid"))
-      val s = typed.where(col("type") === "string")
-        .select(col("series"), col("ts"), col("val_str").as("val"), col("pid"))
-      val m = typed.select(col("series"), col("ts"), col("val"), col("pid"))
-      Frames(f, i, s, m, catalog)
-    }
+
+    /** Typed family frames over the points in [after, before). */
+    def ranged(after: Option[Long], before: Option[Long]): Frames =
+      ApiCore.typedFrames(points(after, before), catalog)
   }
 
   @volatile private var storeView: StoreView = null
 
-  private def view(): StoreView = {
+  private[server] def view(): StoreView = {
     val gen = meta.storeGeneration.get()
     val v = storeView
     if (v != null && v.gen == gen) v
@@ -640,6 +633,26 @@ final class ApiCore(spark: SparkSession, storeDir: String,
 }
 
 object ApiCore {
+  /** The typed family split: raw points joined with their catalog's
+    * series types, one frame per value family plus the numeric mixed
+    * view. A standalone store splits its own points; a cluster splits
+    * the union of its pools' points once, against the merged catalog.
+    * Nothing but the catalog is built until a family is first read. */
+  private[server] def typedFrames(pts: => DataFrame, cat: DataFrame): Frames = {
+    lazy val typed = pts.join(cat.select(col("series"), col("type")), Seq("series"))
+    new Frames(
+      typed.where(col("type") === "float")
+        .select(col("series"), col("ts"), col("val"), col("pid")),
+      // integer series read the exact int64 column (values past 2^53
+      // never pass through a double)
+      typed.where(col("type") === "integer")
+        .select(col("series"), col("ts"), col("val_int").as("val"), col("pid")),
+      typed.where(col("type") === "string")
+        .select(col("series"), col("ts"), col("val_str").as("val"), col("pid")),
+      typed.select(col("series"), col("ts"), col("val"), col("pid")),
+      cat)
+  }
+
   /** Adds the `__timeit__` array — one {server, time} entry per
     * (server, seconds) row — to a query reply (listener.c:5026-5064). */
   private[server] def timeit(node: JsonNode, rows: Seq[(String, Double)]): JsonNode = {

@@ -466,31 +466,17 @@ final class PoolCluster(spark: org.apache.spark.sql.SparkSession,
     }
   }
 
-  private def mergedFrames(fs: Seq[Frames]): Frames =
-    Frames(
-      fs.map(_.f).reduce(_ unionByName _),
-      fs.map(_.i).reduce(_ unionByName _),
-      fs.map(_.s).reduce(_ unionByName _),
-      fs.map(_.m).reduce(_ unionByName _),
-      // the pool column is the real owning store (list pools, where pool == k)
-      fs.zipWithIndex
-        .map { case (fr, k) => fr.cat.withColumn("pool", lit(k.toLong)) }
-        .reduce(_ unionByName _))
-
-  private def filterFrames(fr: Frames,
-      keep: org.apache.spark.sql.Column): Frames =
-    Frames(fr.f.where(keep), fr.i.where(keep), fr.s.where(keep),
-      fr.m.where(keep), fr.cat.where(keep))
-
-  /** One merged env over every pool: each pool contributes the frames
-    * its own [[ApiCore.env]] serves — built at most once per store
-    * generation, ranged reads pruned to the pool's in-range shard
-    * directories — and the cluster only unions them, like the
-    * reference merges per-pool answers (query.c:263-394). Outside an
-    * expansion hand-over the mask is a no-op. */
+  /** One merged env over every pool: each pool contributes what its
+    * own store view serves — the points relation resolved at most once
+    * per store generation, ranged reads pruned to the pool's in-range
+    * shard directories, and its catalog — and the cluster unions the
+    * pools' points and catalogs and applies the one typed split
+    * ([[ApiCore.typedFrames]]) to the union, like the reference merges
+    * per-pool answers (query.c:263-394). Outside an expansion
+    * hand-over the mask is a no-op. */
   private[graft] def mergedEnv(user: String): EngineEnv = {
     val (viewPools, excluded) = queryView
-    val envs = viewPools.map(_.env(user))
+    val views = viewPools.map(_.view())
     // during an expansion hand-over the source pools hide the slots
     // the published target now owns — the predicate is the same
     // executor-evaluable slot expression the re-index routes by, so
@@ -498,22 +484,25 @@ final class PoolCluster(spark: org.apache.spark.sql.SparkSession,
     val keep = excluded.map(slots =>
       !expr(Lookup.slotSql("series"))
         .isin(slots.toSeq.map(Int.box): _*))
-    def masked(fs: Seq[Frames]): Seq[Frames] = keep match {
-      case None => fs
-      case Some(k) => fs.zipWithIndex.map { case (fr, i) =>
-        if (i == fs.size - 1) fr else filterFrames(fr, k) } // target last
+    def masked(dfs: Seq[DataFrame]): Seq[DataFrame] = keep match {
+      case None => dfs
+      case Some(k) => dfs.zipWithIndex.map { case (df, i) =>
+        if (i == dfs.size - 1) df else df.where(k) } // target last
     }
-    envs.head.copy(
+    // the pool column is the real owning store (list pools, where pool == k)
+    def byPool(dfs: Seq[DataFrame]): DataFrame = dfs.zipWithIndex
+      .map { case (df, k) => df.withColumn("pool", lit(k.toLong)) }
+      .reduce(_ unionByName _)
+    val cat = byPool(masked(views.map(_.catalog)))
+    def read(a: Option[Long], b: Option[Long]): Frames = ApiCore.typedFrames(
+      masked(views.map(_.points(a, b))).reduce(_ unionByName _), cat)
+    viewPools.head.env(user).copy(
       dir = baseDir, // distinct select-memo identity from any one pool
-      frames = Some(mergedFrames(masked(envs.map(_.frames.get)))),
-      rangedFrames = Some((a, b) =>
-        mergedFrames(masked(envs.map(_.rangedFrames.get(a, b))))),
-      shardsView = Some(() => envs.zipWithIndex
-        .map { case (e, k) =>
-          e.shardsView.get().withColumn("pool", lit(k.toLong)) }
-        .reduce(_ unionByName _)),
+      frames = Some(read(None, None)),
+      rangedFrames = Some(read),
+      shardsView = Some(() => byPool(views.map(_.shards))),
       fleet = fleet,
-      rollup = mergedRollup(envs.map(_.rollup)))
+      rollup = mergedRollup(views.map(_.rollup)))
   }
 
   /** Cluster rollup view: the union of every pool's store-owned rollup

@@ -824,7 +824,8 @@ object Ingest {
   // the file set (a rewrite would corrupt reads through the log) and
   // its watermark DROPS late points the raw store accepts — it can
   // never answer a select exactly, so it is NOT store-owned and the
-  // planner must not serve it (ApiCore.rollupView skips it).
+  // planner must not serve it (ApiCore's store view, `StoreView.rollup`,
+  // skips it; a cluster merges its pools' views).
   // ------------------------------------------------------------------
 
   /** Store-owned rollup dirs as (bucketWidth, path) — streaming-sink
