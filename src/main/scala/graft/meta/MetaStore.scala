@@ -95,15 +95,32 @@ final class MetaStore {
 
   /** Dropped-series tombstones (the analog of dropped-series purge,
     * src/siri/optimize.c) as a materialized name frame — anti-joined
-    * against the catalog, so drops never put series names on the
-    * driver. `localCheckpoint` pins the point-in-time snapshot. */
-  @volatile var droppedDf: Option[org.apache.spark.sql.DataFrame] = None
+    * against the catalog, so a read never filters by a driver-side
+    * name list. `localCheckpoint` pins the point-in-time snapshot. */
+  def droppedDf: Option[org.apache.spark.sql.DataFrame] = dropped._1
+
+  /** The same names as a driver-side set, taken once per tombstone
+    * change, so an insert's resurrect check is a Set lookup: no Spark
+    * job runs on the insert path unless a name matches. Bounded by the
+    * names awaiting the next optimize purge, not by the catalog. */
+  def droppedNames: Set[String] = dropped._2
+
+  /** Frame and name set swap together (one volatile write). */
+  @volatile private var dropped: (Option[org.apache.spark.sql.DataFrame], Set[String]) =
+    (None, Set.empty)
+
+  /** Install a tombstone frame; an empty one means no tombstones. */
+  private def setDropped(d: Option[org.apache.spark.sql.DataFrame]): Unit = {
+    val names = d.fold(Set.empty[String])(_.select(col("series")).collect()
+      .iterator.map(_.getString(0)).toSet)
+    dropped = (d.filter(_ => names.nonEmpty), names)
+  }
 
   def addDropped(names: org.apache.spark.sql.DataFrame): Unit = synchronized {
     val snap = names.localCheckpoint(true)
-    droppedDf = Some(droppedDf
+    setDropped(Some(droppedDf
       .map(_.unionByName(snap).distinct().localCheckpoint(true))
-      .getOrElse(snap))
+      .getOrElse(snap)))
     droppedDirty = true
   }
 
@@ -116,10 +133,9 @@ final class MetaStore {
     * would resurrect them. */
   def removeDropped(names: org.apache.spark.sql.DataFrame): Unit = synchronized {
     droppedDf.foreach { d =>
-      val rest = d
+      setDropped(Some(d
         .join(names.select(col("series")).distinct(), Seq("series"), "left_anti")
-        .localCheckpoint(true)
-      droppedDf = if (rest.isEmpty) None else Some(rest)
+        .localCheckpoint(true)))
       droppedDirty = true
     }
   }
@@ -337,10 +353,10 @@ final class MetaStore {
     // the file's ABSENCE is state too: a writer process that lifted
     // the last tombstone deleted it, and a merge-only reload would
     // keep the stale frame hiding a re-created series
-    droppedDf =
+    setDropped(
       if (fs.exists(droppedPath))
         Some(spark.read.parquet(droppedPath.toString).localCheckpoint(true))
-      else None
+      else None)
   }
 
   def untagSeries(tag: String, names: org.apache.spark.sql.DataFrame): Long = synchronized {

@@ -135,8 +135,9 @@ final class ApiCore(spark: SparkSession, storeDir: String,
 
   /** Everything a query reads from the store, each part built at most
     * once per store generation and only when first asked for: resolving
-    * a parquet relation lists files and runs a schema-inference job
-    * (not free at scale, and it freezes the file set), so the view is
+    * a parquet relation lists files and, for the points, runs a
+    * schema-inference job (not free at scale, and it freezes the file
+    * set; the catalog declares its schema), so the view is
     * replaced exactly when the store mutates (inserts here, drop shards
     * in the planner, another process's mutation via [[syncWithStore]]).
     * Ranged and unranged frames share one points relation and one
@@ -249,10 +250,9 @@ final class ApiCore(spark: SparkSession, storeDir: String,
     * optimize thread rewrites shards on the same cadence) and
     * physically purge tombstoned series. A STANDALONE server then
     * lifts its tombstones — the hidden data is physically gone, so
-    * selects stop paying the anti-join and inserts the semi-join. A
-    * pooled server must NOT lift: tombstoned names span pools, so
-    * only the cluster layer may lift them, after every pool purged
-    * (PoolCluster.maybeOptimize). First pass no earlier than one
+    * selects stop paying the anti-join. A pooled server must NOT
+    * lift: tombstoned names span pools, so only the cluster layer may
+    * lift them, after every pool purged (PoolCluster.maybeOptimize). First pass no earlier than one
     * interval after construction, like the reference's timer. */
   private val OptimizeIntervalMs = 60000L
   private val lastOptimizeMs =
@@ -590,17 +590,15 @@ final class ApiCore(spark: SparkSession, storeDir: String,
     // tombstoned name's old points physically, then lift its
     // tombstone: untombstoning alone would resurrect the old points,
     // and tombstoning alone would keep the re-created series
-    // invisible forever. Costs nothing when no tombstones exist; one
-    // batch-bounded semi-join while they do.
-    meta.droppedDf.foreach { tomb =>
-      val incoming = rows.map(_.series).distinct.toDF("series")
-      val resurrected = tomb.join(incoming, Seq("series"), "left_semi")
-        .localCheckpoint(true)
-      if (!resurrected.isEmpty) {
-        Ingest.removeSeries(spark, storeDir, resurrected)
-        meta.removeDropped(resurrected)
-        meta.persistTo(spark, metaHome)
-      }
+    // invisible forever. The check is a lookup in the cached
+    // tombstone name set (MetaStore.droppedNames): no Spark job runs
+    // unless a name matches.
+    val resurrected = rows.map(_.series).distinct.filter(meta.droppedNames)
+    if (resurrected.nonEmpty) {
+      val names = resurrected.toDF("series")
+      Ingest.removeSeries(spark, storeDir, names)
+      meta.removeDropped(names)
+      meta.persistTo(spark, metaHome)
     }
     Ingest.appendBatch(rows.toDF(), storeDir, shardDuration, durationLog)
     meta.receivedPoints.addAndGet(rows.size)

@@ -158,25 +158,6 @@ final class PoolCluster(spark: org.apache.spark.sql.SparkSession,
     fs.delete(resurrectedPath, false)
   }
 
-  /** Driver-side snapshot of the tombstoned names, recomputed only
-    * when the tombstone frame changes (every mutation replaces the
-    * DataFrame object — MetaStore.addDropped/removeDropped/loadFrom),
-    * so the insert-path resurrect check is a Set lookup instead of a
-    * Spark join+collect per target-routed request. Bounded by the
-    * names awaiting the next optimize purge, not by the catalog; only
-    * consulted while an expansion is in flight. */
-  @volatile private var tombNames: (AnyRef, Set[String]) = (None, Set.empty)
-  private def tombstonedNames(tomb: DataFrame): Set[String] = {
-    val cached = tombNames
-    if (cached._1 eq tomb) cached._2
-    else {
-      val s = tomb.select(col("series")).collect()
-        .iterator.map(_.getString(0)).toSet
-      tombNames = (tomb, s)
-      s
-    }
-  }
-
   /** What queries read, swapped ATOMICALLY (one volatile write): the
     * pool list to merge, plus — during an expansion's hand-over — the
     * slot set whose series the SOURCE pools must hide because the
@@ -307,19 +288,15 @@ final class PoolCluster(spark: org.apache.spark.sql.SparkSession,
     // copy/sweep — including a crashed expansion's RECOVERY sweep —
     // leaves those old points behind (the re-created series starts
     // fresh, commit 316bbc2's invariant). The membership check is a
-    // cached driver-side Set lookup: no Spark job on the insert hot
-    // path.
-    for (rx <- r; tomb <- meta.droppedDf) {
-      val targetNames = shares.collect {
+    // cached driver-side Set lookup (MetaStore.droppedNames): no
+    // Spark job on the insert hot path.
+    r.foreach { rx =>
+      val lifted = shares.collect {
         case (k, _, rows) if k == rx.targetIdx => rows.map(_.series)
-      }.flatten.distinct
-      if (targetNames.nonEmpty) {
-        val tombSet = tombstonedNames(tomb)
-        val lifted = targetNames.filter(tombSet.contains)
-        if (lifted.nonEmpty) resurrectLock.synchronized {
-          resurrectedInReindex ++= lifted
-          persistResurrected(resurrectedInReindex)
-        }
+      }.flatten.distinct.filter(meta.droppedNames)
+      if (lifted.nonEmpty) resurrectLock.synchronized {
+        resurrectedInReindex ++= lifted
+        persistResurrected(resurrectedInReindex)
       }
     }
     shares.foreach { case (k, arr, rows) =>

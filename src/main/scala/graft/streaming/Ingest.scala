@@ -1,9 +1,12 @@
 package graft.streaming
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types._
 
 import graft.engine.SeriesStore
 
@@ -21,7 +24,7 @@ import graft.engine.SeriesStore
   *     (duration_num), string ("log") series at `durationLog` — the
   *     reference keeps the two durations separately
   *     (src/siri/db/db.c:395-424);
-  *   catalog.parquet — (series, type, length, start, end, pool),
+  *   catalog.parquet — one [[CatalogSchema]] row per series,
   *     upserted incrementally per micro-batch (the analog of the
   *     reference's series.dat); `list`/`count series length` and the
   *     bare count()/first()/last() skip-points fast path read ONLY
@@ -29,7 +32,8 @@ import graft.engine.SeriesStore
   *
   * At scale each micro-batch append is a partitioned parquet write and
   * the catalog upsert aggregates only the batch (plus a catalog-sized
-  * merge) — nothing re-scans history.
+  * rewrite that only scans the old catalog) — nothing re-scans
+  * history.
   */
 object Ingest {
 
@@ -40,6 +44,15 @@ object Ingest {
     * itest `huge` fixture pins values at Long.MaxValue. */
   final case class PointIn(series: String, ts: Long, val_num: Double,
       tp: String, pid: Long, val_int: Long = 0L, val_str: String = "")
+
+  /** The catalog's columns, one row per series (the analog of the
+    * reference's series.dat). Every catalog read declares it, so none
+    * pays a schema-inference job. */
+  val CatalogSchema: StructType = StructType(Seq(
+    StructField("series", StringType), StructField("length", LongType),
+    StructField("start", LongType), StructField("end", LongType),
+    StructField("type", StringType), StructField("first_val", StringType),
+    StructField("last_val", StringType), StructField("pool", LongType)))
 
   def pointsPath(dir: String) = s"$dir/points"
   def catalogPath(dir: String) = s"$dir/catalog.parquet"
@@ -413,6 +426,7 @@ object Ingest {
   private def appendBatchLocked(batch: DataFrame, storeDir: String,
       shardDuration: Long, durationLog: Long): Unit = {
     val spark = batch.sparkSession
+    import spark.implicits._
     val withExtra = Seq("val_int" -> lit(0L), "val_str" -> lit(""))
       .foldLeft(batch) { case (df, (c, d)) =>
         if (df.columns.contains(c)) df else df.withColumn(c, d)
@@ -420,77 +434,38 @@ object Ingest {
     val raw = withExtra.select(col("series"), col("ts"),
       col("val_num").as("val"), col("val_int"), col("val_str"),
       col("tp"), col("pid"))
+    val existing = catalog(spark, storeDir)
 
-    val catPath = catalogPath(storeDir)
-    val fs = new Path(storeDir).getFileSystem(spark.sessionState.newHadoopConf())
-    val existing =
-      if (fs.exists(new Path(catPath))) spark.read.parquet(catPath)
-      else spark.sql(
-        """SELECT '' AS series, 0L AS `length`, 0L AS `start`, 0L AS `end`,
-          |'' AS `type`, 0L AS pool, '' AS first_val, '' AS last_val""".stripMargin)
-        .limit(0)
+    // One grouped pass over the raw batch, joined to the catalog and
+    // collected: one row per BATCH series (never per store series)
+    // carrying its catalog row, its count/start/end and its raw first
+    // and last points by (ts, pid). The established type is the
+    // catalog type, else the type of the series' first point in this
+    // batch.
+    val ord = struct(col("ts"), col("pid"))
+    val point = struct(col("ts"), col("pid"), col("val"), col("val_int"),
+      col("val_str"), col("tp"))
+    val touched = raw.groupBy(col("series"))
+      .agg(count(lit(1)).as("n"), min(col("ts")).as("lo"),
+        max(col("ts")).as("hi"), min_by(point, ord).as("first"),
+        max_by(point, ord).as("last"))
+      .join(existing, Seq("series"), "left")
+      .withColumn("etp", coalesce(col("type"), col("first.tp")))
+      .collect()
+    val etp = touched.map(r => r.getAs[String]("series") -> r.getAs[String]("etp"))
+      .toSeq.toDF("series", "etp")
 
-    // established type = existing catalog type, else the type of the
-    // series' first point within this batch (deterministic by ts, pid)
-    val batchTypes = raw.groupBy(col("series"))
-      .agg(min_by(col("tp"), struct(col("ts"), col("pid"))).as("batch_tp"))
-    val pts = raw
-      .join(existing.select(col("series"), col("type").as("ex_tp")), Seq("series"), "left")
-      .join(batchTypes, Seq("series"))
-      .withColumn("etp", coalesce(col("ex_tp"), col("batch_tp")))
-      // siridb_series_ensure_type coerces with C stdlib semantics
-      // (series.c:1141-1216): strings parse as a strtoll/strtod PREFIX
-      // ("-50%" → -50, "garbage"/"" → 0) with strtoll saturating at
-      // the int64 bounds; doubles truncate toward zero into integers;
-      // numbers render into string series as "%PRId64" / "%f"
-      .withColumn("int_prefix",
-        regexp_extract(col("val_str"), "^\\s*([+-]?[0-9]+)", 1))
-      .withColumn("flt_prefix", regexp_extract(col("val_str"),
-        "^\\s*([+-]?(?:[0-9]+\\.?[0-9]*(?:[eE][+-]?[0-9]+)?|\\.[0-9]+(?:[eE][+-]?[0-9]+)?|[iI][nN][fF](?:inity)?|[nN][aA][nN]))", 1))
-      .withColumn("c_int", when(col("etp") === "integer",
-        when(col("tp") === "integer", col("val_int"))
-          .when(col("tp") === "float",
-            when(isnan(col("val")), lit(0L))
-              .otherwise(coalesce(expr("try_cast(val AS BIGINT)"),
-                when(col("val") > 0, lit(Long.MaxValue)).otherwise(lit(Long.MinValue)))))
-          .otherwise(coalesce(expr("try_cast(int_prefix AS BIGINT)"),
-            when(length(col("int_prefix")) === 0, lit(0L))
-              .when(col("int_prefix").startsWith("-"), lit(Long.MinValue))
-              .otherwise(lit(Long.MaxValue)))))
-        .otherwise(lit(0L)))
-      .withColumn("c_num", when(col("etp") === "float",
-        when(col("tp") === "float", col("val"))
-          .when(col("tp") === "integer", col("val_int").cast("double"))
-          // try_cast only parses 'Infinity'/'NaN' exactly; C strtod
-          // (series.c:1141-1216) accepts inf/INF/infinity/nan in any
-          // case — map the captured forms explicitly before falling
-          // back (the capture's numeric alternative can never contain
-          // the letter sequences, so the rlike guards are exact)
-          .otherwise(
-            when(col("flt_prefix").rlike("(?i)inf"),
-              when(col("flt_prefix").startsWith("-"),
-                lit(Double.NegativeInfinity))
-                .otherwise(lit(Double.PositiveInfinity)))
-              .when(col("flt_prefix").rlike("(?i)nan"), lit(Double.NaN))
-              .otherwise(coalesce(expr("try_cast(flt_prefix AS DOUBLE)"),
-                lit(0.0)))))
-        .when(col("etp") === "integer", col("c_int").cast("double"))
-        .otherwise(lit(0.0)))
-      .withColumn("c_str", when(col("etp") === "string",
-        when(col("tp") === "string", col("val_str"))
-          .when(col("tp") === "integer", col("val_int").cast("string"))
-          .otherwise(format_string("%f", col("val"))))
-        .otherwise(lit("")))
-      .select(col("series"), col("ts"), col("c_num").as("val"),
-        col("c_int").as("val_int"), col("c_str").as("val_str"),
-        col("etp").as("tp"), col("pid"))
-
-    // string ("log") series shard at their own duration
-    // (src/siri/db/db.c:395-424: duration_num vs duration_log)
+    // the points, coerced once. String ("log") series shard at their
+    // own duration (src/siri/db/db.c:395-424: duration_num vs
+    // duration_log). Hash-partitioned by the shard directory, so each
+    // touched shard gets one file whatever the batch size (a small
+    // batch coalesces to one task).
+    val pts = coerce(raw.join(broadcast(etp), Seq("series")))
     pts.withColumn("sgroup",
         when(col("tp") === "string", lit("log")).otherwise(lit("num")))
       .withColumn("shard", when(col("tp") === "string",
         expr(s"ts div $durationLog")).otherwise(expr(s"ts div $shardDuration")))
+      .repartition(col("sgroup"), col("shard"))
       .write.mode("append").partitionBy("sgroup", "shard")
       .parquet(pointsPath(storeDir))
 
@@ -498,54 +473,110 @@ object Ingest {
     // delta rows keep them exact (see the rollup section below)
     rollupAppend(spark, storeDir, pts)
 
-    // canonical string form of the typed value — carried in the
-    // catalog so bare first()/last() never read point data
-    // (aggregate.c:495-510); long/double round-trip exactly
-    val vstr = when(col("tp") === "integer", col("val_int").cast("string"))
-      .when(col("tp") === "string", col("val_str"))
-      .otherwise(col("val").cast("string"))
-    val ord = struct(col("ts"), col("pid"))
-    val delta = pts.withColumn("vstr", vstr)
-      .groupBy(col("series"))
-      .agg(count(lit(1)).as("length"), min(col("ts")).as("start"),
-        max(col("ts")).as("end"), first(col("tp")).as("type"),
-        min_by(col("vstr"), ord).as("first_val"),
-        max_by(col("vstr"), ord).as("last_val"))
+    // the batch's first/last values: the same coercion over a local
+    // frame of two points per series, which Spark folds on the driver
+    val ends = touched.toSeq.flatMap { r =>
+      Seq("first", "last").map { edge =>
+        val p = r.getAs[Row](edge)
+        (r.getAs[String]("series"), edge, p.getLong(0), p.getLong(1),
+          p.getDouble(2), p.getLong(3), p.getString(4), p.getString(5),
+          r.getAs[String]("etp"))
+      }
+    }.toDF("series", "edge", "ts", "pid", "val", "val_int", "val_str", "tp", "etp")
+    val vals = coerce(ends).select(col("series"), col("edge"), valueString(col("tp")))
+      .collect().map(r => (r.getString(0), r.getString(1)) -> r.getString(2)).toMap
 
-    // catalog merge. The delta side is ONE BATCH (small), the existing
-    // side is the whole catalog — a full-outer join would shuffle the
-    // catalog on every micro-batch (measured 9.6 s at 1M series,
-    // IngestSpec), so split it into a broadcast LEFT join (updates,
-    // no exchange of the catalog side) plus a broadcast anti-join
-    // (brand-new series), which is the same merge in one narrow pass.
-    val updated = existing.alias("e")
-      .join(broadcast(delta.alias("d")), Seq("series"), "left")
-      .select(col("series"),
-        (col("e.length") + coalesce(col("d.length"), lit(0L)))
-          .cast("long").as("length"),
-        least(col("e.start"), col("d.start")).as("start"),
-        greatest(col("e.end"), col("d.end")).as("end"),
-        col("e.type").as("type"),
-        when(col("d.start") < col("e.start"), col("d.first_val"))
-          .otherwise(col("e.first_val")).as("first_val"),
-        when(col("d.end") >= col("e.end"), col("d.last_val"))
-          .otherwise(col("e.last_val")).as("last_val"))
-    // delta series already present in the catalog: a narrow inner join
-    // against the broadcast delta (batch-sized result) — never a
-    // broadcast or shuffle of the catalog itself
-    val matched = existing.select(col("series"))
-      .join(broadcast(delta.select(col("series"))), Seq("series"))
-    val fresh = delta
-      .join(broadcast(matched), Seq("series"), "left_anti")
-      .select(col("series"), col("length"), col("start"), col("end"),
-        col("type"), col("first_val"), col("last_val"))
-    val merged = updated.unionByName(fresh)
+    // catalog merge: a batch series already in the catalog adds its
+    // count and widens start/end; first/last move only when the batch
+    // reaches past them (an equal end goes to the batch, whose pids
+    // are newer). A new series takes the batch's stats as they are.
+    val merged = touched.toSeq.map { r =>
+      val s = r.getAs[String]("series")
+      val (n, lo, hi) = (r.getAs[Long]("n"), r.getAs[Long]("lo"), r.getAs[Long]("hi"))
+      val (first, last) = (vals((s, "first")), vals((s, "last")))
+      if (r.isNullAt(r.fieldIndex("type")))
+        Row(s, n, lo, hi, r.getAs[String]("etp"), first, last)
+      else {
+        val (start, end) = (r.getAs[Long]("start"), r.getAs[Long]("end"))
+        Row(s, r.getAs[Long]("length") + n, math.min(start, lo), math.max(end, hi),
+          r.getAs[String]("type"),
+          if (lo < start) first else r.getAs[String]("first_val"),
+          if (hi >= end) last else r.getAs[String]("last_val"))
+      }
+    }
+    val batchRows = spark.createDataFrame(merged.asJava,
+      StructType(CatalogSchema.filter(_.name != "pool")))
       .withColumn("pool", SeriesStore.poolOf("series"))
+    // one job: the old catalog minus the batch's series (a broadcast
+    // anti-join against the local name frame; the catalog is only
+    // scanned) plus the merged rows
+    val catPath = catalogPath(storeDir)
+    val fs = new Path(storeDir).getFileSystem(spark.sessionState.newHadoopConf())
     val tmp = new Path(catPath + ".tmp")
-    merged.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+    existing.join(broadcast(etp.select(col("series"))), Seq("series"), "left_anti")
+      .unionByName(batchRows)
+      .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
     fs.delete(new Path(catPath), true)
     fs.rename(tmp, new Path(catPath))
   }
+
+  /** siridb_series_ensure_type's coercion (series.c:1141-1216) of each
+    * point's `val`/`val_int`/`val_str`/`tp` to the established type in
+    * `etp`, with C stdlib semantics: strings parse as a strtoll/strtod
+    * PREFIX ("-50%" → -50, "garbage"/"" → 0) with strtoll saturating
+    * at the int64 bounds; doubles truncate toward zero into integers;
+    * numbers render into string series as "%PRId64" / "%f". Other
+    * columns pass through; `etp` is consumed. */
+  private def coerce(df: DataFrame): DataFrame = df
+    .withColumn("int_prefix",
+      regexp_extract(col("val_str"), "^\\s*([+-]?[0-9]+)", 1))
+    .withColumn("flt_prefix", regexp_extract(col("val_str"),
+      "^\\s*([+-]?(?:[0-9]+\\.?[0-9]*(?:[eE][+-]?[0-9]+)?|\\.[0-9]+(?:[eE][+-]?[0-9]+)?|[iI][nN][fF](?:inity)?|[nN][aA][nN]))", 1))
+    .withColumn("c_int", when(col("etp") === "integer",
+      when(col("tp") === "integer", col("val_int"))
+        .when(col("tp") === "float",
+          when(isnan(col("val")), lit(0L))
+            .otherwise(coalesce(expr("try_cast(val AS BIGINT)"),
+              when(col("val") > 0, lit(Long.MaxValue)).otherwise(lit(Long.MinValue)))))
+        .otherwise(coalesce(expr("try_cast(int_prefix AS BIGINT)"),
+          when(length(col("int_prefix")) === 0, lit(0L))
+            .when(col("int_prefix").startsWith("-"), lit(Long.MinValue))
+            .otherwise(lit(Long.MaxValue)))))
+      .otherwise(lit(0L)))
+    .withColumn("c_num", when(col("etp") === "float",
+      when(col("tp") === "float", col("val"))
+        .when(col("tp") === "integer", col("val_int").cast("double"))
+        // try_cast only parses 'Infinity'/'NaN' exactly; C strtod
+        // accepts inf/INF/infinity/nan in any case — map the captured
+        // forms explicitly before falling back (the capture's numeric
+        // alternative can never contain the letter sequences, so the
+        // rlike guards are exact)
+        .otherwise(
+          when(col("flt_prefix").rlike("(?i)inf"),
+            when(col("flt_prefix").startsWith("-"),
+              lit(Double.NegativeInfinity))
+              .otherwise(lit(Double.PositiveInfinity)))
+            .when(col("flt_prefix").rlike("(?i)nan"), lit(Double.NaN))
+            .otherwise(coalesce(expr("try_cast(flt_prefix AS DOUBLE)"),
+              lit(0.0)))))
+      .when(col("etp") === "integer", col("c_int").cast("double"))
+      .otherwise(lit(0.0)))
+    .withColumn("c_str", when(col("etp") === "string",
+      when(col("tp") === "string", col("val_str"))
+        .when(col("tp") === "integer", col("val_int").cast("string"))
+        .otherwise(format_string("%f", col("val"))))
+      .otherwise(lit("")))
+    .withColumns(Map("val" -> col("c_num"), "val_int" -> col("c_int"),
+      "val_str" -> col("c_str"), "tp" -> col("etp")))
+    .drop("int_prefix", "flt_prefix", "c_int", "c_num", "c_str", "etp")
+
+  /** Canonical string form of a typed value, carried in the catalog so
+    * bare first()/last() never read point data (aggregate.c:495-510);
+    * long/double round-trip exactly. */
+  private def valueString(tp: Column): Column =
+    when(tp === "integer", col("val_int").cast("string"))
+      .when(tp === "string", col("val_str"))
+      .otherwise(col("val").cast("string"))
 
   /** True when the path holds actual data (shard dirs or parquet
     * parts) — an existing dir with only _SUCCESS markers left after
@@ -738,11 +769,8 @@ object Ingest {
     val cat = catalog(spark, storeDir).select(col("series"), col("type"))
     val typed = pts.join(cat, Seq("series"), "left")
       .withColumn("type", coalesce(col("type"), lit("float")))
-    val vstr = when(col("type") === "integer", col("val_int").cast("string"))
-      .when(col("type") === "string", col("val_str"))
-      .otherwise(col("val").cast("string"))
     val ord = struct(col("ts"), col("pid"))
-    val rebuilt = typed.withColumn("vstr", vstr)
+    val rebuilt = typed.withColumn("vstr", valueString(col("type")))
       .groupBy(col("series"))
       .agg(count(lit(1)).as("length"), min(col("ts")).as("start"),
         max(col("ts")).as("end"), first(col("type")).as("type"),
@@ -957,9 +985,6 @@ object Ingest {
     * without touching point data. */
   def catalog(spark: SparkSession, storeDir: String): DataFrame =
     if (!existsNonEmpty(spark, catalogPath(storeDir)))
-      spark.sql(
-        """SELECT '' AS series, 0L AS `length`, 0L AS `start`, 0L AS `end`,
-          |'' AS `type`, 0L AS pool, '' AS first_val, '' AS last_val""".stripMargin)
-        .limit(0)
-    else spark.read.parquet(catalogPath(storeDir))
+      spark.createDataFrame(java.util.Collections.emptyList[Row](), CatalogSchema)
+    else spark.read.schema(CatalogSchema).parquet(catalogPath(storeDir))
 }
