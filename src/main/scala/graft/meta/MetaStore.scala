@@ -97,28 +97,27 @@ final class MetaStore {
     * src/siri/optimize.c) as a materialized name frame — anti-joined
     * against the catalog, so a read never filters by a driver-side
     * name list. `localCheckpoint` pins the point-in-time snapshot. */
-  def droppedDf: Option[org.apache.spark.sql.DataFrame] = dropped._1
+  def droppedDf: Option[org.apache.spark.sql.DataFrame] = dropped.map(_.df)
 
-  /** The same names as a driver-side set, taken once per tombstone
-    * change, so an insert's resurrect check is a Set lookup: no Spark
-    * job runs on the insert path unless a name matches. Bounded by the
-    * names awaiting the next optimize purge, not by the catalog. */
-  def droppedNames: Set[String] = dropped._2
+  /** The same names as a driver-side set, so an insert's resurrect
+    * check is a Set lookup: no Spark job runs on the insert path
+    * unless a name matches. Collected on first use after each
+    * tombstone change, so a process that never inserts (a reader
+    * reloading meta) never pays for it. Bounded by the names awaiting
+    * the next optimize purge, not by the catalog. */
+  def droppedNames: Set[String] = dropped.fold(Set.empty[String])(_.names)
 
-  /** Frame and name set swap together (one volatile write). */
-  @volatile private var dropped: (Option[org.apache.spark.sql.DataFrame], Set[String]) =
-    (None, Set.empty)
-
-  /** Install a tombstone frame; an empty one means no tombstones. */
-  private def setDropped(d: Option[org.apache.spark.sql.DataFrame]): Unit = {
-    val names = d.fold(Set.empty[String])(_.select(col("series")).collect()
-      .iterator.map(_.getString(0)).toSet)
-    dropped = (d.filter(_ => names.nonEmpty), names)
+  /** A tombstone frame and its lazily collected name set, swapped as
+    * one (one volatile write). */
+  private final class Tombstones(val df: DataFrame) {
+    lazy val names: Set[String] = df.select(col("series")).collect()
+      .iterator.map(_.getString(0)).toSet
   }
+  @volatile private var dropped: Option[Tombstones] = None
 
   def addDropped(names: org.apache.spark.sql.DataFrame): Unit = synchronized {
     val snap = names.localCheckpoint(true)
-    setDropped(Some(droppedDf
+    dropped = Some(new Tombstones(droppedDf
       .map(_.unionByName(snap).distinct().localCheckpoint(true))
       .getOrElse(snap)))
     droppedDirty = true
@@ -133,9 +132,10 @@ final class MetaStore {
     * would resurrect them. */
   def removeDropped(names: org.apache.spark.sql.DataFrame): Unit = synchronized {
     droppedDf.foreach { d =>
-      setDropped(Some(d
+      val rest = d
         .join(names.select(col("series")).distinct(), Seq("series"), "left_anti")
-        .localCheckpoint(true)))
+        .localCheckpoint(true)
+      dropped = if (rest.isEmpty) None else Some(new Tombstones(rest))
       droppedDirty = true
     }
   }
@@ -353,10 +353,10 @@ final class MetaStore {
     // the file's ABSENCE is state too: a writer process that lifted
     // the last tombstone deleted it, and a merge-only reload would
     // keep the stale frame hiding a re-created series
-    setDropped(
+    dropped =
       if (fs.exists(droppedPath))
-        Some(spark.read.parquet(droppedPath.toString).localCheckpoint(true))
-      else None)
+        Some(new Tombstones(spark.read.parquet(droppedPath.toString).localCheckpoint(true)))
+      else None
   }
 
   def untagSeries(tag: String, names: org.apache.spark.sql.DataFrame): Long = synchronized {

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -426,7 +424,6 @@ object Ingest {
   private def appendBatchLocked(batch: DataFrame, storeDir: String,
       shardDuration: Long, durationLog: Long): Unit = {
     val spark = batch.sparkSession
-    import spark.implicits._
     val withExtra = Seq("val_int" -> lit(0L), "val_str" -> lit(""))
       .foldLeft(batch) { case (df, (c, d)) =>
         if (df.columns.contains(c)) df else df.withColumn(c, d)
@@ -436,36 +433,53 @@ object Ingest {
       col("tp"), col("pid"))
     val existing = catalog(spark, storeDir)
 
-    // One grouped pass over the raw batch, joined to the catalog and
-    // collected: one row per BATCH series (never per store series)
-    // carrying its catalog row, its count/start/end and its raw first
-    // and last points by (ts, pid). The established type is the
-    // catalog type, else the type of the series' first point in this
-    // batch.
+    // One grouped pass over the raw batch, joined to the catalog: one
+    // row per BATCH series carrying its merged catalog row. The
+    // established type is the catalog type, else the type of the
+    // series' first point in this batch; a series already in the
+    // catalog adds its count and widens start/end, and first/last move
+    // only when the batch reaches past them (an equal end goes to the
+    // batch, whose pids are newer). The batch's first/last values are
+    // its raw first/last points by (ts, pid) under the same coercion
+    // as the points. Checkpointed (distributed, nothing collected):
+    // the point write and the catalog rewrite both read it.
     val ord = struct(col("ts"), col("pid"))
     val point = struct(col("ts"), col("pid"), col("val"), col("val_int"),
       col("val_str"), col("tp"))
+    val etp = coalesce(col("type"), col("first.tp"))
+    def edge(e: String) = valueString(etp, coerce(c => col(s"$e.$c"), etp))
+    val fresh = col("type").isNull
     val touched = raw.groupBy(col("series"))
       .agg(count(lit(1)).as("n"), min(col("ts")).as("lo"),
         max(col("ts")).as("hi"), min_by(point, ord).as("first"),
         max_by(point, ord).as("last"))
       .join(existing, Seq("series"), "left")
-      .withColumn("etp", coalesce(col("type"), col("first.tp")))
-      .collect()
-    val etp = touched.map(r => r.getAs[String]("series") -> r.getAs[String]("etp"))
-      .toSeq.toDF("series", "etp")
+      .select(col("series"),
+        (coalesce(col("length"), lit(0L)) + col("n")).as("length"),
+        least(col("start"), col("lo")).as("start"),
+        greatest(col("end"), col("hi")).as("end"),
+        etp.as("type"),
+        when(fresh || col("lo") < col("start"), edge("first"))
+          .otherwise(col("first_val")).as("first_val"),
+        when(fresh || col("hi") >= col("end"), edge("last"))
+          .otherwise(col("last_val")).as("last_val"),
+        SeriesStore.poolOf("series").as("pool"))
+      .localCheckpoint(eager = true)
 
     // the points, coerced once. String ("log") series shard at their
     // own duration (src/siri/db/db.c:395-424: duration_num vs
-    // duration_log). Hash-partitioned by the shard directory, so each
-    // touched shard gets one file whatever the batch size (a small
-    // batch coalesces to one task).
-    val pts = coerce(raw.join(broadcast(etp), Seq("series")))
+    // duration_log). Rebalanced by shard directory: AQE keeps each
+    // shard's rows in one task, so a batch writes one file per touched
+    // shard (a small batch coalesces to one task), and splits only a
+    // shard holding more than the advisory partition size, so a large
+    // batch into few shards still writes in parallel.
+    val pts = raw.join(touched.select(col("series"), col("type").as("etp")), Seq("series"))
+      .withColumns(coerce(col, col("etp"))).drop("etp")
     pts.withColumn("sgroup",
         when(col("tp") === "string", lit("log")).otherwise(lit("num")))
       .withColumn("shard", when(col("tp") === "string",
         expr(s"ts div $durationLog")).otherwise(expr(s"ts div $shardDuration")))
-      .repartition(col("sgroup"), col("shard"))
+      .hint("rebalance", col("sgroup"), col("shard"))
       .write.mode("append").partitionBy("sgroup", "shard")
       .parquet(pointsPath(storeDir))
 
@@ -473,110 +487,74 @@ object Ingest {
     // delta rows keep them exact (see the rollup section below)
     rollupAppend(spark, storeDir, pts)
 
-    // the batch's first/last values: the same coercion over a local
-    // frame of two points per series, which Spark folds on the driver
-    val ends = touched.toSeq.flatMap { r =>
-      Seq("first", "last").map { edge =>
-        val p = r.getAs[Row](edge)
-        (r.getAs[String]("series"), edge, p.getLong(0), p.getLong(1),
-          p.getDouble(2), p.getLong(3), p.getString(4), p.getString(5),
-          r.getAs[String]("etp"))
-      }
-    }.toDF("series", "edge", "ts", "pid", "val", "val_int", "val_str", "tp", "etp")
-    val vals = coerce(ends).select(col("series"), col("edge"), valueString(col("tp")))
-      .collect().map(r => (r.getString(0), r.getString(1)) -> r.getString(2)).toMap
-
-    // catalog merge: a batch series already in the catalog adds its
-    // count and widens start/end; first/last move only when the batch
-    // reaches past them (an equal end goes to the batch, whose pids
-    // are newer). A new series takes the batch's stats as they are.
-    val merged = touched.toSeq.map { r =>
-      val s = r.getAs[String]("series")
-      val (n, lo, hi) = (r.getAs[Long]("n"), r.getAs[Long]("lo"), r.getAs[Long]("hi"))
-      val (first, last) = (vals((s, "first")), vals((s, "last")))
-      if (r.isNullAt(r.fieldIndex("type")))
-        Row(s, n, lo, hi, r.getAs[String]("etp"), first, last)
-      else {
-        val (start, end) = (r.getAs[Long]("start"), r.getAs[Long]("end"))
-        Row(s, r.getAs[Long]("length") + n, math.min(start, lo), math.max(end, hi),
-          r.getAs[String]("type"),
-          if (lo < start) first else r.getAs[String]("first_val"),
-          if (hi >= end) last else r.getAs[String]("last_val"))
-      }
-    }
-    val batchRows = spark.createDataFrame(merged.asJava,
-      StructType(CatalogSchema.filter(_.name != "pool")))
-      .withColumn("pool", SeriesStore.poolOf("series"))
-    // one job: the old catalog minus the batch's series (a broadcast
-    // anti-join against the local name frame; the catalog is only
-    // scanned) plus the merged rows
+    // one write: the old catalog minus the batch's series (an
+    // anti-join against the broadcast batch names, so the catalog is
+    // only scanned, never shuffled) plus the merged rows
     val catPath = catalogPath(storeDir)
     val fs = new Path(storeDir).getFileSystem(spark.sessionState.newHadoopConf())
     val tmp = new Path(catPath + ".tmp")
-    existing.join(broadcast(etp.select(col("series"))), Seq("series"), "left_anti")
-      .unionByName(batchRows)
+    existing.join(broadcast(touched.select(col("series"))), Seq("series"), "left_anti")
+      .unionByName(touched)
       .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
     fs.delete(new Path(catPath), true)
     fs.rename(tmp, new Path(catPath))
   }
 
-  /** siridb_series_ensure_type's coercion (series.c:1141-1216) of each
-    * point's `val`/`val_int`/`val_str`/`tp` to the established type in
-    * `etp`, with C stdlib semantics: strings parse as a strtoll/strtod
-    * PREFIX ("-50%" → -50, "garbage"/"" → 0) with strtoll saturating
-    * at the int64 bounds; doubles truncate toward zero into integers;
-    * numbers render into string series as "%PRId64" / "%f". Other
-    * columns pass through; `etp` is consumed. */
-  private def coerce(df: DataFrame): DataFrame = df
-    .withColumn("int_prefix",
-      regexp_extract(col("val_str"), "^\\s*([+-]?[0-9]+)", 1))
-    .withColumn("flt_prefix", regexp_extract(col("val_str"),
-      "^\\s*([+-]?(?:[0-9]+\\.?[0-9]*(?:[eE][+-]?[0-9]+)?|\\.[0-9]+(?:[eE][+-]?[0-9]+)?|[iI][nN][fF](?:inity)?|[nN][aA][nN]))", 1))
-    .withColumn("c_int", when(col("etp") === "integer",
-      when(col("tp") === "integer", col("val_int"))
-        .when(col("tp") === "float",
-          when(isnan(col("val")), lit(0L))
-            .otherwise(coalesce(expr("try_cast(val AS BIGINT)"),
-              when(col("val") > 0, lit(Long.MaxValue)).otherwise(lit(Long.MinValue)))))
-        .otherwise(coalesce(expr("try_cast(int_prefix AS BIGINT)"),
-          when(length(col("int_prefix")) === 0, lit(0L))
-            .when(col("int_prefix").startsWith("-"), lit(Long.MinValue))
+  /** siridb_series_ensure_type's coercion (series.c:1141-1216) of one
+    * point — its `val`/`val_int`/`val_str`/`tp` fields, read through
+    * `p` — to the established type `etp`, with C stdlib semantics:
+    * strings parse as a strtoll/strtod PREFIX ("-50%" → -50,
+    * "garbage"/"" → 0) with strtoll saturating at the int64 bounds;
+    * doubles truncate toward zero into integers; numbers render into
+    * string series as "%PRId64" / "%f". Returns the coerced fields by
+    * name. */
+  private def coerce(p: String => Column, etp: Column): Map[String, Column] = {
+    val (v, vInt, vStr, tp) = (p("val"), p("val_int"), p("val_str"), p("tp"))
+    val intPrefix = regexp_extract(vStr, "^\\s*([+-]?[0-9]+)", 1)
+    val fltPrefix = regexp_extract(vStr,
+      "^\\s*([+-]?(?:[0-9]+\\.?[0-9]*(?:[eE][+-]?[0-9]+)?|\\.[0-9]+(?:[eE][+-]?[0-9]+)?|[iI][nN][fF](?:inity)?|[nN][aA][nN]))", 1)
+    val cInt = when(etp === "integer",
+      when(tp === "integer", vInt)
+        .when(tp === "float",
+          when(isnan(v), lit(0L))
+            .otherwise(coalesce(v.try_cast(LongType),
+              when(v > 0, lit(Long.MaxValue)).otherwise(lit(Long.MinValue)))))
+        .otherwise(coalesce(intPrefix.try_cast(LongType),
+          when(length(intPrefix) === 0, lit(0L))
+            .when(intPrefix.startsWith("-"), lit(Long.MinValue))
             .otherwise(lit(Long.MaxValue)))))
-      .otherwise(lit(0L)))
-    .withColumn("c_num", when(col("etp") === "float",
-      when(col("tp") === "float", col("val"))
-        .when(col("tp") === "integer", col("val_int").cast("double"))
+      .otherwise(lit(0L))
+    val cNum = when(etp === "float",
+      when(tp === "float", v)
+        .when(tp === "integer", vInt.cast("double"))
         // try_cast only parses 'Infinity'/'NaN' exactly; C strtod
         // accepts inf/INF/infinity/nan in any case — map the captured
         // forms explicitly before falling back (the capture's numeric
         // alternative can never contain the letter sequences, so the
         // rlike guards are exact)
         .otherwise(
-          when(col("flt_prefix").rlike("(?i)inf"),
-            when(col("flt_prefix").startsWith("-"),
-              lit(Double.NegativeInfinity))
+          when(fltPrefix.rlike("(?i)inf"),
+            when(fltPrefix.startsWith("-"), lit(Double.NegativeInfinity))
               .otherwise(lit(Double.PositiveInfinity)))
-            .when(col("flt_prefix").rlike("(?i)nan"), lit(Double.NaN))
-            .otherwise(coalesce(expr("try_cast(flt_prefix AS DOUBLE)"),
-              lit(0.0)))))
-      .when(col("etp") === "integer", col("c_int").cast("double"))
-      .otherwise(lit(0.0)))
-    .withColumn("c_str", when(col("etp") === "string",
-      when(col("tp") === "string", col("val_str"))
-        .when(col("tp") === "integer", col("val_int").cast("string"))
-        .otherwise(format_string("%f", col("val"))))
-      .otherwise(lit("")))
-    .withColumns(Map("val" -> col("c_num"), "val_int" -> col("c_int"),
-      "val_str" -> col("c_str"), "tp" -> col("etp")))
-    .drop("int_prefix", "flt_prefix", "c_int", "c_num", "c_str", "etp")
+            .when(fltPrefix.rlike("(?i)nan"), lit(Double.NaN))
+            .otherwise(coalesce(fltPrefix.try_cast(DoubleType), lit(0.0)))))
+      .when(etp === "integer", cInt.cast("double"))
+      .otherwise(lit(0.0))
+    val cStr = when(etp === "string",
+      when(tp === "string", vStr)
+        .when(tp === "integer", vInt.cast("string"))
+        .otherwise(format_string("%f", v)))
+      .otherwise(lit(""))
+    Map("val" -> cNum, "val_int" -> cInt, "val_str" -> cStr, "tp" -> etp)
+  }
 
-  /** Canonical string form of a typed value, carried in the catalog so
-    * bare first()/last() never read point data (aggregate.c:495-510);
-    * long/double round-trip exactly. */
-  private def valueString(tp: Column): Column =
-    when(tp === "integer", col("val_int").cast("string"))
-      .when(tp === "string", col("val_str"))
-      .otherwise(col("val").cast("string"))
+  /** Canonical string form of a typed value (fields read through `p`),
+    * carried in the catalog so bare first()/last() never read point
+    * data (aggregate.c:495-510); long/double round-trip exactly. */
+  private def valueString(tp: Column, p: String => Column = col): Column =
+    when(tp === "integer", p("val_int").cast("string"))
+      .when(tp === "string", p("val_str"))
+      .otherwise(p("val").cast("string"))
 
   /** True when the path holds actual data (shard dirs or parquet
     * parts) — an existing dir with only _SUCCESS markers left after

@@ -179,14 +179,14 @@ class IngestSpec extends AnyFunSuite {
     // the old full-outer merge (catalog-wide shuffle per batch),
     // 6.1 s after the broadcast left-join + anti-join rewrite. The
     // one-pass insert joins one grouped pass over the batch to the
-    // catalog and collects one row per BATCH series (100 here, never
-    // the 1M catalog rows), then rewrites the catalog in one job: the
-    // old rows minus the batch's series, plus the merged rows. On a
-    // 4-core VM, before → after: 10.9 → 4.5 s within a full IngestSpec
-    // run, 13.7 → 10.9 s as the first test of a fresh JVM; the residue
-    // is the single-task parquet encode. Acceptable for a per-batch
-    // maintenance step; at 10M+ series move to hash-partitioned
-    // catalog parquet with per-partition merge.
+    // catalog and checkpoints one merged row per BATCH series (100
+    // here, never the 1M catalog rows), then rewrites the catalog in
+    // one job: the old rows minus the batch's series, plus the merged
+    // rows. On a 4-core VM, before → after: 10.9 → 4.5 s within a full
+    // IngestSpec run, 14.2 → 13.1 s as the first test of a fresh JVM;
+    // the residue is the single-task parquet encode. Acceptable for a
+    // per-batch maintenance step; at 10M+ series move to
+    // hash-partitioned catalog parquet with per-partition merge.
     import spark.implicits._
     import org.apache.spark.sql.functions._
     val dir = Files.createTempDirectory("graft-bigcat").toString
@@ -718,37 +718,6 @@ class IngestSpec extends AnyFunSuite {
     }
   }
 
-  /** Spark jobs `f` starts on this thread. Its jobs carry a local
-    * property; a sentinel job after it drains the listener bus, which
-    * delivers events in order, before the count is read. */
-  private def jobsOf(f: => Unit): Int = {
-    val sc = spark.sparkContext
-    val key = "graft.test.jobs"
-    val tag = java.util.UUID.randomUUID().toString
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val drained = new java.util.concurrent.CountDownLatch(1)
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty(key)).foreach { t =>
-          if (t == tag) jobs.incrementAndGet()
-          else if (t == tag + "/drain") drained.countDown()
-        }
-    }
-    sc.addSparkListener(l)
-    try {
-      sc.setLocalProperty(key, tag)
-      f
-      sc.setLocalProperty(key, tag + "/drain")
-      sc.parallelize(Seq(1), 1).count()
-      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      jobs.get
-    } finally {
-      sc.setLocalProperty(key, null)
-      sc.removeSparkListener(l)
-    }
-  }
-
   /** An insert body in the map form: series -> [[ts, value], ...];
     * Long, Double and String values become integer, float and string
     * points. */
@@ -769,7 +738,7 @@ class IngestSpec extends AnyFunSuite {
     node
   }
 
-  test("one insert into an existing store runs at most 8 Spark jobs, tombstone or not") {
+  test("one insert runs at most 8 Spark jobs; a new tombstone adds one name collect to the next insert only") {
     val dir = Files.createTempDirectory("graft-jobs").toString
     val api = new graft.server.ApiCore(spark, dir)
     api.runInsert(insertBody(Seq(("cpu", 100L, 1.5), ("n", 100L, 10L),
@@ -779,13 +748,19 @@ class IngestSpec extends AnyFunSuite {
     def batch(t: Long) = insertBody(Seq(("cpu", t, 7L), ("cpu", t + 1, "-50%"),
       ("n", t, 2.9), ("n", t + 1, "inf"), ("log", t, 3L), ("log", t + 1, 0.25),
       (s"fresh.$t", t, "x")))
+    import SparkTestSession.jobsOf
     val plain = jobsOf(api.runInsert(batch(200L), "iris"))
     info(s"insert: $plain Spark jobs")
     assert(plain <= 8, s"$plain Spark jobs for one insert")
     // a tombstone makes every insert check whether it re-creates a
-    // dropped name
+    // dropped name. The first insert after a tombstone change collects
+    // the names once (MetaStore.droppedNames); every later one only
+    // looks them up.
     api.runQuery("drop series 'gone' set ignore_threshold true", 1L, "iris")
-    val tombstoned = jobsOf(api.runInsert(batch(300L), "iris"))
+    val first = jobsOf(api.runInsert(batch(300L), "iris"))
+    info(s"first insert after a drop: $first Spark jobs")
+    assert(first <= 9, s"$first Spark jobs for one insert")
+    val tombstoned = jobsOf(api.runInsert(batch(400L), "iris"))
     info(s"insert with a tombstone present: $tombstoned Spark jobs")
     assert(tombstoned <= 8, s"$tombstoned Spark jobs for one insert")
   }

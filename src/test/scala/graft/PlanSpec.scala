@@ -52,23 +52,15 @@ class PlanSpec extends AnyFunSuite {
     // plan-time type dispatch and encode-time output names both come
     // from ONE memoized (series, type) collect — a second catalog job
     // per select was pure overhead the reference never pays
-    val sc = spark.sparkContext
     def catalogJobs(env: EngineEnv, q: String): Int = {
-      val group = s"one-catalog-job-${System.nanoTime()}"
-      sc.setJobGroup(group, "catalog jobs for one select")
-      try {
+      val jobs = SparkTestSession.jobsOf {
         val stmt = graft.parser.QueryParser.parse(q, 1706000000L)
           .asInstanceOf[graft.parser.SelectStmt]
         Planner.run(stmt, env)            // plan: type dispatch
         Planner.selectNames(stmt, env)    // encode: output names
-      } finally sc.clearJobGroup()
-      // the status store is fed asynchronously — wait for it to settle
-      def jobs() = sc.statusTracker.getJobIdsForGroup(group).length
-      val deadline = System.currentTimeMillis() + 5000
-      while (jobs() < 1 && System.currentTimeMillis() < deadline) Thread.sleep(50)
-      Thread.sleep(300) // catch a late-arriving second job
+      }
       Planner.drainQueryCaches()
-      jobs()
+      jobs
     }
     val env = EngineEnv(spark, dir)
     // warm the persisted catalog + parquet footers outside the count
