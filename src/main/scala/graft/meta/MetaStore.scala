@@ -128,7 +128,7 @@ final class MetaStore {
     * series struct/id on re-insert — series.c — so the old points are
     * unreachable), and its tombstone must lift or the re-created
     * series stays invisible forever. The caller purges the old points
-    * physically FIRST (Ingest.removeSeries) — untombstoning alone
+    * physically FIRST (Ingest.compact) — untombstoning alone
     * would resurrect them. */
   def removeDropped(names: org.apache.spark.sql.DataFrame): Unit = synchronized {
     droppedDf.foreach { d =>

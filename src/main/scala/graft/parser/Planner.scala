@@ -722,13 +722,9 @@ object Planner {
       // are NOT retroactively dropped)
       val matched = selCatalog(sel, where, env).select(col("series"))
       val n = matched.count()
-      val total = env.catalogLive.count()
-      val frac = if (total == 0) 0.0 else n.toDouble / total
-      if (!ignoreThreshold && n > 0 && frac >= env.meta.dropThreshold)
-        throw QueryError(
-          String.format(java.util.Locale.ROOT,
-            "This query would drop %.2f%% of the series in pool 0. Add 'set ignore_threshold true' to the query statement if you really want to do this.",
-            Double.box(frac * 100)))
+      if (!ignoreThreshold)
+        checkDropThreshold("series", n, env.catalogLive.count(),
+          env.meta.dropThreshold)
       if (n > 0) env.meta.addDropped(matched)
       ok(env, s"Successfully dropped $n series.")
 
@@ -853,15 +849,8 @@ object Planner {
           val groupShards = graft.streaming.Ingest
             .shardDirs(env.spark, env.dir).filter(_._1 == group)
           val cutoffShard = (nowTs - v) / dur
-          val expired = groupShards.count(_._2 < cutoffShard)
-          val frac =
-            if (groupShards.isEmpty) 0.0
-            else expired.toDouble / groupShards.size
-          if (frac >= env.meta.dropThreshold)
-            throw QueryError(
-              String.format(java.util.Locale.ROOT,
-                "This query would drop %.2f%% of the shards in pool 0. Add 'set ignore_threshold true' to the query statement if you really want to do this.",
-                Double.box(frac * 100)))
+          checkDropThreshold("shards", groupShards.count(_._2 < cutoffShard),
+            groupShards.size, env.meta.dropThreshold)
         }
       }
       if (prop == "tee") { // exit_set_tee (listener.c:4788-4860)
@@ -1099,14 +1088,6 @@ object Planner {
       unified.reduce(_.unionByName(_))
   }
 
-  /** `drop shards` (exit_drop_shards, listener.c:3052-3152) on this
-    * env's physical store, returning the dropped count STRUCTURALLY —
-    * the cluster fan-out re-sums per-pool counts and formats the
-    * reference message exactly once (PoolCluster), instead of
-    * scraping its own rendered success strings; the standalone `run`
-    * case formats the same count. Caller (run / ApiCore
-    * dropShardsCount) is responsible for access checks.
-    */
   /** (matching, total) shard counts for a `drop shards` cexpr without
     * deleting anything — the cluster's drop-threshold guard sums these
     * ACROSS pools before any pool deletes (a per-pool fraction would
@@ -1117,20 +1098,48 @@ object Planner {
     (matching.size.toLong, all.size.toLong)
   }
 
+  /** `drop shards` (exit_drop_shards, listener.c:3052-3152) on this
+    * env's physical store, returning the dropped count STRUCTURALLY —
+    * the cluster fan-out re-sums per-pool counts and formats the
+    * reference message exactly once (PoolCluster), instead of
+    * scraping its own rendered success strings; the standalone `run`
+    * case formats the same count. The deletion itself, with the
+    * catalog rebuild and rollup recompute it needs, is
+    * Ingest.dropShards. Caller (run / ApiCore dropShardsCount) is
+    * responsible for access checks. */
   private[graft] def dropShardsBody(where: Option[Cexpr],
       ignoreThreshold: Boolean, env: EngineEnv): Long = {
-      if (env.frames.isEmpty)
-        throw QueryError("drop shards requires a writable store (see graft.streaming.Ingest)")
-      val fs = new org.apache.hadoop.fs.Path(
-        graft.streaming.Ingest.pointsPath(env.dir))
-        .getFileSystem(env.spark.sessionState.newHadoopConf())
-      val (matching, all) = shardsMatching(where, env)
-      runDropShards(matching, all, ignoreThreshold, fs, env)
+    if (env.frames.isEmpty)
+      throw QueryError("drop shards requires a writable store (see graft.streaming.Ingest)")
+    val (matching, all) = shardsMatching(where, env)
+    // the same drop_threshold guard as series, on the shard fraction
+    // (exit_drop_shards, listener.c:3107-3125)
+    if (!ignoreThreshold)
+      checkDropThreshold("shards", matching.size, all.size,
+        env.meta.dropThreshold)
+    graft.streaming.Ingest.dropShards(env.spark, env.dir, matching.map(_._3))
+    // invalidate cached frames + advance the cross-process generation
+    env.meta.bumpGeneration(env.spark, env.dir)
+    matching.size.toLong
+  }
+
+  /** The drop_threshold guard (db.h:15; exit_drop_series,
+    * exit_drop_shards, exit_set_expiration_xxx in listener.c): refuse
+    * a statement that would drop `matched` of `total` series or shards
+    * when that fraction reaches the threshold. Callers skip it under
+    * `set ignore_threshold true`. */
+  private[graft] def checkDropThreshold(what: String, matched: Long,
+      total: Long, threshold: Double): Unit = {
+    val frac = if (total == 0) 0.0 else matched.toDouble / total
+    if (matched > 0 && frac >= threshold)
+      throw QueryError(String.format(java.util.Locale.ROOT,
+        "This query would drop %.2f%% of the %s in pool 0. Add 'set ignore_threshold true' to the query statement if you really want to do this.",
+        Double.box(frac * 100), what))
   }
 
   /** The shard set a `drop shards [where]` cexpr selects, plus the
     * full shard list, WITHOUT deleting — shared by the standalone
-    * body below and the cluster's summed threshold check. */
+    * body above and the cluster's summed threshold check. */
   private def shardsMatching(where: Option[Cexpr], env: EngineEnv)
       : (Seq[(String, Long, org.apache.hadoop.fs.Path)],
          Seq[(String, Long, org.apache.hadoop.fs.Path)]) = {
@@ -1191,36 +1200,6 @@ object Planner {
           }
       }
       (matching, all)
-  }
-
-  private def runDropShards(
-      matching: Seq[(String, Long, org.apache.hadoop.fs.Path)],
-      all: Seq[(String, Long, org.apache.hadoop.fs.Path)],
-      ignoreThreshold: Boolean, fs: org.apache.hadoop.fs.FileSystem,
-      env: EngineEnv): Long = {
-      // the same drop_threshold guard as series, on the shard fraction
-      // (exit_drop_shards, listener.c:3107-3125)
-      val shardFrac =
-        if (all.isEmpty) 0.0 else matching.size.toDouble / all.size
-      if (!ignoreThreshold && matching.nonEmpty &&
-          shardFrac >= env.meta.dropThreshold)
-        throw QueryError(
-          String.format(java.util.Locale.ROOT,
-            "This query would drop %.2f%% of the shards in pool 0. Add 'set ignore_threshold true' to the query statement if you really want to do this.",
-            Double.box(shardFrac * 100)))
-      // shard deletion must not interleave with an insert's in-flight
-      // parquet write into the same directories
-      graft.streaming.Ingest.withStoreLock(env.dir) {
-        matching.foreach { case (_, _, p) => fs.delete(p, true) }
-        // the dropped set is an arbitrary cexpr match (by sid, size,
-        // ...), so standing rollups recompute from the survivors —
-        // serving pre-aggregates of deleted shards would resurrect them
-        if (matching.nonEmpty)
-          graft.streaming.Ingest.rollupRecompute(env.spark, env.dir)
-      }
-      // invalidate cached frames + advance the cross-process generation
-      env.meta.bumpGeneration(env.spark, env.dir)
-      matching.size.toLong
   }
 
   /** `now` at full database precision (time.c: the clock scaled by the

@@ -264,12 +264,12 @@ final class ApiCore(spark: SparkSession, storeDir: String,
         lastOptimizeMs.compareAndSet(last, nowMs)) optimizeNow()
   }
   private[graft] def optimizeNow(): Unit = {
-    if (sharedMeta.isEmpty) meta.droppedDf.foreach { tomb =>
-      Ingest.removeSeries(spark, storeDir, tomb)
-      meta.removeDropped(tomb)
+    val tomb = if (sharedMeta.isEmpty) meta.droppedDf else None
+    Ingest.compact(spark, storeDir, maxFiles = 8, dropped = tomb)
+    tomb.foreach { t =>
+      meta.removeDropped(t)
       meta.persistTo(spark, metaHome)
     }
-    Ingest.compact(spark, storeDir, maxFiles = 8)
     // the pass rewrote point/catalog files in place — every cached
     // frame over the old file set must rebuild
     meta.bumpGeneration(spark, metaHome)
@@ -596,7 +596,8 @@ final class ApiCore(spark: SparkSession, storeDir: String,
     val resurrected = rows.map(_.series).distinct.filter(meta.droppedNames)
     if (resurrected.nonEmpty) {
       val names = resurrected.toDF("series")
-      Ingest.removeSeries(spark, storeDir, names)
+      Ingest.compact(spark, storeDir, maxFiles = Int.MaxValue,
+        dropped = Some(names))
       meta.removeDropped(names)
       meta.persistTo(spark, metaHome)
     }

@@ -328,8 +328,8 @@ final class PoolCluster(spark: org.apache.spark.sql.SparkSession,
   }
   private[graft] def optimizeNow(): Unit = synchronized {
     meta.droppedDf.foreach { tomb =>
-      pools.indices.foreach(k =>
-        graft.streaming.Ingest.removeSeries(spark, dirOf(k), tomb))
+      pools.indices.foreach(k => Ingest.compact(spark, dirOf(k),
+        maxFiles = Int.MaxValue, dropped = Some(tomb)))
       meta.removeDropped(tomb)
       meta.persistTo(spark, dirOf(0))
       meta.bumpGeneration(spark, dirOf(0))
@@ -391,13 +391,8 @@ final class PoolCluster(spark: org.apache.spark.sql.SparkSession,
           .foreach(m => throw AccessError(m))
         if (!ds.ignoreThreshold) {
           val counts = targets.map(_.shardsMatchCount(ds, user))
-          val m = counts.map(_._1).sum
-          val t = counts.map(_._2).sum
-          val frac = if (t == 0) 0.0 else m.toDouble / t
-          if (m > 0 && frac >= meta.dropThreshold)
-            throw QueryError(String.format(java.util.Locale.ROOT,
-              "This query would drop %.2f%% of the shards in pool 0. Add 'set ignore_threshold true' to the query statement if you really want to do this.",
-              Double.box(frac * 100)))
+          graft.parser.Planner.checkDropThreshold("shards",
+            counts.map(_._1).sum, counts.map(_._2).sum, meta.dropThreshold)
         }
         val total = targets.map(_.dropShardsCount(
           ds.copy(ignoreThreshold = true), user)).sum
@@ -588,8 +583,7 @@ final class PoolCluster(spark: org.apache.spark.sql.SparkSession,
     reindex = Some(Reindex(newLookup, target, newIdx))
     afterRouting()
     // 2. bulk copy (sources untouched, target unpublished)
-    val sources = pools.zipWithIndex
-    sources.foreach { case (_, k) =>
+    pools.indices.foreach { k =>
       val srcDir = dirOf(k)
       val moved = migratable(movedOf(srcDir, newIdx, lookupDf))
       if (!moved.isEmpty) {
@@ -615,8 +609,18 @@ final class PoolCluster(spark: org.apache.spark.sql.SparkSession,
     meta.persistTo(spark, dirOf(0))
     meta.bumpGeneration(spark, dirOf(0))
     afterSwitch()
+    finishExpansion(newIdx, lookupDf)
+    newIdx
+  }
+
+  /** Phases 4–5 of an expansion whose target is published and whose
+    * sources mask the moved slots — the tail [[expandPhased]] runs
+    * and [[recoverExpansion]] re-runs after a crash. Every step is
+    * idempotent, so a re-run over a partly finished tail is safe. */
+  private def finishExpansion(newIdx: Int, lookupDf: DataFrame): Unit = {
     // 4. straggler sweep + physical removal, per source, under lock
-    sources.foreach { case (_, k) => sweepSource(k, newIdx, lookupDf, target) }
+    pools.indices.filter(_ != newIdx)
+      .foreach(k => sweepSource(k, newIdx, lookupDf, pools(newIdx)))
     // 4b. the target inherits the sources' standing rollups — after
     // the sweeps (source rollups are pruned of moved rows by then, so
     // the merged view re-enables exact) and before UNMASK (the
@@ -633,7 +637,6 @@ final class PoolCluster(spark: org.apache.spark.sql.SparkSession,
     meta.config.remove("reindex_mask")
     meta.persistTo(spark, dirOf(0))
     meta.bumpGeneration(spark, dirOf(0))
-    newIdx
   }
 
   /** Backfill the expansion target's rollup dirs at every width any
@@ -681,7 +684,8 @@ final class PoolCluster(spark: org.apache.spark.sql.SparkSession,
         if (fresh.count() > 0)
           Ingest.appendBatch(fresh, dirOf(newIdx),
             target.shardDuration, target.durationLog)
-        Ingest.removeSeries(spark, srcDir, movedNames)
+        Ingest.compact(spark, srcDir, maxFiles = Int.MaxValue,
+          dropped = Some(movedNames))
       }
     }
   }
@@ -708,18 +712,7 @@ final class PoolCluster(spark: org.apache.spark.sql.SparkSession,
         resurrectedInReindex = loadResurrected()
       }
       import spark.implicits._
-      val lookupDf = lookup.toRows.toDF("slot", "pool")
-      pools.indices.filter(_ != newIdx)
-        .foreach(k => sweepSource(k, newIdx, lookupDf, pools(newIdx)))
-      backfillTargetRollups(newIdx)
-      queryView = (pools, None)
-      resurrectLock.synchronized {
-        resurrectedInReindex = Set.empty
-        clearResurrected()
-      }
-      meta.config.remove("reindex_mask")
-      meta.persistTo(spark, dirOf(0))
-      meta.bumpGeneration(spark, dirOf(0))
+      finishExpansion(newIdx, lookup.toRows.toDF("slot", "pool"))
     }
   }
 }

@@ -32,6 +32,17 @@ import graft.engine.SeriesStore
   * the catalog upsert aggregates only the batch (plus a catalog-sized
   * rewrite that only scans the old catalog) — nothing re-scans
   * history.
+  *
+  * Maintenance, every job under the store lock:
+  *   - [[compact]] is the one shard-rewrite pass (the reference's
+  *     optimize, src/siri/optimize.c): it merges fragmented shards and
+  *     physically removes named series (tombstones, resurrected names,
+  *     series moved by a pool expansion) from the shards, the catalog
+  *     and the standing rollups;
+  *   - [[expire]] and [[dropShards]] delete whole shard directories and
+  *     rebuild the catalog from the surviving points.
+  * Every frame the store rewrites (a shard, the catalog, a rollup) is
+  * swapped in by [[swap]].
   */
 object Ingest {
 
@@ -111,17 +122,7 @@ object Ingest {
       }
       .start()
 
-  /** One micro-batch: coerce values to the series' established type,
-    * append points, merge the batch's per-series stats into the
-    * catalog. Runs sequentially per stream (Spark serializes
-    * foreachBatch calls).
-    *
-    * Type rule (siridb_series_ensure_type, src/siri/db/series.c:1141):
-    * the FIRST point ever inserted fixes a series' type; later points
-    * of another type are coerced to it (int<->double casts, strings
-    * parsed leniently), never rejected — so the catalog type can never
-    * silently flip. */
-  /** One monitor per store: the catalog merge below is a
+  /** One monitor per store: the catalog merge in [[appendBatch]] is a
     * read-modify-write (tmp + rename), so concurrent transport inserts
     * must serialize per store exactly like the reference's libuv loop
     * serializes inserts (clserver.c runs them on one thread). The
@@ -140,9 +141,8 @@ object Ingest {
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Integer]()
 
   /** Run `f` under the store's mutation lock — every writer of the
-    * point/catalog files (appendBatch, compact, expire, removeSeries,
-    * the planner's drop shards, the expansion sweep) must serialize
-    * through here. Two layers:
+    * point/catalog files (appendBatch, compact, expire, dropShards,
+    * the expansion sweep) must serialize through here. Two layers:
     *   1. a JVM monitor serializes threads of this process, and
     *   2. a cross-process guard held for the mutation's duration — an
     *      OS file lock on `<store>/.lock` (local filesystems) or an
@@ -164,7 +164,7 @@ object Ingest {
     storeLocks.computeIfAbsent(storeDir, _ => new Object).synchronized {
       val depth: Int = storeLockDepth.getOrDefault(storeDir, 0)
       val guard: Option[AutoCloseable] =
-        if (depth == 0) acquireMutatorGuard(storeDir) else None
+        if (depth == 0) Some(acquireMutatorGuard(storeDir)) else None
       storeLockDepth.put(storeDir, depth + 1)
       try f
       finally {
@@ -174,76 +174,64 @@ object Ingest {
       }
     }
 
-  /** Cross-process half of the store lock: POSIX byte-range lock where
-    * the store is on a local filesystem, an epoch-numbered lease file
-    * everywhere else (hdfs://, s3a://, ... have no POSIX locks — the
-    * round-8 fallback was "deployment contract", which a 100 TB
-    * deployment on exactly those stores never gets to test). */
   /** How long a mutation waits for a foreign guard before refusing.
-    * 0 = refuse immediately (round-8 behavior). */
-  @volatile private[graft] var lockWaitMs: Long =
-    sys.env.get("SPARK_GRAFT_LOCK_WAIT_MS").map(_.toLong).getOrElse(10000L)
+    * 0 = refuse immediately (tests set it to pin the refusal). */
+  @volatile private[graft] var lockWaitMs: Long = 10000L
 
-  private def acquireMutatorGuard(storeDir: String): Option[AutoCloseable] = {
+  private def acquireMutatorGuard(storeDir: String): AutoCloseable = {
     val deadline = System.currentTimeMillis() + lockWaitMs
-    while (true) {
-      try return acquireMutatorGuardOnce(storeDir)
+    var guard: AutoCloseable = null
+    while (guard == null)
+      try guard = acquireMutatorGuardOnce(storeDir)
       catch {
         case e: graft.parser.QueryError =>
           val left = deadline - System.currentTimeMillis()
           if (left <= 0) throw e
           Thread.sleep(math.min(100L, left))
       }
-    }
-    None // unreachable
+    guard
   }
 
-  private def acquireMutatorGuardOnce(
-      storeDir: String): Option[AutoCloseable] = {
+  /** Cross-process half of the store lock: POSIX byte-range lock where
+    * the store is on a local filesystem, an epoch-numbered lease file
+    * everywhere else (hdfs://, s3a://, ... have no POSIX locks — the
+    * round-8 fallback was "deployment contract", which a 100 TB
+    * deployment on exactly those stores never gets to test). */
+  private def acquireMutatorGuardOnce(storeDir: String): AutoCloseable = {
     val local =
       if (storeDir.startsWith("file:")) Some(storeDir.stripPrefix("file:"))
       else if (!storeDir.contains("://")) Some(storeDir)
       else None
     local.filter(_ => !forceLeaseForTests) match {
-      case Some(dir) => acquireOsLock(dir).map { case (ch, l) =>
-        () => { try l.release() finally ch.close() }
-      }
-      case None => Some(acquireLease(storeDir))
+      case Some(dir) => acquireOsLock(dir)
+      case None => acquireLease(storeDir)
     }
   }
 
-  /** Try the OS lock; None when the store is not on a local filesystem.
+  /** One attempt at the OS lock on `<dir>/.lock` (`dir` a local path).
     * A held lock (another process mid-mutation, or a foreign channel in
     * this JVM — the in-JVM analog tryLock signals via
-    * OverlappingFileLockException) is a loud refusal, not a wait: the
-    * deployment regime is ONE mutating process, so contention here is a
-    * misconfiguration to surface, not a queue to join. */
-  private def acquireOsLock(storeDir: String)
-      : Option[(java.nio.channels.FileChannel, java.nio.channels.FileLock)] = {
-    val local =
-      if (storeDir.startsWith("file:")) Some(storeDir.stripPrefix("file:"))
-      else if (!storeDir.contains("://")) Some(storeDir)
-      else None
-    local.map { dir =>
-      val p = java.nio.file.Paths.get(dir)
-      java.nio.file.Files.createDirectories(p)
-      val ch = java.nio.channels.FileChannel.open(p.resolve(".lock"),
-        java.nio.file.StandardOpenOption.CREATE,
-        java.nio.file.StandardOpenOption.WRITE)
-      val lock =
-        try ch.tryLock()
-        catch {
-          case _: java.nio.channels.OverlappingFileLockException => null
-        }
-      if (lock == null) {
-        ch.close()
-        throw graft.parser.QueryError(
-          s"Store '$dir' is being mutated by another process " +
-            "(.lock is held); this database serves one mutating process " +
-            "per store")
+    * OverlappingFileLockException) throws at once; the caller,
+    * [[acquireMutatorGuard]], retries until [[lockWaitMs]] runs out. */
+  private def acquireOsLock(dir: String): AutoCloseable = {
+    val p = java.nio.file.Paths.get(dir)
+    java.nio.file.Files.createDirectories(p)
+    val ch = java.nio.channels.FileChannel.open(p.resolve(".lock"),
+      java.nio.file.StandardOpenOption.CREATE,
+      java.nio.file.StandardOpenOption.WRITE)
+    val lock =
+      try ch.tryLock()
+      catch {
+        case _: java.nio.channels.OverlappingFileLockException => null
       }
-      (ch, lock)
+    if (lock == null) {
+      ch.close()
+      throw graft.parser.QueryError(
+        s"Store '$dir' is being mutated by another process " +
+          "(.lock is held); this database serves one mutating process " +
+          "per store")
     }
+    () => { try lock.release() finally ch.close() }
   }
 
   /** Test hook: route local-filesystem stores through the lease path
@@ -253,8 +241,7 @@ object Ingest {
   /** Lease TTL. A mutation outliving its TTL without a renewal (the
     * holder renews at TTL/3 from a daemon thread) can be superseded —
     * generous by default so only a dead process's lease ever expires. */
-  @volatile private[graft] var leaseTtlMs: Long =
-    sys.env.get("SPARK_GRAFT_LEASE_TTL_MS").map(_.toLong).getOrElse(600000L)
+  @volatile private[graft] var leaseTtlMs: Long = 600000L
 
   /** This process's mutator identity (pid@host plus a JVM nonce). */
   private[graft] val mutatorId: String =
@@ -415,6 +402,16 @@ object Ingest {
     }
   }
 
+  /** One micro-batch: coerce values to the series' established type,
+    * append points, merge the batch's per-series stats into the
+    * catalog. Runs sequentially per stream (Spark serializes
+    * foreachBatch calls).
+    *
+    * Type rule (siridb_series_ensure_type, src/siri/db/series.c:1141):
+    * the FIRST point ever inserted fixes a series' type; later points
+    * of another type are coerced to it (int<->double casts, strings
+    * parsed leniently), never rejected — so the catalog type can never
+    * silently flip. */
   def appendBatch(batch: DataFrame, storeDir: String, shardDuration: Long,
       durationLog: Long = 86400L): Unit =
     withStoreLock(storeDir) {
@@ -490,14 +487,25 @@ object Ingest {
     // one write: the old catalog minus the batch's series (an
     // anti-join against the broadcast batch names, so the catalog is
     // only scanned, never shuffled) plus the merged rows
-    val catPath = catalogPath(storeDir)
-    val fs = new Path(storeDir).getFileSystem(spark.sessionState.newHadoopConf())
-    val tmp = new Path(catPath + ".tmp")
-    existing.join(broadcast(touched.select(col("series"))), Seq("series"), "left_anti")
-      .unionByName(touched)
-      .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    fs.delete(new Path(catPath), true)
-    fs.rename(tmp, new Path(catPath))
+    swap(spark, new Path(catalogPath(storeDir)),
+      existing.join(broadcast(touched.select(col("series"))), Seq("series"), "left_anti")
+        .unionByName(touched))
+  }
+
+  /** Replace the frame stored at `dir` with `rows`: one `coalesce(1)`
+    * write to `<dir><tmpSuffix>`, then delete and rename. Every rewrite
+    * of a store frame (a shard, the catalog, a rollup) goes through
+    * here; the caller holds the store lock. Shard rewrites pass
+    * ".compact", the name by which a compaction's write is told apart
+    * in a query plan (perfbench's trace counts compaction passes by
+    * it). */
+  private def swap(spark: SparkSession, dir: Path, rows: DataFrame,
+      tmpSuffix: String = ".tmp"): Unit = {
+    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
+    val tmp = new Path(dir.toString + tmpSuffix)
+    rows.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+    fs.delete(dir, true)
+    fs.rename(tmp, dir)
   }
 
   /** siridb_series_ensure_type's coercion (series.c:1141-1216) of one
@@ -646,20 +654,26 @@ object Ingest {
         col("val_str"), col("pid"))
   }
 
-  /** Shard compaction — the analog of the reference's background
-    * optimize (src/siri/optimize.c): every micro-batch append leaves
-    * one file per shard per batch; this maintenance job rewrites each
-    * shard directory that has accumulated more than `maxFiles`
-    * fragments into a single sorted file (series, ts, pid order — the
-    * read-side ordering), so scans stay sequential as a store ages.
-    * `dropped` (the tombstone name frame from `drop series`) is
-    * anti-joined during the rewrite, physically purging dropped
-    * series the way the reference's optimize drops their blocks.
-    * Returns the number of compacted shards. */
+  /** The store's one shard-rewrite pass — the analog of the reference's
+    * background optimize (src/siri/optimize.c), which rewrites the
+    * shards that need it and drops purged series' blocks in the same
+    * pass. A shard is rewritten when it has accumulated more than
+    * `maxFiles` fragments (every append leaves one file per touched
+    * shard) or holds a `dropped` series: into one file sorted by
+    * (series, ts, pid), the read-side order, without the dropped
+    * series' rows; a shard left empty is deleted. A dropped series
+    * leaves the store entirely, so its catalog and standing-rollup
+    * rows go too (an anti-join each — no pass over the points).
+    *
+    * `dropped` is a single-column `series` frame: the tombstones of
+    * `drop series`, resurrected names, or the series a pool expansion
+    * moved away (the moved series were appended to their new pool
+    * first, so a crash mid-pass leaves duplicates to re-remove, never
+    * lost points). A caller that only removes names passes
+    * `maxFiles = Int.MaxValue`, so no unrelated shard is rewritten.
+    * Returns the number of shards rewritten or deleted. */
   def compact(spark: SparkSession, storeDir: String, maxFiles: Int = 4,
       dropped: Option[DataFrame] = None): Int =
-    // shard rewrite (delete + rename) must not interleave with an
-    // append or expiry on the same store
     withStoreLock(storeDir) {
       compactLocked(spark, storeDir, maxFiles, dropped)
     }
@@ -668,39 +682,70 @@ object Ingest {
       maxFiles: Int, dropped: Option[DataFrame]): Int = {
     val fs = new Path(pointsPath(storeDir))
       .getFileSystem(spark.sessionState.newHadoopConf())
-    val fragmented = shardDirs(spark, storeDir).filter { case (_, _, p) =>
-      val n = fs.listStatus(p).count(_.getPath.getName.endsWith(".parquet"))
-      n > maxFiles || (dropped.isDefined && n > 0)
+    // materialize the names BEFORE mutating: `dropped` is typically a
+    // plan over THIS store's catalog (movedOf), whose file listing
+    // froze at DataFrame creation — re-executing it after the catalog
+    // swap below would FILE_NOT_EXIST. Catalog-sized at most.
+    val names = dropped.map(_.select(col("series")).localCheckpoint(eager = true))
+    // one job over the points relation finds the shards holding a
+    // dropped name: (sgroup, shard) -> whether every row is dropped
+    val hit: Map[(String, Long), Boolean] = names match {
+      case Some(n) if existsNonEmpty(spark, pointsPath(storeDir)) =>
+        spark.read.parquet(pointsPath(storeDir))
+          .join(broadcast(n.withColumn("hit", lit(1))), Seq("series"), "left")
+          .groupBy(col("sgroup"), col("shard").cast("long"))
+          .agg(count(col("hit")).as("hits"), count(lit(1)).as("rows"))
+          .where(col("hits") > 0)
+          .collect()
+          .map(r => (r.getString(0), r.getLong(1)) -> (r.getLong(2) == r.getLong(3)))
+          .toMap
+      case _ => Map.empty
     }
-    fragmented.foreach { case (_, _, p) =>
-      val tmp = new Path(p.toString + ".compact")
-      val raw = spark.read.parquet(p.toString)
-      val kept = dropped.fold(raw)(d =>
-        raw.join(d.select(col("series")), Seq("series"), "left_anti"))
-      kept.sort(col("series"), col("ts"), col("pid"))
-        .coalesce(1)
-        .write.mode("overwrite").parquet(tmp.toString)
-      fs.delete(p, true)
-      fs.rename(tmp, p)
+    val rewritten = shardDirs(spark, storeDir).filter { case (g, sid, p) =>
+      hit.contains((g, sid)) ||
+        fs.listStatus(p).count(_.getPath.getName.endsWith(".parquet")) > maxFiles
     }
-    fragmented.length
+    rewritten.foreach { case (g, sid, p) =>
+      hit.get((g, sid)) match {
+        case Some(true) => fs.delete(p, true)
+        case touched =>
+          val raw = spark.read.parquet(p.toString)
+          val kept =
+            if (touched.isEmpty) raw
+            else raw.join(broadcast(names.get), Seq("series"), "left_anti")
+          swap(spark, p, kept.sort(col("series"), col("ts"), col("pid")),
+            ".compact")
+      }
+    }
+    names.foreach { n =>
+      swap(spark, new Path(catalogPath(storeDir)),
+        catalog(spark, storeDir).join(broadcast(n), Seq("series"), "left_anti"))
+      // a moved series' new pool picked its rollup rows up on append
+      // (rollupAppend), so keeping them here would double-count in a
+      // cluster-merged rollup view
+      rollupDirs(spark, storeDir).foreach { case (_, p) =>
+        rewriteRollup(spark, p, spark.read.parquet(p.toString)
+          .join(broadcast(n), Seq("series"), "left_anti"))
+      }
+    }
+    rewritten.length
   }
+
+  /** Count of expiry passes (each is an O(#shards) directory walk) —
+    * lets specs pin that the insert path's retention gate holds. */
+  val expireRuns = new java.util.concurrent.atomic.AtomicLong(0L)
 
   /** Shard expiration (TTL) — the retention job behind
     * `alter database set expiration_num <t>`
     * (src/siri/db/db.c:865-878, itest/test_expiration.py): deletes
     * whole shard directories whose time range ended before
     * `now - expiration`, then rebuilds the catalog from the surviving
-    * shards (the reference likewise re-indexes after expiry). Returns
-    * the number of dropped shards. */
-  /** Count of expiry passes (each is an O(#shards) directory walk) —
-    * lets specs pin that the insert path's retention gate holds. */
-  val expireRuns = new java.util.concurrent.atomic.AtomicLong(0L)
-
+    * shards (the reference likewise re-indexes after expiry). `group`
+    * is the shard group the expiration applies to: expiration_num
+    * expires numeric ("num") shards, expiration_log "log" shards
+    * (db.c). Returns the number of dropped shards. */
   def expire(spark: SparkSession, storeDir: String, expiration: Long,
       now: Long, shardDuration: Long = 86400L, durationLog: Long = 86400L,
-      /** which shard group the expiration applies to: expiration_num
-        * expires numeric shards, expiration_log log shards (db.c). */
       group: String = "num"): Int = {
     expireRuns.incrementAndGet()
     // expiry deletes shard dirs and rebuilds the catalog — same
@@ -723,7 +768,7 @@ object Ingest {
       .map(_._3)
     old.foreach(p => fs.delete(p, true))
     if (old.nonEmpty) {
-      rebuildCatalog(spark, storeDir)
+      rebuildCatalog(spark, storeDir, keepEmptied = false)
       // a standing rollup keeps serving what the raw store just
       // dropped unless it is pruned to the same cutoff. Only the num
       // group prunes: rollups are only ever SERVED for numeric series
@@ -737,15 +782,36 @@ object Ingest {
     old.length
   }
 
-  /** Rebuild catalog stats from the surviving points (one pass, off
-    * the ingest hot path — callers are maintenance jobs: expiry,
-    * re-index). Caller must hold the store lock. */
-  private def rebuildCatalog(spark: SparkSession, storeDir: String): Unit = {
+  /** `drop shards` (exit_drop_shards, listener.c:3052-3152): delete the
+    * given shard directories, then rebuild the catalog and recompute
+    * the standing rollups from the surviving points. A series that
+    * loses every point stays listed at length 0 — the reference keeps
+    * the series object, only its points are gone. The dropped set is
+    * an arbitrary cexpr match (by sid, size, ...), not a time prefix,
+    * so unlike [[expire]] the rollups cannot be pruned by a cutoff —
+    * serving pre-aggregates of deleted shards would resurrect them. */
+  def dropShards(spark: SparkSession, storeDir: String,
+      shards: Seq[Path]): Unit = withStoreLock(storeDir) {
     val fs = new Path(pointsPath(storeDir))
       .getFileSystem(spark.sessionState.newHadoopConf())
-    val pts = points(spark, storeDir)
-    val cat = catalog(spark, storeDir).select(col("series"), col("type"))
-    val typed = pts.join(cat, Seq("series"), "left")
+    shards.foreach(p => fs.delete(p, true))
+    if (shards.nonEmpty) {
+      rebuildCatalog(spark, storeDir, keepEmptied = true)
+      rollupRecompute(spark, storeDir)
+    }
+  }
+
+  /** Rebuild catalog stats from the surviving points (one pass over the
+    * store, off the ingest hot path — run only after whole shards were
+    * deleted: [[expire]], [[dropShards]]). A series none of whose
+    * points survive leaves the catalog, unless `keepEmptied`: then it
+    * stays listed at length 0 with its other fields as they were.
+    * Caller must hold the store lock. */
+  private def rebuildCatalog(spark: SparkSession, storeDir: String,
+      keepEmptied: Boolean): Unit = {
+    val old = catalog(spark, storeDir)
+    val typed = points(spark, storeDir)
+      .join(old.select(col("series"), col("type")), Seq("series"), "left")
       .withColumn("type", coalesce(col("type"), lit("float")))
     val ord = struct(col("ts"), col("pid"))
     val rebuilt = typed.withColumn("vstr", valueString(col("type")))
@@ -755,56 +821,10 @@ object Ingest {
         min_by(col("vstr"), ord).as("first_val"),
         max_by(col("vstr"), ord).as("last_val"))
       .withColumn("pool", SeriesStore.poolOf("series"))
-    val catPath = new Path(catalogPath(storeDir))
-    val tmp = new Path(catalogPath(storeDir) + ".tmp")
-    rebuilt.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    fs.delete(catPath, true)
-    fs.rename(tmp, catPath)
-  }
-
-  /** Physically remove a set of series from a store: every shard
-    * holding any of them is rewritten without their rows (the same
-    * shard-granular rewrite as compaction) and the catalog is rebuilt.
-    * This is the removal half of pool re-index (reindex.c) — the
-    * moved series were appended to their new pool first, so a crash
-    * between the two steps leaves duplicates to re-remove, never data
-    * loss. `moved` is a single-column `series` frame; it stays
-    * distributed (broadcast left-anti join per shard). */
-  def removeSeries(spark: SparkSession, storeDir: String,
-      moved: DataFrame): Unit = withStoreLock(storeDir) {
-    val fs = new Path(pointsPath(storeDir))
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    // materialize the name list BEFORE mutating: `moved` is typically
-    // a plan over THIS store's catalog (movedOf), whose parquet file
-    // listing froze at DataFrame creation — re-executing it after
-    // rebuildCatalog below replaces those files would FILE_NOT_EXIST
-    // (bit the rollup-prune pass when a swept source carried a
-    // rollup). O(#moved series) rows, catalog-sized.
-    val movedKeys = moved.select(col("series")).localCheckpoint(true)
-    shardDirs(spark, storeDir).foreach { case (_, _, p) =>
-      val raw = spark.read.parquet(p.toString)
-      val touched = !raw.join(movedKeys, Seq("series"), "left_semi").isEmpty
-      if (touched) {
-        val tmp = new Path(p.toString + ".reindex")
-        val kept = raw.join(movedKeys, Seq("series"), "left_anti")
-        if (kept.isEmpty) fs.delete(p, true)
-        else {
-          kept.sort(col("series"), col("ts"), col("pid"))
-            .coalesce(1)
-            .write.mode("overwrite").parquet(tmp.toString)
-          fs.delete(p, true)
-          fs.rename(tmp, p)
-        }
-      }
-    }
-    rebuildCatalog(spark, storeDir)
-    // the moved series' rollup rows leave with them — their new pool's
-    // rollup picked them up on append (rollupAppend), so keeping them
-    // here would double-count in a cluster-merged rollup view
-    rollupDirs(spark, storeDir).foreach { case (_, p) =>
-      rewriteRollup(spark, p, spark.read.parquet(p.toString)
-        .join(movedKeys, Seq("series"), "left_anti"))
-    }
+    val emptied = old.join(rebuilt.select(col("series")), Seq("series"), "left_anti")
+      .withColumn("length", lit(0L))
+    swap(spark, new Path(catalogPath(storeDir)),
+      if (keepEmptied) rebuilt.unionByName(emptied) else rebuilt)
   }
 
   // ------------------------------------------------------------------
@@ -821,9 +841,10 @@ object Ingest {
   //     keys combine correctly for count/sum/min/max);
   //   * expire prunes buckets whose window overlaps the expired range
   //     and recomputes the one straddling label from survivors;
-  //   * drop shards (arbitrary cexpr) recomputes the view outright —
+  //   * dropShards (arbitrary cexpr) recomputes the view outright —
   //     the same full-pass cost class as its catalog rebuild;
-  //   * removeSeries (pool re-index) drops the moved series' rows.
+  //   * compact drops the rows of the series it removes (tombstones,
+  //     resurrected names, series moved by a pool expansion).
   //
   // A dir containing `_spark_metadata` belongs to a live Structured
   // Streaming sink (Rollup.startBucketed): its transaction log owns
@@ -852,16 +873,9 @@ object Ingest {
     Seq(col("series"), col("bucket"), col("n"), col("sum"), col("min"),
       col("max"))
 
-  /** Atomic replace of one rollup dir (tmp + rename, like the catalog). */
+  /** Replace one rollup dir's rows (caller holds the store lock). */
   private def rewriteRollup(spark: SparkSession, dir: Path,
-      rows: DataFrame): Unit = {
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    val tmp = new Path(dir.toString + ".tmp")
-    rows.select(RollupCols: _*).coalesce(1)
-      .write.mode("overwrite").parquet(tmp.toString)
-    fs.delete(dir, true)
-    fs.rename(tmp, dir)
-  }
+      rows: DataFrame): Unit = swap(spark, dir, rows.select(RollupCols: _*))
 
   /** Append one insert batch's delta rows to every store-owned rollup
     * (caller holds the store lock). `pts` is the coerced batch —
@@ -924,7 +938,7 @@ object Ingest {
     * where the deleted set is an arbitrary cexpr match, not a time
     * prefix. Same cost class as the catalog rebuild the reference
     * performs after shard drops. */
-  private[graft] def rollupRecompute(spark: SparkSession,
+  private def rollupRecompute(spark: SparkSession,
       storeDir: String): Unit = {
     val dirs = rollupDirs(spark, storeDir)
     if (dirs.isEmpty) return

@@ -90,11 +90,63 @@ class IngestSpec extends AnyFunSuite {
       PointIn("gone", 20L, 2.0, "float", 2),
       PointIn("keep", 30L, 3.0, "float", 3)).toDF(),
       dir, shardDuration = 100L)
+    Ingest.rollupBackfill(spark, dir, Seq(20L))
     val tombstones = Seq("gone").toDF("series")
     assert(Ingest.compact(spark, dir, maxFiles = 4, dropped = Some(tombstones)) === 1)
     val left = Ingest.points(spark, dir).select("series").distinct()
       .collect().map(_.getString(0)).toSet
     assert(left === Set("keep"))
+    // the purged series leaves the catalog and the standing rollup too
+    val api = new graft.server.ApiCore(spark, dir)
+    assert(api.runQuery("count series", 1L, "iris").toString ===
+      """{"columns":["series"],"rows":[[1]]}""")
+    val rolled = spark.read.parquet(s"${Ingest.rollupPath(dir)}/20")
+      .select("series").distinct().collect().map(_.getString(0)).toSet
+    assert(rolled === Set("keep"))
+  }
+
+  test("removing a series costs the same Spark jobs in a 4-shard and a 16-shard store") {
+    import spark.implicits._
+    // a background series fills every shard; the removed one lives in
+    // shard 0 only, so the pass rewrites one shard either way
+    def removalJobs(shards: Int): Int = {
+      val dir = Files.createTempDirectory(s"graft-remove$shards").toString
+      Ingest.appendBatch(((0 until shards).map(s =>
+        PointIn("bg", s * 100L, 1.0, "float", s)) :+
+        PointIn("gone", 50L, 2.0, "float", shards)).toDF(),
+        dir, shardDuration = 100L)
+      val names = Seq("gone").toDF("series")
+      val jobs = SparkTestSession.jobsOf {
+        Ingest.compact(spark, dir, maxFiles = Int.MaxValue, dropped = Some(names))
+      }
+      assert(Ingest.points(spark, dir).collect().map(_.getString(0)).toSet ===
+        Set("bg"))
+      assert(Ingest.catalog(spark, dir).collect().map(_.getString(0)).toSeq ===
+        Seq("bg"))
+      jobs
+    }
+    val (small, large) = (removalJobs(4), removalJobs(16))
+    info(s"removal: $small Spark jobs at 4 shards, $large at 16")
+    assert(small === large)
+  }
+
+  test("drop shards keeps the catalog exact — bare count() and count series length match the points") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-dropcat").toString
+    Ingest.appendBatch(((0 until 40).map(i =>
+      PointIn("cpu", i * 10L, i.toDouble, "float", i)) ++
+      (0 until 10).map(i => PointIn("mem", i * 40L, 1.0, "float", 100L + i))).toDF(),
+      dir, shardDuration = 100L)
+    val api = new graft.server.ApiCore(spark, dir)
+    def q(s: String) = api.runQuery(s, 1L, "iris").toString
+    assert(q("drop shards where sid == 3 set ignore_threshold true").contains(
+      "Successfully dropped 1 shards."))
+    // the skip-points path answers from the catalog; `after 0` reads
+    // the points
+    assert(q("select count() from 'cpu'") === q("select count() from 'cpu' after 0"))
+    assert(q("select last() from 'cpu'") === q("select last() from 'cpu' after 0"))
+    assert(q("count series length") ===
+      s"""{"columns":["series_length"],"rows":[[${Ingest.points(spark, dir).count()}]]}""")
   }
 
   test("insert coerces to the established series type — series.c:1141") {
