@@ -23,11 +23,13 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   *
   * Registered as `graft_dist2` by Tables.sessionBuilder via
   * SparkSessionExtensions.injectFunction. Whole-array nulls propagate
-  * null (BinaryExpression's null-safe contract); mismatched dimensions
-  * yield NULL — exactly what the zip_with HOF does (the shorter side
-  * pads with null, poisoning the fold) — so a malformed vector
-  * surfaces as a detectable null, never a truncated-but-plausible
-  * distance.
+  * null (BinaryExpression's null-safe contract); a null element yields
+  * NULL, and so do mismatched dimensions — exactly what the zip_with
+  * HOF does (a null difference, or the shorter side's null padding,
+  * poisons the fold) — so a malformed vector surfaces as a detectable
+  * null, never a truncated-but-plausible distance. Elements are
+  * null-checked only when an input type has `containsNull = true`;
+  * over non-null element types the loop is unchanged.
   */
 case class SquaredDistance(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -49,6 +51,11 @@ case class SquaredDistance(left: Expression, right: Expression)
 
   override def prettyName: String = "graft_dist2"
 
+  private def elemNulls(e: Expression): Boolean =
+    e.dataType.asInstanceOf[ArrayType].containsNull
+  private lazy val leftNulls = elemNulls(left)
+  private lazy val rightNulls = elemNulls(right)
+
   override protected def nullSafeEval(l: Any, r: Any): Any = {
     val a = l.asInstanceOf[ArrayData]
     val b = r.asInstanceOf[ArrayData]
@@ -58,6 +65,8 @@ case class SquaredDistance(left: Expression, right: Expression)
       var s = 0.0
       var i = 0
       while (i < n) {
+        if (leftNulls && a.isNullAt(i) || rightNulls && b.isNullAt(i))
+          return null
         val d = a.getDouble(i) - b.getDouble(i)
         s += d * d
         i += 1
@@ -72,6 +81,12 @@ case class SquaredDistance(left: Expression, right: Expression)
       val s = ctx.freshName("s")
       val i = ctx.freshName("i")
       val d = ctx.freshName("d")
+      val nullAt = Seq(leftNulls -> a, rightNulls -> b)
+        .collect { case (true, x) => s"$x.isNullAt($i)" }
+      // a null element ends the fold with NULL
+      val nullCheck =
+        if (nullAt.isEmpty) ""
+        else s"if (${nullAt.mkString(" || ")}) { ${ev.isNull} = true; break; }"
       s"""
          |int $n = $a.numElements();
          |if ($b.numElements() != $n) {
@@ -79,6 +94,7 @@ case class SquaredDistance(left: Expression, right: Expression)
          |} else {
          |  double $s = 0.0;
          |  for (int $i = 0; $i < $n; $i++) {
+         |    $nullCheck
          |    double $d = $a.getDouble($i) - $b.getDouble($i);
          |    $s += $d * $d;
          |  }

@@ -19,7 +19,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * order), so norms are bit-identical to the DuckDB oracles.
   *
   * Registered as `graft_norm2` by Tables.sessionBuilder. A null
-  * array propagates null (UnaryExpression's null-safe contract). */
+  * array propagates null (UnaryExpression's null-safe contract), and
+  * so does a null element, like the HOF's `a + x * x` over a null x.
+  * Elements are null-checked only when the input type has
+  * `containsNull = true`; over non-null element types the loop is
+  * unchanged. */
 case class SquaredNorm(child: Expression) extends UnaryExpression {
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
@@ -32,12 +36,18 @@ case class SquaredNorm(child: Expression) extends UnaryExpression {
 
   override def prettyName: String = "graft_norm2"
 
+  private lazy val elemNulls =
+    child.dataType.asInstanceOf[ArrayType].containsNull
+
+  override def nullable: Boolean = child.nullable || elemNulls
+
   override protected def nullSafeEval(input: Any): Any = {
     val a = input.asInstanceOf[ArrayData]
     val n = a.numElements()
     var s = 0.0
     var i = 0
     while (i < n) {
+      if (elemNulls && a.isNullAt(i)) return null
       val x = a.getDouble(i)
       s += x * x
       i += 1
@@ -51,10 +61,15 @@ case class SquaredNorm(child: Expression) extends UnaryExpression {
       val s = ctx.freshName("s")
       val i = ctx.freshName("i")
       val x = ctx.freshName("x")
+      // a null element ends the fold with NULL
+      val nullCheck =
+        if (elemNulls) s"if ($a.isNullAt($i)) { ${ev.isNull} = true; break; }"
+        else ""
       s"""
          |int $n = $a.numElements();
          |double $s = 0.0;
          |for (int $i = 0; $i < $n; $i++) {
+         |  $nullCheck
          |  double $x = $a.getDouble($i);
          |  $s += $x * $x;
          |}

@@ -94,17 +94,18 @@ final class MetaStore {
   }
 
   /** Dropped-series tombstones (the analog of dropped-series purge,
-    * src/siri/optimize.c) as a materialized name frame — anti-joined
-    * against the catalog, so a read never filters by a driver-side
-    * name list. `localCheckpoint` pins the point-in-time snapshot. */
+    * src/siri/optimize.c) as a materialized name frame: the optimize
+    * purge removes them by anti-join, and the parquet-demo catalog is
+    * anti-joined with it. `localCheckpoint` pins the point-in-time
+    * snapshot. */
   def droppedDf: Option[org.apache.spark.sql.DataFrame] = dropped.map(_.df)
 
-  /** The same names as a driver-side set, so an insert's resurrect
-    * check is a Set lookup: no Spark job runs on the insert path
-    * unless a name matches. Collected on first use after each
-    * tombstone change, so a process that never inserts (a reader
-    * reloading meta) never pays for it. Bounded by the names awaiting
-    * the next optimize purge, not by the catalog. */
+  /** The same names as a driver-side set: an insert's resurrect check
+    * is a Set lookup (no Spark job runs on the insert path unless a
+    * name matches), and a store view filters them out of its catalog
+    * snapshot on the driver. Collected once on first use after each
+    * tombstone change; bounded by the names awaiting the next optimize
+    * purge, not by the catalog. */
   def droppedNames: Set[String] = dropped.fold(Set.empty[String])(_.names)
 
   /** A tombstone frame and its lazily collected name set, swapped as
@@ -159,15 +160,17 @@ final class MetaStore {
     * in-memory generation on every request and reloads the metastore
     * + store-derived caches when it lags (ApiCore.syncWithStore) —
     * without it, a process would serve stale catalogs and miss the
-    * other's DDL forever. -1 when never written. */
+    * other's DDL forever. -1 when never written, or while a
+    * [[bumpGeneration]] is between its delete and its rename (a
+    * process's own bump advances its in-memory generation first, and
+    * another process's is seen on the next read). */
   def diskGeneration(spark: SparkSession, dir: String): Long = {
     val p = new Path(s"$dir/meta/generation")
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) -1L
-    else {
+    try {
       val in = fs.open(p)
       try in.readLong() finally in.close()
-    }
+    } catch { case _: java.io.FileNotFoundException => -1L }
   }
 
   /** Advance the generation past both the in-memory counter and

@@ -1,12 +1,13 @@
 package graft.parser
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType, StringType}
 
 import graft.engine.{Pipeline, SeriesMatch, SeriesStore}
 import graft.engine.Pipeline._
 import graft.engine.SeriesMatch.{All, Env, Name, Sel, Regex => SelRegex}
+import graft.streaming.Ingest.CatalogSnapshot
 
 /** Turns a parsed statement into one Catalyst plan over the typed
   * point frames — the Spark analog of the reference's listener
@@ -19,9 +20,13 @@ import graft.engine.SeriesMatch.{All, Env, Name, Sel, Regex => SelRegex}
   * the driver's events-derived families, overridable (e.g. with an
   * Ingest store — see graft.server.HttpApi). Each family frame is built
   * on first use: constructing a DataFrame analyses its plan, and most
-  * selects read one family of a store served fresh per query. */
+  * selects read one family of a store served fresh per query. `cat`
+  * is the store's live catalog snapshot; `over` is the same split
+  * against some of its rows (a selection's), so the points join
+  * carries only those catalog rows. */
 final class Frames(f0: => DataFrame, i0: => DataFrame, s0: => DataFrame,
-    m0: => DataFrame, val cat: DataFrame) {
+    m0: => DataFrame, val cat: CatalogSnapshot,
+    val over: CatalogSnapshot => Frames) {
   lazy val f: DataFrame = f0
   lazy val i: DataFrame = i0
   lazy val s: DataFrame = s0
@@ -92,10 +97,15 @@ final case class EngineEnv(
     * over all points, so it is persisted on first use — every query
     * consults the catalog at least twice (type dispatch + where/sel
     * filtering) and a 100 TB store must not pay a full scan per
-    * consult. Catalog size is O(#series), safely cacheable. The
-    * Ingest path is already a tiny incrementally-maintained parquet. */
+    * consult. Catalog size is O(#series), safely cacheable. An Ingest
+    * store's frames carry its driver snapshot (Ingest.CatalogSnapshot),
+    * already without the tombstoned series. */
   lazy val catalog: DataFrame =
-    frames.map(_.cat).getOrElse(Planner.cachedCatalog(spark, dir))
+    frames.map(_.cat.df).getOrElse(Planner.cachedCatalog(spark, dir))
+
+  /** A store's live catalog rows on the driver (None for the
+    * parquet-demo catalog). */
+  def snapshot: Option[CatalogSnapshot] = frames.map(_.cat)
 
   /** Snapshot of the (mutable) metastore for series matching. */
   def matchEnv: Env = Env(
@@ -110,11 +120,12 @@ final case class EngineEnv(
         .getOrElse(Seq.empty[(String, String)].toDF("tag", "series"))
     })
 
-  /** Catalog minus dropped series: anti-join against the materialized
-    * tombstone frame — never a driver-side name list, so a drop of
-    * every series at 10M series stays distributed. */
+  /** Catalog minus dropped series. A store view filtered its snapshot
+    * on the driver already; the parquet-demo catalog anti-joins the
+    * materialized tombstone frame. */
   def catalogLive: DataFrame =
-    meta.droppedDf.fold(catalog)(d => catalog.join(d, Seq("series"), "left_anti"))
+    if (frames.isDefined) catalog
+    else meta.droppedDf.fold(catalog)(d => catalog.join(d, Seq("series"), "left_anti"))
 }
 
 object Planner {
@@ -122,8 +133,8 @@ object Planner {
   /** Process-level owner of the persisted parquet-demo catalog:
     * EngineEnvs are constructed per query, so the persist must belong
     * to a registry keyed by (session, dir) — one cache entry per
-    * distinct store, however many envs are built over it. (The Ingest
-    * path maintains its own tiny catalog parquet and never persists.) */
+    * distinct store, however many envs are built over it. (An Ingest
+    * store's catalog is a driver snapshot, Ingest.catalogSnapshot.) */
   private val catalogRegistry = scala.collection.concurrent.TrieMap
     .empty[(SparkSession, String), DataFrame]
 
@@ -157,10 +168,13 @@ object Planner {
   }
 
   /** Per-thread memo of the ONE catalog collect a select needs: the
-    * type set (plan dispatch) and the output name list (response
-    * encoding) both derive from the same response-bounded
-    * (series, type) projection, so a select costs one catalog job,
-    * not two (types at plan time + names at encode time). Keyed by
+    * type set (plan dispatch), a store's typed split (the points join
+    * with the selected rows) and the output name list (response
+    * encoding) all derive from the same response-bounded collect of
+    * the selection's catalog rows, so a select collects once, not
+    * twice (types at plan time + names at encode time). Over a store's
+    * driver snapshot the collect starts no job; over the parquet-demo
+    * catalog it is one. Keyed by
     * the selection AST PLUS the store identity (dir + store
     * generation): an engine-level caller touching two databases on one
     * thread without a transport drain must not get one store's cached
@@ -169,14 +183,18 @@ object Planner {
     * query caches after each response. */
   private val selInfoMemo = ThreadLocal.withInitial(
     () => scala.collection.mutable.Map
-      .empty[(String, Long, Sel, Option[Cexpr]), Array[(String, String)]])
+      .empty[(String, Long, Sel, Option[Cexpr]), Seq[Row]])
 
-  private def selInfo(sel: Sel, where: Option[Cexpr],
-      env: EngineEnv): Array[(String, String)] =
+  private def selRows(sel: Sel, where: Option[Cexpr], env: EngineEnv): Seq[Row] =
     selInfoMemo.get().getOrElseUpdate(
       (env.dir, env.meta.storeGeneration.get(), sel, where),
-      selCatalog(Some(sel), where, env).select(col("series"), col("type"))
-        .collect().map(r => (r.getString(0), r.getString(1))))
+      catRows(Some(sel), where, env))
+
+  /** (series, type) of each selected series. */
+  private def selInfo(sel: Sel, where: Option[Cexpr],
+      env: EngineEnv): Seq[(String, String)] =
+    selRows(sel, where, env)
+      .map(r => (r.getAs[String]("series"), r.getAs[String]("type")))
 
   /** Props usable in `where` on series → catalog columns
     * (siridb_series_cexpr_cb, src/siri/db/series.c:85-112). */
@@ -268,10 +286,11 @@ object Planner {
         // second server); pools absent from the fleet default to 1
         val byPool = env.fleet.groupBy(identity).map {
           case (p, ss) => (p.toLong, ss.size.toLong) }
-        val serversCol = byPool.foldLeft(lit(1L)) {
-          case (acc, (p, n)) => when(col("pool") === p, lit(n)).otherwise(acc) }
-        env.catalogLive.groupBy(col("pool"))
-          .agg(max(serversCol).as("servers"), count(lit(1)).as("series"))
+        // series per pool counted from the collected pool column: an
+        // aggregate over the catalog would start jobs
+        poolsOf(env).groupBy(identity).toSeq.sortBy(_._1)
+          .map { case (p, ps) => (p, byPool.getOrElse(p, 1L), ps.size.toLong) }
+          .toDF("pool", "servers", "series")
       case "shards" =>
         // shard view (shard.c's sid/size/start/end; start/end are the
         // bucket bounds, listener.c:2553-2554); server/status/type are
@@ -299,6 +318,10 @@ object Planner {
     }
     where.map(w => base.where(cexprPlain(w))).getOrElse(base)
   }
+
+  /** The live catalog's `pool` column, one entry per series. */
+  private def poolsOf(env: EngineEnv): Seq[Long] =
+    catRows(None, None, env).map(_.getAs[Long]("pool"))
 
   /** Live single-row servers view with the full prop set the reference
     * emits per server (src/siri/db/props.c:204-286) — `list servers`
@@ -367,23 +390,55 @@ object Planner {
       stmt.chains.map(c => c.prefix + m.name + c.suffix).distinct
     case None =>
       // shares the plan-time catalog collect via the selInfo memo
-      val base = selInfo(stmt.sel, stmt.where, env).map(_._1).toSeq.sorted
+      val base = selInfo(stmt.sel, stmt.where, env).map(_._1).sorted
       stmt.chains.flatMap(c => base.map(n => c.prefix + n + c.suffix)).distinct
   }
 
   /** Catalog rows matching a series selection + where predicate. */
-  private def selCatalog(sel: Option[Sel], where: Option[Cexpr], env: EngineEnv): DataFrame = {
-    val cat = env.catalogLive
-    val base = sel match {
-      case None | Some(All) => cat
-      case Some(Name(n)) => cat.where(col("series") === n)
-      case Some(SelRegex(pat, ci)) =>
-        cat.where(col("series").rlike(SeriesMatch.anchored(pat, ci)))
-      case Some(s) =>
-        cat.join(SeriesMatch.eval(s, env.matchEnv), Seq("series"), "left_semi")
+  private def selCatalog(sel: Option[Sel], where: Option[Cexpr], env: EngineEnv): DataFrame =
+    snapRows(sel, where, env).map(_.df).getOrElse {
+      val cat = env.catalogLive
+      val base = sel match {
+        case None | Some(All) => cat
+        case Some(Name(n)) => cat.where(col("series") === n)
+        case Some(SelRegex(pat, ci)) =>
+          cat.where(col("series").rlike(SeriesMatch.anchored(pat, ci)))
+        case Some(s) =>
+          cat.join(SeriesMatch.eval(s, env.matchEnv), Seq("series"), "left_semi")
+      }
+      where.map(w => base.where(cexprCol(w, env))).getOrElse(base)
     }
-    where.map(w => base.where(cexprCol(w, env))).getOrElse(base)
-  }
+
+  /** A selection of all series, a name or a regex over a store's
+    * driver snapshot, filtered in Scala: Catalyst walks a
+    * `LocalRelation`'s rows in every analyzer and optimizer rule, so no
+    * plan may carry more of a 1M-row catalog than the selection. The
+    * regex matches like `rlike` (`find` of the anchored pattern). None
+    * for the parquet-demo catalog and for group, tag and set
+    * selections (SeriesMatch.eval). */
+  private def snapSel(sel: Option[Sel], env: EngineEnv): Option[CatalogSnapshot] =
+    env.snapshot.flatMap { s =>
+      sel match {
+        case None | Some(All) => Some(s)
+        case Some(Name(n)) => Some(s.filter(_ == n))
+        case Some(SelRegex(pat, ci)) =>
+          val re = java.util.regex.Pattern.compile(SeriesMatch.anchored(pat, ci))
+          Some(s.filter(re.matcher(_).find()))
+        case Some(_) => None
+      }
+    }
+
+  /** [[snapSel]] narrowed by the where predicate, also on the driver
+    * (CatalogSnapshot.where). */
+  private def snapRows(sel: Option[Sel], where: Option[Cexpr],
+      env: EngineEnv): Option[CatalogSnapshot] =
+    snapSel(sel, env).map(s => where.fold(s)(w => s.where(cexprCol(w, env))))
+
+  /** The catalog rows of a selection + where predicate: a store's
+    * snapshot rows when the driver can select them, else collected. */
+  private def catRows(sel: Option[Sel], where: Option[Cexpr], env: EngineEnv): Seq[Row] =
+    snapRows(sel, where, env).map(_.rows)
+      .getOrElse(selCatalog(sel, where, env).collect().toSeq)
 
   /** Decide the typed base frame for a selection — the engine analog
     * of the reference's per-series type dispatch. Metadata-sized
@@ -588,18 +643,28 @@ object Planner {
         case "shard_duration" => lit(env.shardDuration).as("shard_duration")
         case c => col(c)
       }
-      selCatalog(sel, where, env)
+      val n = limit.getOrElse(env.meta.listLimit)
+        .min(Int.MaxValue.toLong).toInt // list_limit (db.h:17)
+      // the first n selected snapshot rows are the answer, so the plan
+      // carries only those
+      snapRows(sel, where, env).fold(selCatalog(sel, where, env))(_.take(n).df)
         .select(outCols: _*)
-        .limit(limit.getOrElse(env.meta.listLimit)
-          .min(Int.MaxValue.toLong).toInt) // list_limit (db.h:17)
+        .limit(n)
 
+    // counts come from the selected catalog rows: a filter over a
+    // store's driver snapshot runs on the driver, a Spark aggregate
+    // over it would start two jobs
     case CountStmt("series", sel, where) =>
-      selCatalog(sel, where, env).agg(count(lit(1)).as("series"))
+      import env.spark.implicits._
+      Seq(catRows(sel, where, env).size.toLong).toDF("series")
 
     case CountStmt("series_length", sel, where) =>
+      import env.spark.implicits._
       // skip-points fast path: answered from the catalog, never the
-      // point data (siridb_aggregate_can_skip, aggregate.c:495-510)
-      selCatalog(sel, where, env).agg(sum(col("length")).as("series_length"))
+      // point data (siridb_aggregate_can_skip, aggregate.c:495-510);
+      // NULL over no series, like SUM
+      val lengths = catRows(sel, where, env).map(_.getAs[Long]("length"))
+      Seq(Option.when(lengths.nonEmpty)(lengths.sum)).toDF("series_length")
 
     case CountStmt("groups", _, where) =>
       import env.spark.implicits._
@@ -631,7 +696,8 @@ object Planner {
         .toDF("servers_selected_points")
 
     case CountStmt("pools", _, _) =>
-      env.catalogLive.select(col("pool")).distinct().agg(count(lit(1)).as("pools"))
+      import env.spark.implicits._
+      Seq(poolsOf(env).distinct.length.toLong).toDF("pools")
 
     case CountStmt("shards", _, where) =>
       import env.spark.implicits._
@@ -933,9 +999,11 @@ object Planner {
     // range, no other stages, no merge) never reads point data — the
     // catalog's length/end answer it (siridb_aggregate_can_skip,
     // aggregate.c:495-510; async_no_points_aggregate listener.c:5447-5586)
+    // A series `drop shards` emptied answers no point (its catalog row
+    // keeps no edges), like any empty chain: {"name": []}.
     case SelectStmt(Seq(SelectChain(Seq(Agg(Count, None, _)), pre, suf)),
         sel, where, None, None) =>
-      val out = selCatalog(Some(sel), where, env)
+      val out = selCatalog(Some(sel), where, env).where(col("length") > 0)
         .select(col("series"), col("end").as("ts"), col("length").as("val"))
       if (pre.nonEmpty || suf.nonEmpty)
         out.withColumn("series", concat(lit(pre), col("series"), lit(suf)))
@@ -949,8 +1017,9 @@ object Planner {
     // through string losslessly)
     case SelectStmt(Seq(SelectChain(Seq(Agg(fn, None, _)), pre, suf)),
         sel, where, None, None)
-        if (fn == First || fn == Last) && env.catalog.columns.contains("first_val") =>
-      val cat = selCatalog(Some(sel), where, env)
+        if (fn == First || fn == Last) &&
+          (env.snapshot.isDefined || env.catalog.columns.contains("first_val")) =>
+      val cat = selCatalog(Some(sel), where, env).where(col("length") > 0)
       val types = selInfo(sel, where, env).map(_._2).toSet
       val (tsCol, vCol) =
         if (fn == First) (col("start"), col("first_val"))
@@ -977,13 +1046,20 @@ object Planner {
       // the shard directories overlapping the range (the reference's
       // shard index pruning); the precise ts filter still applies in
       // the pipeline below
-      val envForScan = range match {
+      val ranged = range match {
         case Some(TimeRange(a, b)) if env.rangedFrames.isDefined =>
           env.copy(frames = Some(env.rangedFrames.get(a, b)))
         case _ => env
       }
+      // a store's typed split joins the points with a LocalRelation of
+      // the selection's collected rows only: Catalyst walks a
+      // LocalRelation's rows in every analyzer and optimizer rule, so
+      // a select's plan must not carry the whole catalog
+      val envForScan = ranged.frames.fold(ranged)(f => ranged.copy(
+        frames = Some(f.over(new CatalogSnapshot(env.spark,
+          selRows(sel, where, ranged).toVector)))))
       // the memoized collect also serves selectNames at encode time —
-      // one catalog job per select, total (pinned by PlanSpec)
+      // one catalog collect per select, total (pinned by PlanSpec)
       val selTypes = selInfo(sel, where, envForScan).map(_._2).toSet
       if (selTypes.contains("string") && selTypes.size > 1 && merge.isDefined)
         throw QueryError("Cannot merge string and number series.") // points.c:372

@@ -56,6 +56,11 @@ final class ApiCore(spark: SparkSession, storeDir: String,
 
   private def metaHome: String = metaDirOpt.getOrElse(storeDir)
 
+  // a store opened anew reads its catalog from disk: a snapshot left in
+  // this process by an earlier server over the same directory (say, a
+  // dropped database re-created under its name) is not this store's
+  Ingest.reloadCatalog(storeDir)
+
   /** Physical shard granularity of this server's Ingest store; also
     * drives the shards view / drop shards mapping via EngineEnv.
     * Numeric and log (string) series keep separate durations like the
@@ -137,17 +142,22 @@ final class ApiCore(spark: SparkSession, storeDir: String,
     * once per store generation and only when first asked for: resolving
     * a parquet relation lists files and, for the points, runs a
     * schema-inference job (not free at scale, and it freezes the file
-    * set; the catalog declares its schema), so the view is
-    * replaced exactly when the store mutates (inserts here, drop shards
-    * in the planner, another process's mutation via [[syncWithStore]]).
+    * set), so the view is replaced exactly when the store mutates
+    * (inserts here, drop shards in the planner, another process's
+    * mutation via [[syncWithStore]]) or its tombstones change.
     * Ranged and unranged frames share one points relation and one
     * catalog, so a ranged select re-lists and re-reads nothing. */
-  private[server] final class StoreView(val gen: Long) {
+  private[server] final class StoreView(val gen: Long,
+      val dropped: Set[String]) {
     /** The `points/` relation with its partition columns kept (None for
       * an empty store); ranged reads filter the `shard` column, so
       * out-of-range shard directories are pruned. */
     lazy val base: Option[DataFrame] = Ingest.rangedBase(spark, storeDir)
-    lazy val catalog: DataFrame = Ingest.catalog(spark, storeDir)
+    /** The live series catalog: the store's driver snapshot
+      * (Ingest.catalogSnapshot) without the tombstoned names. A query
+      * selects its rows on the driver and plans over those only. */
+    lazy val catalog: Ingest.CatalogSnapshot =
+      Ingest.catalogSnapshot(spark, storeDir).without(dropped)
     lazy val frames: Frames = ranged(None, None)
     /** Shard metadata, listed once per generation rather than per `list
       * shards` query: the listing is O(#shards) driver filesystem work
@@ -185,10 +195,11 @@ final class ApiCore(spark: SparkSession, storeDir: String,
 
   private[server] def view(): StoreView = {
     val gen = meta.storeGeneration.get()
+    val dropped = meta.droppedNames
     val v = storeView
-    if (v != null && v.gen == gen) v
+    if (v != null && v.gen == gen && (v.dropped eq dropped)) v
     else {
-      val built = new StoreView(gen)
+      val built = new StoreView(gen, dropped)
       storeView = built
       built
     }
@@ -229,14 +240,21 @@ final class ApiCore(spark: SparkSession, storeDir: String,
     * process) pays nothing else. The generation lives at the META
     * HOME: for a cluster that is pool 0, so ONE file versions every
     * pool's mutations and a second cluster process needs one read to
-    * know the whole cluster moved. */
-  private[server] def syncWithStore(): Unit = {
+    * know the whole cluster moved. Adopting drops this store's catalog
+    * snapshot, which advances only from this process's own inserts;
+    * true when it adopted (a cluster then drops every pool's). */
+  private[server] def syncWithStore(): Boolean = {
     val disk = meta.diskGeneration(spark, metaHome)
-    if (disk > meta.storeGeneration.get()) {
+    val behind = disk > meta.storeGeneration.get()
+    if (behind) {
       meta.loadFrom(spark, metaHome)
+      release()
       meta.storeGeneration.set(disk)
     }
+    behind
   }
+
+  override def release(): Unit = Ingest.reloadCatalog(storeDir)
 
   /** Expire-gate reset for the cluster DDL fan-out: `alter database
     * set expiration_*` must take effect on the very next write to ANY
@@ -632,13 +650,16 @@ final class ApiCore(spark: SparkSession, storeDir: String,
 }
 
 object ApiCore {
-  /** The typed family split: raw points joined with their catalog's
-    * series types, one frame per value family plus the numeric mixed
-    * view. A standalone store splits its own points; a cluster splits
-    * the union of its pools' points once, against the merged catalog.
+  /** The typed family split: raw points joined with their live
+    * catalog's series types, one frame per value family plus the
+    * numeric mixed view; the catalog is a driver snapshot's
+    * `LocalRelation`, so the join broadcasts it without a job. A
+    * standalone store splits its own points; a cluster splits the
+    * union of its pools' points once, against the merged catalog.
     * Nothing but the catalog is built until a family is first read. */
-  private[server] def typedFrames(pts: => DataFrame, cat: DataFrame): Frames = {
-    lazy val typed = pts.join(cat.select(col("series"), col("type")), Seq("series"))
+  private[server] def typedFrames(pts: => DataFrame,
+      cat: Ingest.CatalogSnapshot): Frames = {
+    lazy val typed = pts.join(cat.df.select(col("series"), col("type")), Seq("series"))
     new Frames(
       typed.where(col("type") === "float")
         .select(col("series"), col("ts"), col("val"), col("pid")),
@@ -649,7 +670,7 @@ object ApiCore {
       typed.where(col("type") === "string")
         .select(col("series"), col("ts"), col("val_str").as("val"), col("pid")),
       typed.select(col("series"), col("ts"), col("val"), col("pid")),
-      cat)
+      cat, typedFrames(pts, _))
   }
 
   /** Adds the `__timeit__` array — one {server, time} entry per

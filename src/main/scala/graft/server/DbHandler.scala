@@ -21,4 +21,9 @@ trait DbHandler {
     * (clserver.c:480-505). */
   def runQuery(q: String, tsFactor: Double, user: String): JsonNode
   def runInsert(req: JsonNode, user: String): JsonNode
+  /** Free the driver state held for this database's stores (their
+    * catalog snapshots); a later read loads it from disk again. Called
+    * when the database is dropped. A handler holding no such state
+    * keeps the default. */
+  def release(): Unit = ()
 }

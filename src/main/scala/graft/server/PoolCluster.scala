@@ -2,6 +2,7 @@ package graft.server
 
 import com.fasterxml.jackson.databind.JsonNode
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.functions._
 
 import graft.meta.Lookup
@@ -190,7 +191,9 @@ final class PoolCluster(spark: org.apache.spark.sql.SparkSession,
     * number of readers (MetaStore.bumpGeneration) — a cluster whose
     * OWN expansion is in flight is the writer and skips adoption. */
   private def sync(): Unit = {
-    pools(0).syncWithStore()
+    // every pool's mutations bump pool 0's generation, so adopting a
+    // remote one may have changed any pool's catalog
+    if (pools(0).syncWithStore()) pools.drop(1).foreach(_.release())
     if (reindex.isEmpty) {
       val n = meta.config.get("pools").map(_.toInt).getOrElse(pools.size)
       val mask = meta.config.contains("reindex_mask")
@@ -225,6 +228,8 @@ final class PoolCluster(spark: org.apache.spark.sql.SparkSession,
     pools.indices.flatMap(k => Seq.fill(1 + replicas.getOrElse(k, 0))(k))
 
   def nPools: Int = pools.size
+
+  override def release(): Unit = pools.foreach(_.release())
 
   def poolOf(series: String): Int = lookup.poolOf(series)
 
@@ -441,10 +446,11 @@ final class PoolCluster(spark: org.apache.spark.sql.SparkSession,
   /** One merged env over every pool: each pool contributes what its
     * own store view serves — the points relation resolved at most once
     * per store generation, ranged reads pruned to the pool's in-range
-    * shard directories, and its catalog — and the cluster unions the
-    * pools' points and catalogs and applies the one typed split
-    * ([[ApiCore.typedFrames]]) to the union, like the reference merges
-    * per-pool answers (query.c:263-394). Outside an expansion
+    * shard directories, and its live catalog rows — and the cluster
+    * unions the pools' points, merges their catalog rows into one
+    * driver snapshot ([[mergedCatalog]]) and applies the one typed
+    * split ([[ApiCore.typedFrames]]) to the union, like the reference
+    * merges per-pool answers (query.c:263-394). Outside an expansion
     * hand-over the mask is a no-op. */
   private[graft] def mergedEnv(user: String): EngineEnv = {
     val (viewPools, excluded) = queryView
@@ -461,11 +467,11 @@ final class PoolCluster(spark: org.apache.spark.sql.SparkSession,
       case Some(k) => dfs.zipWithIndex.map { case (df, i) =>
         if (i == dfs.size - 1) df else df.where(k) } // target last
     }
-    // the pool column is the real owning store (list pools, where pool == k)
+    // the pool column is the real owning store (where pool == k)
     def byPool(dfs: Seq[DataFrame]): DataFrame = dfs.zipWithIndex
       .map { case (df, k) => df.withColumn("pool", lit(k.toLong)) }
       .reduce(_ unionByName _)
-    val cat = byPool(masked(views.map(_.catalog)))
+    val cat = mergedCatalog(views, excluded)
     def read(a: Option[Long], b: Option[Long]): Frames = ApiCore.typedFrames(
       masked(views.map(_.points(a, b))).reduce(_ unionByName _), cat)
     viewPools.head.env(user).copy(
@@ -476,6 +482,41 @@ final class PoolCluster(spark: org.apache.spark.sql.SparkSession,
       fleet = fleet,
       rollup = mergedRollup(views.map(_.rollup)))
   }
+
+  /** The pools' live catalog rows as ONE driver snapshot (one
+    * `LocalRelation`: a union of local relations would run a job per
+    * read). The `pool` column is the owning store (list pools,
+    * `where pool == k`), and during an expansion hand-over the source
+    * pools drop the moved slots by [[Lookup.slotOf]], the driver twin
+    * of the points mask. Built once per set of pool views and mask. */
+  private def mergedCatalog(views: Vector[ApiCore#StoreView],
+      excluded: Option[Set[Int]]): Ingest.CatalogSnapshot = {
+    val key = (views, excluded)
+    val m = merged
+    if (m != null && m._1 == key) m._2
+    else {
+      val last = views.size - 1
+      val rows = views.zipWithIndex.flatMap { case (v, k) =>
+        val own = excluded match {
+          case Some(slots) if k != last => // target last, never masked
+            v.catalog.rows.filterNot(r => slots(Lookup.slotOf(r.getString(0))))
+          case _ => v.catalog.rows
+        }
+        // a row already in its owning pool's slot is shared, not copied
+        own.map(r => if (r.getLong(PoolField) == k) r
+          else new GenericRowWithSchema(
+            r.toSeq.updated(PoolField, k.toLong).toArray, Ingest.CatalogSchema))
+      }
+      val snap = new Ingest.CatalogSnapshot(spark, rows)
+      merged = (key, snap)
+      snap
+    }
+  }
+
+  @volatile private var merged:
+    ((Vector[ApiCore#StoreView], Option[Set[Int]]), Ingest.CatalogSnapshot) = null
+
+  private val PoolField = Ingest.CatalogSchema.fieldIndex("pool")
 
   /** Cluster rollup view: the union of every pool's store-owned rollup
     * — the coarse-dashboard path a cluster exists for must not rescan

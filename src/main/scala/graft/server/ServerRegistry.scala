@@ -159,7 +159,8 @@ final class ServerRegistry(spark: SparkSession, defaultDb: String,
             (true, err(s"Cannot drop the default database '$name'"))
           case Some(name) =>
             dbs.remove(name) match {
-              case Some(_) =>
+              case Some(h) =>
+                h.release()
                 val dir = root.resolve(s"graft-db-$name")
                 if (Files.exists(dir))
                   Files.walk(dir).iterator().asScala.toSeq.reverse

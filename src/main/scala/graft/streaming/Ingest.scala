@@ -1,7 +1,12 @@
 package graft.streaming
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.Predicate
+import org.apache.spark.sql.catalyst.plans.logical.Filter
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
@@ -24,9 +29,19 @@ import graft.engine.SeriesStore
   *     (src/siri/db/db.c:395-424);
   *   catalog.parquet — one [[CatalogSchema]] row per series,
   *     upserted incrementally per micro-batch (the analog of the
-  *     reference's series.dat); `list`/`count series length` and the
-  *     bare count()/first()/last() skip-points fast path read ONLY
-  *     this — never the fact table (aggregate.c:495-510).
+  *     reference's series.dat).
+  *
+  * Queries read the catalog from driver memory, like the reference's
+  * in-memory series map (imap over series.dat): [[catalogSnapshot]]
+  * holds each store's rows as one [[CatalogSnapshot]]: rows a query
+  * selects in Scala (by name, regex or `where` predicate) and a
+  * `LocalRelation` over them, which Spark filters and projects on the
+  * driver, so `list`/`count series`, a select's type and name lookup
+  * and the bare count()/first()/last() skip-points fast path
+  * (aggregate.c:495-510) start no Spark job. The snapshot advances
+  * from each insert's own merged rows, one batch-sized collect at the
+  * next read; only a first open, a removal, a catalog rebuild or
+  * another process's mutation reloads it from catalog.parquet.
   *
   * At scale each micro-batch append is a partitioned parquet write and
   * the catalog upsert aggregates only the batch (plus a catalog-sized
@@ -445,7 +460,9 @@ object Ingest {
       col("val_str"), col("tp"))
     val etp = coalesce(col("type"), col("first.tp"))
     def edge(e: String) = valueString(etp, coerce(c => col(s"$e.$c"), etp))
-    val fresh = col("type").isNull
+    // a new series, or one `drop shards` emptied (its row keeps the
+    // type but no edges): the batch supplies both edges
+    val empty = coalesce(col("length"), lit(0L)) === 0L
     val touched = raw.groupBy(col("series"))
       .agg(count(lit(1)).as("n"), min(col("ts")).as("lo"),
         max(col("ts")).as("hi"), min_by(point, ord).as("first"),
@@ -456,9 +473,9 @@ object Ingest {
         least(col("start"), col("lo")).as("start"),
         greatest(col("end"), col("hi")).as("end"),
         etp.as("type"),
-        when(fresh || col("lo") < col("start"), edge("first"))
+        when(empty || col("lo") < col("start"), edge("first"))
           .otherwise(col("first_val")).as("first_val"),
-        when(fresh || col("hi") >= col("end"), edge("last"))
+        when(empty || col("hi") >= col("end"), edge("last"))
           .otherwise(col("last_val")).as("last_val"),
         SeriesStore.poolOf("series").as("pool"))
       .localCheckpoint(eager = true)
@@ -490,6 +507,9 @@ object Ingest {
     swap(spark, new Path(catalogPath(storeDir)),
       existing.join(broadcast(touched.select(col("series"))), Seq("series"), "left_anti")
         .unionByName(touched))
+    // the driver snapshot advances from the same merged rows at its
+    // next read; nothing catalog-sized is built here
+    catalogHolder(storeDir).advance(touched)
   }
 
   /** Replace the frame stored at `dir` with `rows`: one `coalesce(1)`
@@ -720,6 +740,7 @@ object Ingest {
     names.foreach { n =>
       swap(spark, new Path(catalogPath(storeDir)),
         catalog(spark, storeDir).join(broadcast(n), Seq("series"), "left_anti"))
+      reloadCatalog(storeDir)
       // a moved series' new pool picked its rollup rows up on append
       // (rollupAppend), so keeping them here would double-count in a
       // cluster-merged rollup view
@@ -805,7 +826,8 @@ object Ingest {
     * store, off the ingest hot path — run only after whole shards were
     * deleted: [[expire]], [[dropShards]]). A series none of whose
     * points survive leaves the catalog, unless `keepEmptied`: then it
-    * stays listed at length 0 with its other fields as they were.
+    * stays listed at length 0 with its name, type and pool, and no
+    * start, end, first or last value (those points are gone).
     * Caller must hold the store lock. */
   private def rebuildCatalog(spark: SparkSession, storeDir: String,
       keepEmptied: Boolean): Unit = {
@@ -822,9 +844,13 @@ object Ingest {
         max_by(col("vstr"), ord).as("last_val"))
       .withColumn("pool", SeriesStore.poolOf("series"))
     val emptied = old.join(rebuilt.select(col("series")), Seq("series"), "left_anti")
-      .withColumn("length", lit(0L))
+      .withColumns(Map("length" -> lit(0L),
+        "start" -> lit(null).cast(LongType), "end" -> lit(null).cast(LongType),
+        "first_val" -> lit(null).cast(StringType),
+        "last_val" -> lit(null).cast(StringType)))
     swap(spark, new Path(catalogPath(storeDir)),
       if (keepEmptied) rebuilt.unionByName(emptied) else rebuilt)
+    reloadCatalog(storeDir)
   }
 
   // ------------------------------------------------------------------
@@ -973,10 +999,125 @@ object Ingest {
     rows.toDF("sid", "start", "end", "size", "type")
   }
 
-  /** The incrementally-maintained catalog — answers metadata queries
-    * without touching point data. */
+  /** The incrementally-maintained catalog as stored: catalog.parquet
+    * read with its declared schema. Mutations read it; queries read the
+    * driver snapshot ([[catalogSnapshot]]). */
   def catalog(spark: SparkSession, storeDir: String): DataFrame =
     if (!existsNonEmpty(spark, catalogPath(storeDir)))
       spark.createDataFrame(java.util.Collections.emptyList[Row](), CatalogSchema)
     else spark.read.schema(CatalogSchema).parquet(catalogPath(storeDir))
+
+  /** A series catalog held on the driver: immutable [[CatalogSchema]]
+    * rows and the one `LocalRelation` over them. Spark's
+    * ConvertToLocalRelation evaluates a filter, projection or limit
+    * over [[df]] on the driver, so collecting such a plan starts no
+    * job; an aggregate still does, so callers count and sum the
+    * collected rows instead. Catalyst walks a `LocalRelation`'s rows in
+    * every analyzer and optimizer rule, so a caller that can select
+    * rows in Scala ([[filter]]) builds the relation over those only. */
+  final class CatalogSnapshot private[graft] (spark: SparkSession,
+      val rows: Vector[Row]) {
+    lazy val df: DataFrame = spark.createDataFrame(rows.asJava, CatalogSchema)
+
+    /** The rows whose series name satisfies `p`, filtered on the driver. */
+    def filter(p: String => Boolean): CatalogSnapshot =
+      new CatalogSnapshot(spark, rows.filter(r => p(r.getString(0))))
+
+    /** The rows satisfying `cond`, evaluated on the driver by Spark's
+      * own predicate (the one ConvertToLocalRelation runs over [[df]]):
+      * `cond` is analyzed against an empty relation of the catalog's
+      * schema, so no plan carries these rows. */
+    def where(cond: Column): CatalogSnapshot = {
+      val analyzed = spark.createDataFrame(java.util.Collections.emptyList[Row](),
+        CatalogSchema).where(cond).queryExecution.analyzed
+      val pred = analyzed match {
+        case Filter(c, child) => Predicate.create(c, child.output)
+        case other => throw new IllegalStateException(s"not a filter: $other")
+      }
+      pred.initialize(0)
+      val internal = CatalystTypeConverters.createToCatalystConverter(CatalogSchema)
+      new CatalogSnapshot(spark,
+        rows.filter(r => pred.eval(internal(r).asInstanceOf[InternalRow])))
+    }
+
+    /** The first `n` rows. */
+    def take(n: Int): CatalogSnapshot =
+      if (n >= rows.size) this else new CatalogSnapshot(spark, rows.take(n))
+
+    /** These rows without the `dropped` names (the store's tombstones). */
+    def without(dropped: Set[String]): CatalogSnapshot =
+      if (dropped.isEmpty) this else filter(n => !dropped(n))
+
+    /** These rows advanced by merged rows `delta` (one per series, a
+      * later row of a name replacing an earlier one): the same order
+      * the catalog.parquet rewrite leaves, the old rows minus the
+      * delta's names, then the delta. */
+    private[streaming] def advance(delta: Seq[Row]): CatalogSnapshot = {
+      val names = scala.collection.mutable.HashSet.empty[String]
+      val tail = delta.reverseIterator
+        .filter(r => names.add(r.getString(0))).toVector.reverse
+      new CatalogSnapshot(spark, rows.filterNot(r => names(r.getString(0))) ++ tail)
+    }
+  }
+
+  /** One store's snapshot and the merged-row frames of the inserts
+    * committed since it was taken. An insert hands its checkpointed
+    * rows over ([[advance]]) and the next read folds them in with one
+    * batch-sized collect. Reads and hand-overs serialize on the holder,
+    * so concurrent readers fold each delta once. A removal or a catalog
+    * rebuild ([[reloadCatalog]]) discards the holder, so the next read
+    * loads catalog.parquet whole into a new one; a delta folded after a
+    * load that already saw it replaces its rows with the same rows. */
+  private final class CatalogHolder(storeDir: String) {
+    private var snap: Option[CatalogSnapshot] = None
+    private var pending: Vector[DataFrame] = Vector.empty
+
+    def read(spark: SparkSession): CatalogSnapshot = synchronized {
+      val s = snap match {
+        case None => new CatalogSnapshot(spark,
+          catalog(spark, storeDir).collect().toVector)
+        case Some(cur) if pending.isEmpty => cur
+        case Some(cur) => cur.advance(pending.reduce(_ unionByName _)
+          .select(CatalogSchema.fieldNames.toSeq.map(col): _*).collect())
+      }
+      snap = Some(s)
+      pending = Vector.empty
+      s
+    }
+
+    /** Hold an insert's merged rows for the next read. Before any read
+      * there is nothing to advance: the first read loads the file. The
+      * held frames pin their checkpoint blocks, so a store that is
+      * written far more often than read drops them past
+      * [[MaxPendingDeltas]], and its next read loads the file. */
+    def advance(delta: DataFrame): Unit = synchronized {
+      if (snap.isDefined) {
+        if (pending.size < MaxPendingDeltas) pending :+= delta
+        else { snap = None; pending = Vector.empty }
+      }
+    }
+  }
+
+  private val MaxPendingDeltas = 256
+
+  private val catalogHolders =
+    new java.util.concurrent.ConcurrentHashMap[String, CatalogHolder]()
+
+  private def catalogHolder(storeDir: String): CatalogHolder =
+    catalogHolders.computeIfAbsent(storeDir, d => new CatalogHolder(d))
+
+  /** The store's series catalog as driver rows. The first read in this
+    * process, and the first after a removal, a catalog rebuild or
+    * [[reloadCatalog]], collects catalog.parquet (one job); the first
+    * after an insert collects that insert's merged rows (one
+    * batch-sized job); every other read starts none. */
+  def catalogSnapshot(spark: SparkSession, storeDir: String): CatalogSnapshot =
+    catalogHolder(storeDir).read(spark)
+
+  /** Discard the store's snapshot and free its rows; the next read
+    * loads catalog.parquet. For a removal or a catalog rebuild here,
+    * a mutation this process did not make (another process's, seen
+    * through the store generation), a store opened anew, and a store
+    * deleted. */
+  def reloadCatalog(storeDir: String): Unit = catalogHolders.remove(storeDir)
 }

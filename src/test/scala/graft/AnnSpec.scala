@@ -608,6 +608,37 @@ class AnnSpec extends AnyFunSuite {
       java.lang.Double.doubleToLongBits(out.getDouble(2)))
   }
 
+  test("graft_dist2 and graft_norm2 are NULL on a null element, like the HOF folds, interpreted and compiled") {
+    // the arrays come from a column, so every expression is evaluated
+    // per row rather than constant-folded; row 0's `a` holds a null
+    val df = spark.range(2).select(
+      when(col("id") === 0, expr("array(1.0D, CAST(NULL AS DOUBLE), 2.0D)"))
+        .otherwise(expr("array(1.5D, -2.0D, 0.5D)")).as("a"),
+      expr("array(4.0D, 5.0D, 6.0D)").as("b"))
+    val dist = "aggregate(zip_with(%s, %s, (x, y) -> (x - y) * (x - y)), 0D, (acc, v) -> acc + v)"
+    val pairs = Seq(
+      "graft_dist2(a, b)" -> dist.format("a", "b"),
+      "graft_dist2(b, a)" -> dist.format("b", "a"),
+      "graft_norm2(a)" -> "aggregate(a, 0D, (acc, x) -> acc + x * x)")
+    def check(mode: String): Unit = {
+      val rows = df.select(pairs.flatMap { case (k, h) => Seq(expr(k), expr(h)) }: _*)
+        .collect()
+      pairs.indices.foreach { p =>
+        assert(rows(0).isNullAt(2 * p + 1), s"${pairs(p)._2} ($mode)")
+        assert(rows(0).isNullAt(2 * p), s"${pairs(p)._1} must be NULL ($mode)")
+        assert(java.lang.Double.doubleToLongBits(rows(1).getDouble(2 * p)) ===
+          java.lang.Double.doubleToLongBits(rows(1).getDouble(2 * p + 1)),
+          s"${pairs(p)._1} ($mode)")
+      }
+    }
+    check("codegen")
+    val confs = Seq("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try check("interpreted")
+    finally confs.foreach { case (k, _) => spark.conf.unset(k) }
+  }
+
   test("coarseAssign: compiled and join forms agree; an over-budget codebook dispatches to the join shape and still assigns correctly") {
     val e = Ann.withNorm(corpus)
     // trained in-budget codebook: the two forms must agree cell-for-cell

@@ -362,6 +362,15 @@ class ServiceSpec extends AnyFunSuite {
       assert(post(s"$base/query/nosuchdb", """{"q": "count series"}""")._1 === 404)
       assert(post(s"$base/drop-database", """{"dbname": "metrics"}""")._1 === 200)
       assert(post(s"$base/query/metrics", """{"q": "1"}""")._1 === 404)
+      // re-created under the dropped name, the database starts empty:
+      // nothing of the dropped store's catalog is served
+      assert(post(s"$base/new-database", """{"dbname": "metrics"}""")._1 === 200)
+      assert(post(s"$base/query/metrics", """{"q": "count series"}""")._2 ===
+        """{"columns":["series"],"rows":[[0]]}""")
+      assert(post(s"$base/insert/metrics", """{"mem": [[100, 2.5]]}""")._1 === 200)
+      assert(post(s"$base/query/metrics", """{"q": "list series"}""")._2 ===
+        """{"columns":["name"],"rows":[["mem"]]}""")
+      assert(post(s"$base/drop-database", """{"dbname": "metrics"}""")._1 === 200)
       // pool/replica are engine-owned placement → service error
       // new-pool joins by hosting the database locally and answers the
       // reference's bare "OK" (test_http_api.py:83-90); missing fields
