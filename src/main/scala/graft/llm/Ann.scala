@@ -483,8 +483,8 @@ object Ann {
     * below the codegen cliff, so sf plans are unchanged and
     * large-nlist callers get the join shape that actually scales.
     * AnnSpec pins that both forms assign identically across the
-    * threshold. ([[pqAssign]] ships the join shape outright — its
-    * compiled twin lost twice; see its docstring.) */
+    * threshold. ([[pqAssign]] ships the join shape outright; see its
+    * docstring.) */
   private[graft] val compiledAssignBudget = 4096
 
   /** Nearest-centroid assignment by round-9 cosine, ties → lowest
@@ -1029,55 +1029,15 @@ object Ann {
     * (bit-identical to the previous zip_with HOF fold, which ran
     * INTERPRETED once per ks-way-expanded row — the r17-measured cost
     * of this operator was mostly that interpreter loop, not the
-    * expansion).
-    *
-    * SECOND negative result on the literal-compiled narrow-map form
-    * (the [[coarseAssign]] trick), kept as [[pqAssignCompiled]] and
-    * pinned equivalent by AnnSpec: r17 measured it 3× slower WITHOUT
-    * a native L2 kernel; r18 re-applied it WITH graft_dist2 and it
-    * still lost — sf0.1 subset bench +11% (ann_pq_topk), sf1 +69%,
-    * one 10 s scan stage absorbing the whole ADC pipeline. Unlike
-    * coarseAssign (one greatest() consumed by cell-keyed probes), the
-    * PQ codes feed a query crossJoin and two broadcast joins; fusing
-    * the un-materialized per-sub CASE/least chain into that stage
-    * re-evaluates it downstream and drops out of whole-stage codegen,
-    * where the join's groupBy materializes codes ONCE into compact
-    * rows. The min_by exchange carries one (vec_id, sub, sv, cid) row
+    * expansion). min_by keeps the ks-way-expanded rows collapsing
+    * map-side, and its exchange carries one (vec_id, sub, sv, cid) row
     * per subvector — the subvector stream itself, not an expansion —
-    * so the join shape is also the honest 100 TB plan. */
-  private[graft] def pqAssign(sv: DataFrame, bk: DataFrame): DataFrame =
-    pqAssignJoin(sv, bk)
-
-  private[graft] def pqAssignCompiled(sv: DataFrame,
-      entries: Array[(Int, Int, Seq[Double])]): DataFrame = {
-    def bestOf(cells: Array[(Int, Int, Seq[Double])]): Column = {
-      val structs = cells.map { case (_, cid, cv) =>
-        val cvLit = array(cv.map(lit).toIndexedSeq: _*)
-        struct(
-          round(call_function("graft_dist2", col("sv"), cvLit), 9).as("d"),
-          lit(cid).as("c"))
-      }
-      if (structs.length == 1) structs.head
-      else least(structs.toIndexedSeq: _*)
-    }
-    val bySub = entries.groupBy(_._1).toSeq.sortBy(_._1)
-      .map { case (s, cells) => (s, bestOf(cells)) }
-    // branch on the band-constant `sub`: one least() chain per
-    // subspace, the last as the default branch (sub values are
-    // exactly the codebook's by construction)
-    val best = bySub.init.foldRight(bySub.last._2) {
-      case ((s, b), acc) => when(col("sub") === lit(s), b).otherwise(acc)
-    }
-    sv.withColumn("__best", best)
-      .select(col("vec_id"), col("sub"), col("sv"),
-        col("__best.c").as("cid"))
-  }
-
-  /** The broadcast-join + map-side min_by assignment shape — the
-    * over-budget fallback (see [[compiledAssignBudget]]): min_by
-    * keeps the ks-way-expanded rows collapsing map-side. Same
-    * round-9 L2, same lowest-cid tie-break — bit-identical codes. */
-  private[graft] def pqAssignJoin(sv: DataFrame, bk: DataFrame): DataFrame = sv
+    * so this is also the honest 100 TB plan. (The literal-compiled
+    * narrow-map form, the [[coarseAssign]] trick, lost here twice: the
+    * PQ codes feed a query crossJoin and two broadcast joins, and
+    * fusing an un-materialized per-sub CASE/least chain into that
+    * stage re-evaluates it downstream.) */
+  private[graft] def pqAssign(sv: DataFrame, bk: DataFrame): DataFrame = sv
     .join(broadcast(bk.select(col("sub"), col("cid"), col("cv"))), Seq("sub"))
     .withColumn("dist",
       round(call_function("graft_dist2", col("sv"), col("cv")), 9))
@@ -1115,7 +1075,7 @@ object Ann {
       // (or another engine's fold) order the members. A raw avg()
       // here was the repo's last engine-folded double feeding the
       // q9-floored distortion audit (VERDICT r14 What's-wrong #2).
-      val next = pqAssignJoin(tsv, books)
+      val next = pqAssign(tsv, books)
         .select(col("sub"), col("cid"), posexplode(col("sv")).as(Seq("pos", "x")))
         .groupBy(col("sub"), col("cid"), col("pos"))
         .agg(expr("CAST(sum(CAST(floor(x * 1073741824D) AS BIGINT)) AS DOUBLE)" +

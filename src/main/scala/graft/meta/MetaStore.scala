@@ -95,14 +95,13 @@ final class MetaStore {
 
   /** Dropped-series tombstones (the analog of dropped-series purge,
     * src/siri/optimize.c) as a materialized name frame: the optimize
-    * purge removes them by anti-join, and the parquet-demo catalog is
-    * anti-joined with it. `localCheckpoint` pins the point-in-time
-    * snapshot. */
+    * purge removes them by anti-join. `localCheckpoint` pins the
+    * point-in-time snapshot. */
   def droppedDf: Option[org.apache.spark.sql.DataFrame] = dropped.map(_.df)
 
   /** The same names as a driver-side set: an insert's resurrect check
     * is a Set lookup (no Spark job runs on the insert path unless a
-    * name matches), and a store view filters them out of its catalog
+    * name matches), and every env filters them out of its catalog
     * snapshot on the driver. Collected once on first use after each
     * tombstone change; bounded by the names awaiting the next optimize
     * purge, not by the catalog. */

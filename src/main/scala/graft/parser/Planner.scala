@@ -7,7 +7,7 @@ import org.apache.spark.sql.types.{DoubleType, LongType, StringType}
 import graft.engine.{Pipeline, SeriesMatch, SeriesStore}
 import graft.engine.Pipeline._
 import graft.engine.SeriesMatch.{All, Env, Name, Sel, Regex => SelRegex}
-import graft.streaming.Ingest.CatalogSnapshot
+import graft.streaming.Ingest.{CatalogSchema, CatalogSnapshot}
 
 /** Turns a parsed statement into one Catalyst plan over the typed
   * point frames — the Spark analog of the reference's listener
@@ -93,19 +93,12 @@ final case class EngineEnv(
   lazy val pointsS: DataFrame = frames.map(_.s).getOrElse(SeriesStore.pointsS(spark, dir))
   lazy val pointsM: DataFrame = frames.map(_.m).getOrElse(SeriesStore.points(spark, dir))
 
-  /** Series catalog. The parquet-derived path is a full aggregation
-    * over all points, so it is persisted on first use — every query
-    * consults the catalog at least twice (type dispatch + where/sel
-    * filtering) and a 100 TB store must not pay a full scan per
-    * consult. Catalog size is O(#series), safely cacheable. An Ingest
-    * store's frames carry its driver snapshot (Ingest.CatalogSnapshot),
-    * already without the tombstoned series. */
-  lazy val catalog: DataFrame =
-    frames.map(_.cat.df).getOrElse(Planner.cachedCatalog(spark, dir))
-
-  /** A store's live catalog rows on the driver (None for the
-    * parquet-demo catalog). */
-  def snapshot: Option[CatalogSnapshot] = frames.map(_.cat)
+  /** The live series catalog on the driver, tombstoned series
+    * excluded: an Ingest store's snapshot (Ingest.CatalogSnapshot, its
+    * store view filtered already), else the parquet-demo catalog
+    * (Planner.demoCatalog) without the metastore's dropped names. */
+  def snapshot: CatalogSnapshot =
+    frames.fold(Planner.demoCatalog(spark, dir).without(meta.droppedNames))(_.cat)
 
   /** Snapshot of the (mutable) metastore for series matching. */
   def matchEnv: Env = Env(
@@ -120,30 +113,24 @@ final case class EngineEnv(
         .getOrElse(Seq.empty[(String, String)].toDF("tag", "series"))
     })
 
-  /** Catalog minus dropped series. A store view filtered its snapshot
-    * on the driver already; the parquet-demo catalog anti-joins the
-    * materialized tombstone frame. */
-  def catalogLive: DataFrame =
-    if (frames.isDefined) catalog
-    else meta.droppedDf.fold(catalog)(d => catalog.join(d, Seq("series"), "left_anti"))
+  /** The live catalog as one `LocalRelation` over the snapshot's rows. */
+  def catalogLive: DataFrame = snapshot.df
 }
 
 object Planner {
 
-  /** Process-level owner of the persisted parquet-demo catalog:
-    * EngineEnvs are constructed per query, so the persist must belong
-    * to a registry keyed by (session, dir) — one cache entry per
-    * distinct store, however many envs are built over it. (An Ingest
-    * store's catalog is a driver snapshot, Ingest.catalogSnapshot.) */
-  private val catalogRegistry = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
+  /** The parquet-demo catalog, a full aggregation over all points,
+    * collected once per (session, dir) into driver rows: EngineEnvs
+    * are built per query, so the rows belong to this process-level
+    * memo, one entry per distinct store. */
+  private val demoCatalogs = scala.collection.concurrent.TrieMap
+    .empty[(SparkSession, String), CatalogSnapshot]
 
-  def cachedCatalog(spark: SparkSession, dir: String): DataFrame =
-    catalogRegistry.getOrElseUpdate((spark, dir), {
-      val c = SeriesStore.catalogAll(spark, dir)
-      c.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      c
-    })
+  private[parser] def demoCatalog(spark: SparkSession, dir: String): CatalogSnapshot =
+    demoCatalogs.getOrElseUpdate((spark, dir), new CatalogSnapshot(spark,
+      SeriesStore.catalogAll(spark, dir)
+        .select(CatalogSchema.fieldNames.toSeq.map(col): _*)
+        .collect().toVector))
 
   /** Per-query shared-scan caches (multi-chain selects cache the
     * selected points once for N chains, listener.c's points_map). A
@@ -172,15 +159,14 @@ object Planner {
     * with the selected rows) and the output name list (response
     * encoding) all derive from the same response-bounded collect of
     * the selection's catalog rows, so a select collects once, not
-    * twice (types at plan time + names at encode time). Over a store's
-    * driver snapshot the collect starts no job; over the parquet-demo
-    * catalog it is one. Keyed by
-    * the selection AST PLUS the store identity (dir + store
-    * generation): an engine-level caller touching two databases on one
-    * thread without a transport drain must not get one store's cached
-    * series list for the other, and a non-DDL catalog change (insert
-    * bumps storeGeneration) invalidates naturally. Cleared with the
-    * query caches after each response. */
+    * twice (types at plan time + names at encode time). For all
+    * series, a name or a regex it reads the env's driver snapshot and
+    * starts no job. Keyed by the selection AST PLUS the store identity
+    * (dir + store generation): an engine-level caller touching two
+    * databases on one thread without a transport drain must not get
+    * one store's cached series list for the other, and a non-DDL
+    * catalog change (insert bumps storeGeneration) invalidates
+    * naturally. Cleared with the query caches after each response. */
   private val selInfoMemo = ThreadLocal.withInitial(
     () => scala.collection.mutable.Map
       .empty[(String, Long, Sel, Option[Cexpr]), Seq[Row]])
@@ -394,38 +380,29 @@ object Planner {
       stmt.chains.flatMap(c => base.map(n => c.prefix + n + c.suffix)).distinct
   }
 
-  /** Catalog rows matching a series selection + where predicate. */
+  /** Catalog rows matching a series selection + where predicate: the
+    * snapshot's rows ([[snapRows]]), or for a group, tag or set
+    * selection one semi-join over the snapshot (SeriesMatch.eval). */
   private def selCatalog(sel: Option[Sel], where: Option[Cexpr], env: EngineEnv): DataFrame =
     snapRows(sel, where, env).map(_.df).getOrElse {
-      val cat = env.catalogLive
-      val base = sel match {
-        case None | Some(All) => cat
-        case Some(Name(n)) => cat.where(col("series") === n)
-        case Some(SelRegex(pat, ci)) =>
-          cat.where(col("series").rlike(SeriesMatch.anchored(pat, ci)))
-        case Some(s) =>
-          cat.join(SeriesMatch.eval(s, env.matchEnv), Seq("series"), "left_semi")
-      }
-      where.map(w => base.where(cexprCol(w, env))).getOrElse(base)
+      val matched = env.catalogLive.join(
+        SeriesMatch.eval(sel.getOrElse(All), env.matchEnv), Seq("series"), "left_semi")
+      where.fold(matched)(w => matched.where(cexprCol(w, env)))
     }
 
-  /** A selection of all series, a name or a regex over a store's
-    * driver snapshot, filtered in Scala: Catalyst walks a
-    * `LocalRelation`'s rows in every analyzer and optimizer rule, so no
-    * plan may carry more of a 1M-row catalog than the selection. The
-    * regex matches like `rlike` (`find` of the anchored pattern). None
-    * for the parquet-demo catalog and for group, tag and set
-    * selections (SeriesMatch.eval). */
+  /** A selection of all series, a name or a regex, filtered on the
+    * driver: Catalyst walks a `LocalRelation`'s rows in every analyzer
+    * and optimizer rule, so no plan may carry more of a 1M-row catalog
+    * than the selection. The regex matches like `rlike` (`find` of the
+    * anchored pattern). None for group, tag and set selections. */
   private def snapSel(sel: Option[Sel], env: EngineEnv): Option[CatalogSnapshot] =
-    env.snapshot.flatMap { s =>
-      sel match {
-        case None | Some(All) => Some(s)
-        case Some(Name(n)) => Some(s.filter(_ == n))
-        case Some(SelRegex(pat, ci)) =>
-          val re = java.util.regex.Pattern.compile(SeriesMatch.anchored(pat, ci))
-          Some(s.filter(re.matcher(_).find()))
-        case Some(_) => None
-      }
+    sel match {
+      case None | Some(All) => Some(env.snapshot)
+      case Some(Name(n)) => Some(env.snapshot.filter(_ == n))
+      case Some(SelRegex(pat, ci)) =>
+        val re = java.util.regex.Pattern.compile(SeriesMatch.anchored(pat, ci))
+        Some(env.snapshot.filter(re.matcher(_).find()))
+      case Some(_) => None
     }
 
   /** [[snapSel]] narrowed by the where predicate, also on the driver
@@ -434,8 +411,8 @@ object Planner {
       env: EngineEnv): Option[CatalogSnapshot] =
     snapSel(sel, env).map(s => where.fold(s)(w => s.where(cexprCol(w, env))))
 
-  /** The catalog rows of a selection + where predicate: a store's
-    * snapshot rows when the driver can select them, else collected. */
+  /** The catalog rows of a selection + where predicate: the snapshot's
+    * rows, collected only for a group, tag or set selection. */
   private def catRows(sel: Option[Sel], where: Option[Cexpr], env: EngineEnv): Seq[Row] =
     snapRows(sel, where, env).map(_.rows)
       .getOrElse(selCatalog(sel, where, env).collect().toSeq)
@@ -782,14 +759,16 @@ object Planner {
       ok(env, s"Successfully dropped user '$name'.")
 
     case DropSeries(sel, where, ignoreThreshold) =>
-      // never collect the names: count distributed, then materialize
-      // the matched set as a tombstone frame (point-in-time snapshot
-      // via localCheckpoint — later inserts re-matching the selection
-      // are NOT retroactively dropped)
-      val matched = selCatalog(sel, where, env).select(col("series"))
-      val n = matched.count()
+      // both counts read the snapshot's rows (a group, tag or set
+      // selection counts its semi-join), then the matched set is
+      // materialized as a tombstone frame (point-in-time snapshot via
+      // localCheckpoint — later inserts re-matching the selection are
+      // NOT retroactively dropped)
+      val rows = snapRows(sel, where, env)
+      val matched = rows.fold(selCatalog(sel, where, env))(_.df).select(col("series"))
+      val n = rows.fold(matched.count())(_.rows.size.toLong)
       if (!ignoreThreshold)
-        checkDropThreshold("series", n, env.catalogLive.count(),
+        checkDropThreshold("series", n, env.snapshot.rows.size.toLong,
           env.meta.dropThreshold)
       if (n > 0) env.meta.addDropped(matched)
       ok(env, s"Successfully dropped $n series.")
@@ -1017,8 +996,7 @@ object Planner {
     // through string losslessly)
     case SelectStmt(Seq(SelectChain(Seq(Agg(fn, None, _)), pre, suf)),
         sel, where, None, None)
-        if (fn == First || fn == Last) &&
-          (env.snapshot.isDefined || env.catalog.columns.contains("first_val")) =>
+        if fn == First || fn == Last =>
       val cat = selCatalog(Some(sel), where, env).where(col("length") > 0)
       val types = selInfo(sel, where, env).map(_._2).toSet
       val (tsCol, vCol) =

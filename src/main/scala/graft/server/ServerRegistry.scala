@@ -161,10 +161,14 @@ final class ServerRegistry(spark: SparkSession, defaultDb: String,
             dbs.remove(name) match {
               case Some(h) =>
                 h.release()
-                val dir = root.resolve(s"graft-db-$name")
-                if (Files.exists(dir))
-                  Files.walk(dir).iterator().asScala.toSeq.reverse
-                    .foreach(Files.deleteIfExists(_))
+                dbDirs.remove(name)
+                // the standalone store and, once new-pool made it a
+                // cluster, its pools
+                Seq(s"graft-db-$name", s"graft-db-$name-pools")
+                  .map(root.resolve).filter(Files.exists(_)).foreach { dir =>
+                    Files.walk(dir).iterator().asScala.toSeq.reverse
+                      .foreach(Files.deleteIfExists(_))
+                  }
                 (false, okMsg(s"Successfully dropped database '$name'."))
               case None => (true, err(s"Database '$name' does not exist"))
             }

@@ -671,7 +671,7 @@ class AnnSpec extends AnyFunSuite {
     assert(cellsOf(viaDispatch) === cellsOf(Ann.coarseAssignCompiled(e, bigCents)))
   }
 
-  test("pqAssign: compiled and join forms pick identical codes, ties to the lowest cid") {
+  test("pqAssign: one broadcast-join + min_by form, ties to the lowest cid") {
     // synthetic subvector stream (2 subs × 8 dims) with an EXACT-tie
     // vector: cells 0 and 1 of sub 0 are equidistant from it
     val sv = Seq(
@@ -688,20 +688,13 @@ class AnnSpec extends AnyFunSuite {
       (1, 0, Array(0.0, 0.0, 1.0, 0.0, 0.0, 0.0, 0.0, 0.0)),
       (1, 1, Array(0.0, 0.0, 0.0, 1.0, 0.0, 0.0, 0.0, 0.0))
     ).toDF("sub", "cid", "cv")
-    val entries = bk.collect()
-      .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2)))
-      .sortBy(x => (x._1, x._2))
-    def codesOf(df: org.apache.spark.sql.DataFrame) =
-      df.select(col("vec_id"), col("sub"), col("cid")).collect()
-        .map(r => (r.getLong(0), r.getInt(1), r.getInt(2))).toSet
-    val compiled = codesOf(Ann.pqAssignCompiled(sv, entries))
-    val joined = codesOf(Ann.pqAssignJoin(sv, bk))
-    assert(compiled === joined)
-    // the planted tie resolves to the LOWEST cid in both forms
-    assert(compiled.contains((1L, 0, 0)))
-    // the OPERATOR ships the join shape (min_by) — the compiled form
-    // is the r17/r18 twice-measured negative result (see pqAssign's
-    // docstring), kept only as the equivalence reference above
+    val codes = Ann.pqAssign(sv, bk).select(col("vec_id"), col("sub"), col("cid"))
+      .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2))).toSet
+    // nearest cells by hand; (0, 1) and the planted (1, 0) are exact
+    // ties and resolve to the LOWEST cid
+    assert(codes === Set((0L, 0, 0), (0L, 1, 0), (1L, 0, 0), (1L, 1, 0),
+      (2L, 0, 1), (2L, 1, 1)))
+    // the operator ships the broadcast-join + min_by shape
     assert(Ann.pqAssign(sv, bk).queryExecution.analyzed.toString
       .contains("min_by"),
       "pqAssign must keep the broadcast-join + min_by shape")

@@ -9,7 +9,7 @@ import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.parser.{Planner, QueryParser, SelectStmt}
+import graft.parser.{EngineEnv, Planner, QueryParser, SelectStmt}
 import graft.server.{ApiCore, PoolCluster}
 import graft.streaming.Ingest
 
@@ -82,6 +82,22 @@ class CatalogSnapshotSpec extends AnyFunSuite {
       """{"columns":["series_length"],"rows":[[null]]}""")
     assert(api.runQuery("count pools", 1L, "iris").get("rows").get(0).get(0)
       .asLong() >= 1L)
+    // the parquet-demo env (an events table, no Ingest store) reads the
+    // same snapshot code: 3 families × 4 (event_type, user) series
+    val demoDir = tmp("graft-snap-demo")
+    import spark.implicits._
+    (0 until 48).map(i => (i.toLong, i * 60000000000L, (i % 4).toLong,
+        Seq("click", "view")(i % 2), i * 0.5, s"p$i"))
+      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+      .write.parquet(s"$demoDir/events.parquet")
+    val demo = EngineEnv(spark, demoDir)
+    assert(Planner.query("count series", demo).collect().head.getLong(0) === 12L)
+    Seq("list series", "list series /f\\..*/", "count series",
+        "count series length", "count series where length > 5")
+      .foreach { q =>
+        val jobs = SparkTestSession.jobsOf(Planner.query(q, demo).collect())
+        assert(jobs === 0, s"parquet-demo `$q` ran $jobs Spark jobs")
+      }
   }
 
   test("after an own insert the next select folds the batch's rows in one job, never re-reading the catalog") {

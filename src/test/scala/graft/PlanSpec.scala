@@ -39,13 +39,14 @@ class PlanSpec extends AnyFunSuite {
     assert(!read.contains("props"), read)
   }
 
-  test("derived catalog is persisted: one query consults it via the cache") {
+  test("derived catalog is a driver snapshot: a catalog query scans no parquet") {
     val env = EngineEnv(spark, dir)
     val df = Planner.query("select count() from /^f\\..*/ where length > 10", env)
     df.collect()
-    // type dispatch + where-filter both read the InMemoryRelation, not
-    // a re-aggregated full scan
-    assert(plan(df).contains("InMemoryTableScan"), plan(df))
+    // type dispatch + where-filter both read the collected catalog rows,
+    // never a re-aggregated full scan
+    assert(plan(df).contains("LocalTableScan"), plan(df))
+    assert(!plan(df).contains("FileScan"), plan(df))
   }
 
   test("a select costs exactly one catalog job (plan types + encode names)") {
@@ -63,11 +64,13 @@ class PlanSpec extends AnyFunSuite {
       jobs
     }
     val env = EngineEnv(spark, dir)
-    // warm the persisted catalog + parquet footers outside the count
+    // warm the catalog snapshot + parquet footers outside the count
     Planner.query("select count() from /^f\\..*/", env).collect()
     Planner.drainQueryCaches()
-    assert(catalogJobs(env, "select sum(3600) from /^f\\..*/") === 1,
-      "plan+names must share one catalog collect")
+    // the parquet-demo catalog is a driver snapshot too: plan types and
+    // encode names read its rows and start no job
+    assert(catalogJobs(env, "select sum(3600) from /^f\\..*/") === 0,
+      "a warm parquet-demo select must not run a catalog job")
     // a server's ranged select: the shard-pruned frames reuse the
     // store view's catalog instead of re-reading catalog.parquet
     import spark.implicits._

@@ -418,4 +418,29 @@ class ServiceSpec extends AnyFunSuite {
       assert(poolsView.contains("[1,2]"), poolsView)
     } finally api.stop()
   }
+
+  test("drop-database removes a pooled database's pools: a re-created one starts empty") {
+    // the default store sits one level down, so the registry roots
+    // every database in a directory of this test's own
+    val root = Files.createTempDirectory("graft-svc-pools")
+    val api = new HttpApi(spark,
+      Files.createDirectories(root.resolve("graft")).toString)
+    val port = api.start()
+    val base = s"http://127.0.0.1:$port"
+    val pool = """{"dbname": "pl", "host": "localhost", "port": 9000,
+      |"username": "iris", "password": "siri"}""".stripMargin
+    try {
+      assert(post(s"$base/new-pool", pool)._2 === "\"OK\"")
+      assert(post(s"$base/insert/pl", """{"a": [[100, 1.0]], "b": [[100, 2.0]]}""")
+        ._1 === 200)
+      assert(post(s"$base/query/pl", """{"q": "count series"}""")._2 ===
+        """{"columns":["series"],"rows":[[2]]}""")
+      assert(post(s"$base/drop-database", """{"dbname": "pl"}""")._1 === 200)
+      assert(post(s"$base/new-pool", pool)._2 === "\"OK\"")
+      assert(post(s"$base/query/pl", """{"q": "count series"}""")._2 ===
+        """{"columns":["series"],"rows":[[0]]}""")
+      assert(post(s"$base/drop-database", """{"dbname": "pl"}""")._1 === 200)
+      assert(!Files.exists(root.resolve("graft-db-pl-pools")))
+    } finally api.stop()
+  }
 }
