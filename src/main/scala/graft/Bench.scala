@@ -165,6 +165,13 @@ object Bench {
     // bench (the filter below would otherwise just drop it)
     headline.filterNot(qs.contains).foreach(n =>
       System.err.println(s"BENCH WARNING: headline entry '$n' is not a registered query"))
+    // so must a SPARK_GRAFT_BENCH_ONLY name the filter below drops
+    only.toSeq.flatten.sorted
+      .filterNot(n => headline.contains(n) && qs.contains(n)).foreach { n =>
+        val why = if (qs.contains(n)) "is not in graft.Bench.headline"
+          else "is not a registered query"
+        System.err.println(s"BENCH WARNING: SPARK_GRAFT_BENCH_ONLY entry '$n' $why; it will not run")
+      }
     val results = headline.filter(qs.contains)
       .filter(n => only.forall(_.contains(n))).flatMap { name =>
       val times = Iterator.continually(once(name)).take(reps)

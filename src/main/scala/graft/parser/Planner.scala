@@ -2,7 +2,7 @@ package graft.parser
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, LongType, StringType}
+import org.apache.spark.sql.types.{DoubleType, LongType}
 
 import graft.engine.{Pipeline, SeriesMatch, SeriesStore}
 import graft.engine.Pipeline._
@@ -102,7 +102,7 @@ final case class EngineEnv(
 
   /** Snapshot of the (mutable) metastore for series matching. */
   def matchEnv: Env = Env(
-    catalog = catalogLive,
+    catalog = snapshot.df,
     groups = meta.groups.toMap,
     tagExists = meta.tagFrames.contains,
     tags = _ => {
@@ -112,9 +112,6 @@ final case class EngineEnv(
         .reduceOption(_ unionByName _)
         .getOrElse(Seq.empty[(String, String)].toDF("tag", "series"))
     })
-
-  /** The live catalog as one `LocalRelation` over the snapshot's rows. */
-  def catalogLive: DataFrame = snapshot.df
 }
 
 object Planner {
@@ -236,7 +233,7 @@ object Planner {
         else {
           // one job for all member counts: broadcast the (tiny) group
           // list and regex-match against the catalog
-          val counts = env.catalogLive
+          val counts = env.snapshot.df
             .crossJoin(broadcast(gdf))
             // group expressions compile anchored like any /regex/
             // (group.c:53 via re.c:31-44)
@@ -256,7 +253,7 @@ object Planner {
         if (frames.isEmpty) names.withColumn("series", lit(0L))
         else {
           val live = frames.reduce(_ unionByName _)
-            .join(env.catalogLive.select(col("series")), Seq("series"), "left_semi")
+            .join(env.snapshot.df.select(col("series")), Seq("series"), "left_semi")
             .groupBy(col("name")).agg(count(lit(1)).as("series"))
           names.join(live, Seq("name"), "left")
             .withColumn("series", coalesce(col("series"), lit(0L)))
@@ -385,7 +382,7 @@ object Planner {
     * selection one semi-join over the snapshot (SeriesMatch.eval). */
   private def selCatalog(sel: Option[Sel], where: Option[Cexpr], env: EngineEnv): DataFrame =
     snapRows(sel, where, env).map(_.df).getOrElse {
-      val matched = env.catalogLive.join(
+      val matched = env.snapshot.df.join(
         SeriesMatch.eval(sel.getOrElse(All), env.matchEnv), Seq("series"), "left_semi")
       where.fold(matched)(w => matched.where(cexprCol(w, env)))
     }
@@ -417,74 +414,11 @@ object Planner {
     snapRows(sel, where, env).map(_.rows)
       .getOrElse(selCatalog(sel, where, env).collect().toSeq)
 
-  /** Decide the typed base frame for a selection — the engine analog
-    * of the reference's per-series type dispatch. Metadata-sized
-    * collect: at most 3 distinct type values. */
-  private def baseFrame(sel: Sel, where: Option[Cexpr], env: EngineEnv,
-      types: Set[String]): DataFrame = {
-    val frame =
-      if (types == Set("integer")) env.pointsI
-      else if (types == Set("float")) env.pointsF
-      else if (types == Set("string")) env.pointsS
-      else if (types.subsetOf(Set("integer", "float"))) env.pointsM // int→double promotion (points.c:368-376)
-      else throw QueryError("Cannot use string and number series in one selection")
-    val matched = SeriesMatch.select(frame, sel, env.matchEnv)
-    if (where.isDefined || env.meta.droppedDf.isDefined)
-      matched.join(selCatalog(Some(sel), where, env).select(col("series")),
-        Seq("series"), "left_semi")
-    else matched
-  }
-
-  /** Mixed-type selection without merge: the reference evaluates each
-    * series independently, so a select over string+number (or
-    * integer+float) series returns every series with its OWN value
-    * type — integers stay integers (test_series.py:105-113). Each type
-    * family runs the chains on its exact frame; rows carry a `tp`
-    * column and a canonical string `val` (long/double round-trip
-    * losslessly) for the transport encoder to re-type per point. */
-  private def mixedSelect(chains: Seq[SelectChain], sel: Sel,
-      where: Option[Cexpr], range: Option[Stage], types: Set[String],
-      env: EngineEnv, keepPid: Boolean): DataFrame = {
-    val fams = Seq(
-      "integer" -> env.pointsI, "float" -> env.pointsF,
-      "string" -> env.pointsS).filter(f => types.contains(f._1))
-    val catSel = selCatalog(Some(sel), where, env)
-      .select(col("series"), col("type"))
-    val outs = fams.flatMap { case (tpName, frame) =>
-      val restricted = SeriesMatch.select(frame, sel, env.matchEnv)
-        .join(catSel.where(col("type") === tpName).select(col("series")),
-          Seq("series"), "left_semi")
-      // chains share one scan per family, like the single-type path
-      val base =
-        if (chains.size > 1) registerQueryCache(restricted.cache())
-        else restricted
-      chains.map { c =>
-        // per-family type checks — exactly the errors the reference
-        // raises per series (aggregate.c "Cannot use ... on string type.")
-        if (tpName == "string") checkStringOk(c.stages)
-        else checkNumericOk(c.stages)
-        val piped = Pipeline(base, range.toSeq ++ c.stages, keepPid)
-        val named =
-          if (c.prefix.nonEmpty || c.suffix.nonEmpty)
-            piped.withColumn("series",
-              concat(lit(c.prefix), col("series"), lit(c.suffix)))
-          else piped
-        val outTp = named.schema("val").dataType match {
-          case LongType => "integer"
-          case DoubleType => "float"
-          case _ => "string"
-        }
-        named.withColumn("tp", lit(outTp))
-          .withColumn("val", col("val").cast("string"))
-      }
-    }
-    val anyPid = outs.exists(_.columns.contains("pid"))
-    val unified = if (!anyPid) outs else outs.map { o =>
-      if (o.columns.contains("pid")) o
-      else o.withColumn("pid", lit(null).cast("long"))
-    }
-    unified.reduce(_.unionByName(_))
-  }
+  /** Prefix and suffix a chain's output series names
+    * (siridb_presuf_name, listener.c:4008-4020). */
+  private def presuf(df: DataFrame, pre: String, suf: String): DataFrame =
+    if (pre.isEmpty && suf.isEmpty) df
+    else df.withColumn("series", concat(lit(pre), col("series"), lit(suf)))
 
   /** Functions allowed on string ("log") series; everything else is a
     * type error (points.c:368-433, series.c:72-76). */
@@ -509,9 +443,6 @@ object Planner {
       throw QueryError("Cannot use a string filter on number type.")
     case _ => ()
   }
-
-  private def isStringFrame(df: DataFrame): Boolean =
-    df.schema("val").dataType == StringType
 
   /** Access bit a statement needs, per the reference's per-statement
     * enter_* checks (listener.c:692-1147,4949; access.h:8-17).
@@ -982,11 +913,8 @@ object Planner {
     // keeps no edges), like any empty chain: {"name": []}.
     case SelectStmt(Seq(SelectChain(Seq(Agg(Count, None, _)), pre, suf)),
         sel, where, None, None) =>
-      val out = selCatalog(Some(sel), where, env).where(col("length") > 0)
-        .select(col("series"), col("end").as("ts"), col("length").as("val"))
-      if (pre.nonEmpty || suf.nonEmpty)
-        out.withColumn("series", concat(lit(pre), col("series"), lit(suf)))
-      else out
+      presuf(selCatalog(Some(sel), where, env).where(col("length") > 0)
+        .select(col("series"), col("end").as("ts"), col("length").as("val")), pre, suf)
 
     // same skip-points path for bare first()/last(): the catalog's
     // first_val/last_val (canonical string form, maintained by
@@ -1015,9 +943,7 @@ object Planner {
           // its own type, test_series.py:105-113)
           cat.select(col("series"), tsCol.as("ts"), vCol.as("val"),
             col("type").as("tp"))
-      if (pre.nonEmpty || suf.nonEmpty)
-        out.withColumn("series", concat(lit(pre), col("series"), lit(suf)))
-      else out
+      presuf(out, pre, suf)
 
     case SelectStmt(chains, sel, where, range, merge) =>
       // a time-ranged select on a shard-partitioned store reads only
@@ -1041,13 +967,6 @@ object Planner {
       val selTypes = selInfo(sel, where, envForScan).map(_._2).toSet
       if (selTypes.contains("string") && selTypes.size > 1 && merge.isDefined)
         throw QueryError("Cannot merge string and number series.") // points.c:372
-      if (selTypes.size > 1 && merge.isEmpty)
-        // the reference evaluates every series independently, so a
-        // mixed-type selection returns each series with its own value
-        // type (test_series.py:105-113: string+integer+double in one
-        // select) — run the chains per type family and tag rows so the
-        // encoder emits the right JSON type per point
-        return mixedSelect(chains, sel, where, range, selTypes, envForScan, keepPid)
       // standing-rollup read path: a full-range, single-chain
       // count/sum/min/max select whose bucket width is a whole
       // multiple of the rollup's answers from the pre-aggregated
@@ -1063,9 +982,8 @@ object Planner {
       for ((rBucket, rdf) <- env.rollup) (chains, range, merge) match {
         case (Seq(SelectChain(Seq(Agg(fn, Some(gb), 0)), pre, suf)), None, None)
             if gb % rBucket == 0 &&
-              (fn == Count && selTypes.subsetOf(Set("float", "integer")) &&
-                 selTypes.nonEmpty ||
-               (fn == Sum || fn == Min || fn == Max) &&
+              (fn == Count && selTypes == Set("integer") ||
+               (fn == Count || fn == Sum || fn == Min || fn == Max) &&
                  selTypes == Set("float")) =>
           val names = selCatalog(Some(sel), where, envForScan)
             .select(col("series"))
@@ -1075,67 +993,86 @@ object Planner {
             case Min => min(col("min"))
             case _ => max(col("max"))
           }
-          val out = rdf.join(names, Seq("series"))
+          return presuf(rdf.join(names, Seq("series"))
             .groupBy(col("series"),
               expr(s"((bucket + ${gb - 1L}) div $gb) * $gb").as("ts"))
-            .agg(v.as("val"))
-          return if (pre.nonEmpty || suf.nonEmpty)
-            out.withColumn("series", concat(lit(pre), col("series"), lit(suf)))
-          else out
+            .agg(v.as("val")), pre, suf)
         case _ => ()
       }
-      val base0 = baseFrame(sel, where, envForScan, selTypes)
-      val stringSeries = isStringFrame(base0)
-      // multiple chains share one scan — the reference's points_map
-      // cache (listener.c:5626-5658)
-      val base =
-        if (chains.size > 1) registerQueryCache(base0.cache()) else base0
-      val piped = chains.map { c =>
-        if (stringSeries) checkStringOk(c.stages) else checkNumericOk(c.stages)
-        (c, Pipeline(base, range.toSeq ++ c.stages, keepPid))
-      }
-      val outs = merge match {
-        case Some(MergeAs(name, using)) =>
-          if (stringSeries) checkStringOk(using) else checkNumericOk(using)
-          // each chain merges separately into its presuf'd destination
-          // (siridb_presuf_name, listener.c:4008-4020; test_select.py's
-          // prefixed min/max merge yields min-NAME and max-NAME), and
-          // an empty destination is the reference's merge error
-          piped.map { case (c, o) =>
-            val dest = c.prefix + name + c.suffix
-            if (dest.isEmpty || dest
-                .getBytes(java.nio.charset.StandardCharsets.UTF_8).length >= 65535)
-              throw QueryError("Error while merging points. Make sure the " +
-                "destination series name is valid.")
-            Pipeline.merge(o, dest, using, keepPid)
-          }
-        case None =>
-          piped.map { case (c, o) =>
-            if (c.prefix.nonEmpty || c.suffix.nonEmpty)
-              o.withColumn("series",
-                concat(lit(c.prefix), col("series"), lit(c.suffix)))
-            else o
-          }
-      }
-      // chains with different value types (count → int vs mean →
-      // float) keep each chain's OWN type like the reference — tag
-      // rows for the transport encoder instead of promoting longs to
-      // doubles (same per-row tp mechanism as mixedSelect)
-      val mixedOut = outs.map(_.schema("val").dataType).distinct.size > 1
-      val unified0 = if (mixedOut)
-        outs.map { o =>
-          val outTp = o.schema("val").dataType match {
-            case LongType => "integer"
-            case DoubleType => "float"
-            case _ => "string"
-          }
-          o.withColumn("tp", lit(outTp))
-            .withColumn("val", col("val").cast("string"))
+      // the type families the chains run over. The reference evaluates
+      // every series on its own, so a mixed-type selection without
+      // merge answers each series in its own value type
+      // (test_series.py:105-113) and runs the chains once per family.
+      // Every other selection reads one frame; "number" is the numeric
+      // view an integer+float merge reads, ints promoted to double
+      // (points.c:368-376).
+      val families: Seq[String] =
+        if (selTypes.size > 1 && merge.isEmpty)
+          Seq("integer", "float", "string").filter(selTypes)
+        else if (selTypes.size == 1) selTypes.toSeq
+        else Seq("number")
+      // SeriesMatch.select restricts the points to the selection; a
+      // where predicate or a tombstone also needs its catalog rows
+      val live = Option.when(where.isDefined || env.meta.droppedDf.isDefined)(
+        selCatalog(Some(sel), where, envForScan).select(col("series")))
+      val outs = families.flatMap { family =>
+        val frame = family match {
+          case "integer" => envForScan.pointsI
+          case "float" => envForScan.pointsF
+          case "string" => envForScan.pointsS
+          case _ => envForScan.pointsM
         }
-      else outs
+        val matched = SeriesMatch.select(frame, sel, envForScan.matchEnv)
+        val restricted = live.fold(matched)(matched.join(_, Seq("series"), "left_semi"))
+        // multiple chains share one scan per family — the reference's
+        // points_map cache (listener.c:5626-5658)
+        val base =
+          if (chains.size > 1) registerQueryCache(restricted.cache()) else restricted
+        // exactly the type errors the reference raises per series
+        // (aggregate.c "Cannot use ... on string type.")
+        val check: Seq[Stage] => Unit =
+          if (family == "string") checkStringOk else checkNumericOk
+        val piped = chains.map { c =>
+          check(c.stages)
+          (c, Pipeline(base, range.toSeq ++ c.stages, keepPid))
+        }
+        merge match {
+          case Some(MergeAs(name, using)) =>
+            check(using)
+            // each chain merges separately into its presuf'd destination
+            // (siridb_presuf_name, listener.c:4008-4020; test_select.py's
+            // prefixed min/max merge yields min-NAME and max-NAME), and
+            // an empty destination is the reference's merge error
+            piped.map { case (c, o) =>
+              val dest = c.prefix + name + c.suffix
+              if (dest.isEmpty || dest
+                  .getBytes(java.nio.charset.StandardCharsets.UTF_8).length >= 65535)
+                throw QueryError("Error while merging points. Make sure the " +
+                  "destination series name is valid.")
+              Pipeline.merge(o, dest, using, keepPid)
+            }
+          case None => piped.map { case (c, o) => presuf(o, c.prefix, c.suffix) }
+        }
+      }
+      // rows of more than one family, or of chains with different value
+      // types (count → integer next to mean → float), keep each their
+      // OWN type like the reference: they carry a `tp` column and a
+      // canonical string `val` (long/double round-trip losslessly) for
+      // the transport encoder to re-type per point
+      val typed =
+        if (families.size > 1 || outs.map(_.schema("val").dataType).distinct.size > 1)
+          outs.map { o =>
+            val tp = o.schema("val").dataType match {
+              case LongType => "integer"
+              case DoubleType => "float"
+              case _ => "string"
+            }
+            o.withColumn("tp", lit(tp)).withColumn("val", col("val").cast("string"))
+          }
+        else outs
       // unify pid presence across chains (aggregated chains lost it)
-      val anyPid = unified0.exists(_.columns.contains("pid"))
-      val unified = if (!anyPid) unified0 else unified0.map { o =>
+      val anyPid = typed.exists(_.columns.contains("pid"))
+      val unified = if (!anyPid) typed else typed.map { o =>
         if (o.columns.contains("pid")) o
         else o.withColumn("pid", lit(null).cast("long"))
       }

@@ -364,8 +364,9 @@ final class ApiCore(spark: SparkSession, storeDir: String,
       else if (tsFactor > 1.0) (math.round(tsFactor), 1L)
       else (1L, math.round(1.0 / tsFactor))
     val valType = df.schema("val").dataType
-    // mixed-type selections carry a per-row `tp` with the value in
-    // canonical string form (Planner.mixedSelect) — re-type per point
+    // selections that mix type families, or chains of different value
+    // types, carry a per-row `tp` with the value in canonical string
+    // form (Planner.run's select loop) — re-type per point
     val hasTp = df.columns.contains("tp")
     val ord =
       if (df.columns.contains("pid")) Seq(col("series"), col("ts"), col("pid"))

@@ -296,6 +296,29 @@ class GoldenSliceSpec extends AnyFunSuite {
     assert(cm.get("m-integer").get(0).get(1).isFloatingPointNumber)
   }
 
+  test("mixed-type select with where and a dropped series keeps each survivor's own type") {
+    val dir = Files.createTempDirectory("graft-mixedwhere").toString
+    val api = new graft.server.ApiCore(spark, dir)
+    api.runInsert(mapper.readTree(
+      """{"int-a": [[1538660000, 5], [1538660010, 7]],
+        |  "int-b": [[1538660000, 1], [1538660010, 2]],
+        |  "flt-a": [[1538660000, 1.5], [1538660010, 2.5]],
+        |  "flt-b": [[1538660000, 9.5]],
+        |  "str-a": [[1538660000, "alpha"], [1538660010, "beta"],
+        |            [1538660020, "gamma"]]}""".stripMargin
+        .replaceAll("\n\\s*", "")), "iris")
+    api.runQuery("drop series 'int-b' set ignore_threshold true", 1L, "iris")
+    // int-b is tombstoned and flt-b (one point) fails the where; each
+    // survivor's count is an integer and its first() keeps its type
+    val r = api.runQuery(
+      """select count(1d) prefix "c-", first(1d) prefix "f-" from /.*/ where length > 1""",
+      1L, "iris")
+    assert(r.toString ===
+      """{"c-flt-a":[[1538697600,2]],"c-int-a":[[1538697600,2]],""" +
+      """"c-str-a":[[1538697600,3]],"f-flt-a":[[1538697600,1.5]],""" +
+      """"f-int-a":[[1538697600,5]],"f-str-a":[[1538697600,"alpha"]]}""")
+  }
+
   test("prefixed per-chain merge golden — test_select.py:505-514") {
     val dir = Files.createTempDirectory("graft-presufmerge").toString
     val api = new graft.server.ApiCore(spark, dir)

@@ -89,6 +89,39 @@ class PlanSpec extends AnyFunSuite {
       "a warm store view's select must not run a catalog job")
   }
 
+  test("one select loop: a scan cache per family read, tp only when families or types mix") {
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    import org.apache.spark.sql.types.{DoubleType, LongType, StringType}
+    val env = EngineEnv(spark, dir)
+    // (distinct caches, InMemoryRelation reads) in the optimized plan
+    def caches(df: DataFrame): (Int, Int) = {
+      val rels = df.queryExecution.optimizedPlan.collect {
+        case r: InMemoryRelation => r.cacheBuilder
+      }
+      (rels.distinct.size, rels.size)
+    }
+    try {
+      // a two-chain mixed select reads all three families: one cached
+      // scan per family, read once by each chain; its rows are tagged
+      // even though every chain outputs a count
+      val mixed = Planner.query(
+        """select count(1d) prefix "d-", count(1h) prefix "h-" from /.*/""", env)
+      assert(caches(mixed) === (3, 6), mixed.queryExecution.optimizedPlan)
+      assert(mixed.columns.contains("tp"))
+      assert(mixed.schema("val").dataType === StringType)
+      // a single-family select: one shared scan, no tp column, and the
+      // family's own value type
+      Seq("i" -> LongType, "f" -> DoubleType, "s" -> StringType).foreach {
+        case (fam, valType) =>
+          val one = Planner.query(
+            s"""select first(1d) prefix "a-", last(1d) prefix "b-" from /^$fam\\..*/""", env)
+          assert(caches(one) === (1, 2), one.queryExecution.optimizedPlan)
+          assert(!one.columns.contains("tp"), one.columns.toSeq)
+          assert(one.schema("val").dataType === valType, fam)
+      }
+    } finally Planner.drainQueryCaches()
+  }
+
   test("ANN top-k has no global per-query sort of the scored corpus") {
     val df = Ann.cosineTopK(graft.core.Tables.embeddings(spark, dir),
       nQueries = 5, k = 3)
@@ -558,7 +591,7 @@ class PlanSpec extends AnyFunSuite {
 
   test("tag membership stays distributed: tagging every series puts no name list on the driver") {
     val env = EngineEnv(spark, dir)
-    val total = env.catalogLive.count()
+    val total = env.snapshot.df.count()
     val msg = Planner.query("alter series /.*/ tag `everything`", env)
       .collect().head.getString(0)
     assert(msg === s"Successfully tagged $total series.")
