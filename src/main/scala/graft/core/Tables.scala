@@ -117,10 +117,14 @@ object Tables {
           (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
             graft.functions.Shingles(children(0), children(1))))
       }
-      // push count/min/max over raw parquet down to footer metadata:
-      // the adaptive audits (Adaptive.modulus) pay an eager full-table
-      // count at plan-construction time — with pushdown that probe is
-      // a metadata read at ANY corpus size instead of a scan job
+      // answer count/min/max over parquet from footer metadata. Spark
+      // pushes aggregates into DataSource V2 parquet scans only, and
+      // this session reads parquet through V1 (parquet is in the
+      // default spark.sql.sources.useV1SourceList), so no read here —
+      // Adaptive.modulus's eager count probes included — is answered
+      // from footers. A V2 scan would fail a min/max over a double
+      // chunk holding NaN, whose footer has no min/max; PlanSpec pins
+      // both the answer and the reach
       .config("spark.sql.parquet.aggregatePushdown", "true")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.adaptive.enabled", "true")

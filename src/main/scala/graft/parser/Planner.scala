@@ -918,7 +918,7 @@ object Planner {
 
     // same skip-points path for bare first()/last(): the catalog's
     // first_val/last_val (canonical string form, maintained by
-    // Ingest.appendBatch / derived in SeriesStore.catalog) answer them
+    // Ingest.mergedCatalog / derived in SeriesStore.catalog) answer them
     // without reading point data (aggregate.c:495-510, series.c:1006+);
     // the cast back to the family type is exact (long/double round-trip
     // through string losslessly)

@@ -620,7 +620,9 @@ final class ApiCore(spark: SparkSession, storeDir: String,
       meta.removeDropped(names)
       meta.persistTo(spark, metaHome)
     }
-    Ingest.appendBatch(rows.toDF(), storeDir, shardDuration, durationLog)
+    // the batch is already on the driver: merged there against the
+    // catalog snapshot, two Spark jobs (Ingest.appendRows)
+    Ingest.appendRows(spark, rows, storeDir, shardDuration, durationLog)
     meta.receivedPoints.addAndGet(rows.size)
     // live tee: forward the accepted insert body to the configured
     // endpoint as a CPROTO insert package (insert.c:350 → tee.c)

@@ -39,14 +39,23 @@ import graft.engine.SeriesStore
   * driver, so `list`/`count series`, a select's type and name lookup
   * and the bare count()/first()/last() skip-points fast path
   * (aggregate.c:495-510) start no Spark job. The snapshot advances
-  * from each insert's own merged rows, one batch-sized collect at the
-  * next read; only a first open, a removal, a catalog rebuild or
-  * another process's mutation reloads it from catalog.parquet.
+  * from each insert's own merged rows; only a first open, a removal, a
+  * catalog rebuild or another process's mutation reloads it from
+  * catalog.parquet.
   *
-  * At scale each micro-batch append is a partitioned parquet write and
-  * the catalog upsert aggregates only the batch (plus a catalog-sized
-  * rewrite that only scans the old catalog) — nothing re-scans
-  * history.
+  * Two entry points append a batch, with one type rule, one coercion
+  * ([[coerce]]) and one catalog merge ([[mergedCatalog]]):
+  *   - [[appendRows]], a batch already on the driver (every server
+  *     insert): the reference resolves each series against its
+  *     in-memory map before appending (SURVEY §3.3), and so does this —
+  *     it merges against the snapshot on the driver and runs two Spark
+  *     jobs, one point write and one catalog write;
+  *   - [[appendBatch]], a distributed frame (the streaming sink, pool
+  *     expansion copies, bulk loads): one grouped pass over the batch
+  *     joined to the catalog, nothing batch-sized on the driver.
+  * Either way the append is a partitioned parquet write and the catalog
+  * upsert aggregates only the batch (plus a catalog-sized rewrite that
+  * only scans the old catalog) — nothing re-scans history.
   *
   * Maintenance, every job under the store lock:
   *   - [[compact]] is the one shard-rewrite pass (the reference's
@@ -417,10 +426,13 @@ object Ingest {
     }
   }
 
-  /** One micro-batch: coerce values to the series' established type,
-    * append points, merge the batch's per-series stats into the
-    * catalog. Runs sequentially per stream (Spark serializes
-    * foreachBatch calls).
+  /** One micro-batch as a distributed frame (the streaming sink, the
+    * pool-expansion copies, the Verify/Bench store loads): coerce values
+    * to the series' established type, append points, merge the batch's
+    * per-series stats into the catalog. Runs sequentially per stream
+    * (Spark serializes foreachBatch calls). Nothing batch-sized reaches
+    * the driver, so a batch of any size (1M series) stays distributed; a
+    * batch already on the driver goes through [[appendRows]].
     *
     * Type rule (siridb_series_ensure_type, src/siri/db/series.c:1141):
     * the FIRST point ever inserted fixes a series' type; later points
@@ -444,58 +456,32 @@ object Ingest {
       col("val_num").as("val"), col("val_int"), col("val_str"),
       col("tp"), col("pid"))
     val existing = catalog(spark, storeDir)
+    val before = catalogFiles(spark, storeDir)
 
     // One grouped pass over the raw batch, joined to the catalog: one
-    // row per BATCH series carrying its merged catalog row. The
-    // established type is the catalog type, else the type of the
-    // series' first point in this batch; a series already in the
-    // catalog adds its count and widens start/end, and first/last move
-    // only when the batch reaches past them (an equal end goes to the
-    // batch, whose pids are newer). The batch's first/last values are
-    // its raw first/last points by (ts, pid) under the same coercion
-    // as the points. Checkpointed (distributed, nothing collected):
-    // the point write and the catalog rewrite both read it.
+    // merged catalog row per BATCH series ([[mergedCatalog]]).
+    // Checkpointed (distributed, nothing collected): the point write
+    // and the catalog rewrite both read it.
     val ord = struct(col("ts"), col("pid"))
     val point = struct(col("ts"), col("pid"), col("val"), col("val_int"),
       col("val_str"), col("tp"))
-    val etp = coalesce(col("type"), col("first.tp"))
-    def edge(e: String) = valueString(etp, coerce(c => col(s"$e.$c"), etp))
-    // a new series, or one `drop shards` emptied (its row keeps the
-    // type but no edges): the batch supplies both edges
-    val empty = coalesce(col("length"), lit(0L)) === 0L
     val touched = raw.groupBy(col("series"))
       .agg(count(lit(1)).as("n"), min(col("ts")).as("lo"),
         max(col("ts")).as("hi"), min_by(point, ord).as("first"),
         max_by(point, ord).as("last"))
       .join(existing, Seq("series"), "left")
-      .select(col("series"),
-        (coalesce(col("length"), lit(0L)) + col("n")).as("length"),
-        least(col("start"), col("lo")).as("start"),
-        greatest(col("end"), col("hi")).as("end"),
-        etp.as("type"),
-        when(empty || col("lo") < col("start"), edge("first"))
-          .otherwise(col("first_val")).as("first_val"),
-        when(empty || col("hi") >= col("end"), edge("last"))
-          .otherwise(col("last_val")).as("last_val"),
-        SeriesStore.poolOf("series").as("pool"))
+      .select(mergedCatalog: _*)
       .localCheckpoint(eager = true)
 
-    // the points, coerced once. String ("log") series shard at their
-    // own duration (src/siri/db/db.c:395-424: duration_num vs
-    // duration_log). Rebalanced by shard directory: AQE keeps each
-    // shard's rows in one task, so a batch writes one file per touched
-    // shard (a small batch coalesces to one task), and splits only a
-    // shard holding more than the advisory partition size, so a large
-    // batch into few shards still writes in parallel.
+    // the points, coerced once. Rebalanced by shard directory: AQE
+    // keeps each shard's rows in one task, so a batch writes one file
+    // per touched shard (a small batch coalesces to one task), and
+    // splits only a shard holding more than the advisory partition
+    // size, so a large batch into few shards still writes in parallel.
     val pts = raw.join(touched.select(col("series"), col("type").as("etp")), Seq("series"))
       .withColumns(coerce(col, col("etp"))).drop("etp")
-    pts.withColumn("sgroup",
-        when(col("tp") === "string", lit("log")).otherwise(lit("num")))
-      .withColumn("shard", when(col("tp") === "string",
-        expr(s"ts div $durationLog")).otherwise(expr(s"ts div $shardDuration")))
-      .hint("rebalance", col("sgroup"), col("shard"))
-      .write.mode("append").partitionBy("sgroup", "shard")
-      .parquet(pointsPath(storeDir))
+    writePoints(pts, storeDir, shardDuration, durationLog,
+      _.hint("rebalance", col("sgroup"), col("shard")))
 
     // standing rollups are materialized views of the store: the batch's
     // delta rows keep them exact (see the rollup section below)
@@ -509,8 +495,136 @@ object Ingest {
         .unionByName(touched))
     // the driver snapshot advances from the same merged rows at its
     // next read; nothing catalog-sized is built here
-    catalogHolder(storeDir).advance(touched)
+    catalogHolder(storeDir).advance(touched, before, catalogFiles(spark, storeDir))
   }
+
+  /** One batch already on the driver (a server insert, or one pool's
+    * share of a cluster insert): the same type rule, coercion and
+    * catalog merge as [[appendBatch]], in two Spark jobs — one point
+    * write and one catalog write.
+    *   - The merge runs on the driver: each series' count, ts range and
+    *     first/last point by (ts, pid) are computed in Scala and paired
+    *     with the series' row in the store's snapshot; the
+    *     [[mergedCatalog]] Columns then run over a batch-sized
+    *     `LocalRelation` of those pairs, which Spark's
+    *     ConvertToLocalRelation evaluates without a job.
+    *   - The points carry their established type into the write plan,
+    *     where the same [[coerce]] Columns run, one slice per shard
+    *     directory, so each touched shard gets one file with no shuffle.
+    *   - The catalog is rewritten as the old rows minus the batch's
+    *     names plus the merged rows, and the snapshot advances from the
+    *     merged rows, so the next read starts no job.
+    * The snapshot is merged into only while catalog.parquet is the file
+    * set it was loaded from or last written as; a writer that bumps no
+    * store generation (a streaming sink in another process) changes
+    * the files, and the snapshot is reloaded first. */
+  def appendRows(spark: SparkSession, rows: Seq[PointIn], storeDir: String,
+      shardDuration: Long, durationLog: Long = 86400L): Unit =
+    withStoreLock(storeDir) {
+      if (rows.nonEmpty)
+        appendRowsLocked(spark, rows, storeDir, shardDuration, durationLog)
+    }
+
+  private def appendRowsLocked(spark: SparkSession, rows: Seq[PointIn],
+      storeDir: String, shardDuration: Long, durationLog: Long): Unit = {
+    val snap = catalogHolder(storeDir).current(spark)
+    val bySeries = rows.groupBy(_.series)
+    val old = snap.filter(bySeries.contains).rows
+      .map(r => r.getString(0) -> r).toMap
+    def point(p: PointIn) = Row(p.ts, p.pid, p.val_num, p.val_int, p.val_str, p.tp)
+    val ord = Ordering.by((p: PointIn) => (p.ts, p.pid))
+    val summary = rows.iterator.map(_.series).distinct.map { s =>
+      val ps = bySeries(s)
+      Row.fromSeq(Seq(s, ps.size.toLong, ps.iterator.map(_.ts).min,
+          ps.iterator.map(_.ts).max, point(ps.min(ord)), point(ps.max(ord))) ++
+        old.get(s).fold(Seq.fill(CatalogSchema.size - 1)(null: Any))(_.toSeq.tail))
+    }.toVector
+    val merged = spark.createDataFrame(summary.asJava, SummarySchema)
+      .select(mergedCatalog: _*).collect().toVector
+
+    // each point carries its series' established type; one slice per
+    // shard directory
+    val etp = merged.iterator.map(r => r.getString(0) -> r.getString(4)).toMap
+    val slices = rows.groupBy { p =>
+      val log = etp(p.series) == "string"
+      (log, p.ts / (if (log) durationLog else shardDuration))
+    }.values.map(_.map(p => Row(p.series, p.ts, p.val_num, p.val_int,
+      p.val_str, p.tp, p.pid, etp(p.series)))).toVector
+    val pts = spark.createDataFrame(
+        spark.sparkContext.parallelize(slices, slices.size).flatMap(identity),
+        RawSchema)
+      .withColumns(coerce(col, col("etp"))).drop("etp")
+    writePoints(pts, storeDir, shardDuration, durationLog, identity)
+    rollupAppend(spark, storeDir, pts)
+
+    swap(spark, new Path(catalogPath(storeDir)),
+      catalog(spark, storeDir).where(!col("series").isin(merged.map(_.getString(0)): _*))
+        .unionByName(spark.createDataFrame(merged.asJava, CatalogSchema)))
+    catalogHolder(storeDir).install(snap.advance(merged),
+      catalogFiles(spark, storeDir))
+  }
+
+  /** One point as a struct, the form first/last travel in. */
+  private val PointStruct = StructType(Seq(StructField("ts", LongType),
+    StructField("pid", LongType), StructField("val", DoubleType),
+    StructField("val_int", LongType), StructField("val_str", StringType),
+    StructField("tp", StringType)))
+
+  /** A batch series' summary next to its catalog row (null columns for
+    * a new series): what [[mergedCatalog]] reads. */
+  private val SummarySchema = StructType(Seq(StructField("series", StringType),
+    StructField("n", LongType), StructField("lo", LongType),
+    StructField("hi", LongType), StructField("first", PointStruct),
+    StructField("last", PointStruct)) ++ CatalogSchema.fields.tail)
+
+  /** A driver-side point with its series' established type `etp`. */
+  private val RawSchema = StructType(Seq(StructField("series", StringType),
+    StructField("ts", LongType), StructField("val", DoubleType),
+    StructField("val_int", LongType), StructField("val_str", StringType),
+    StructField("tp", StringType), StructField("pid", LongType),
+    StructField("etp", StringType)))
+
+  /** The catalog merge, as [[CatalogSchema]] Columns over one row per
+    * batch series ([[SummarySchema]]: its count `n`, ts range `lo`/`hi`
+    * and `first`/`last` points by (ts, pid), next to its catalog row,
+    * null for a new series). The established type is the catalog type,
+    * else the type of the series' first point in the batch; a series
+    * already in the catalog adds its count and widens start/end, and
+    * first/last move only when the batch reaches past them (an equal
+    * end goes to the batch, whose pids are newer). The batch's
+    * first/last values are its raw first/last points under the same
+    * coercion as the points. A new series, or one `drop shards` emptied
+    * (its row keeps the type but no edges), takes both edges from the
+    * batch. */
+  private def mergedCatalog: Seq[Column] = {
+    val etp = coalesce(col("type"), col("first.tp"))
+    def edge(e: String) = valueString(etp, coerce(c => col(s"$e.$c"), etp))
+    val empty = coalesce(col("length"), lit(0L)) === 0L
+    Seq(col("series"),
+      (coalesce(col("length"), lit(0L)) + col("n")).as("length"),
+      least(col("start"), col("lo")).as("start"),
+      greatest(col("end"), col("hi")).as("end"),
+      etp.as("type"),
+      when(empty || col("lo") < col("start"), edge("first"))
+        .otherwise(col("first_val")).as("first_val"),
+      when(empty || col("hi") >= col("end"), edge("last"))
+        .otherwise(col("last_val")).as("last_val"),
+      SeriesStore.poolOf("series").as("pool"))
+  }
+
+  /** Append coerced points under their shard directories. String
+    * ("log") series shard at their own duration
+    * (src/siri/db/db.c:395-424: duration_num vs duration_log);
+    * `distribute` sets how the rows reach the writing tasks. */
+  private def writePoints(pts: DataFrame, storeDir: String,
+      shardDuration: Long, durationLog: Long,
+      distribute: DataFrame => DataFrame): Unit =
+    distribute(pts.withColumn("sgroup",
+        when(col("tp") === "string", lit("log")).otherwise(lit("num")))
+      .withColumn("shard", when(col("tp") === "string",
+        expr(s"ts div $durationLog")).otherwise(expr(s"ts div $shardDuration"))))
+      .write.mode("append").partitionBy("sgroup", "shard")
+      .parquet(pointsPath(storeDir))
 
   /** Replace the frame stored at `dir` with `rows`: one `coalesce(1)`
     * write to `<dir><tmpSuffix>`, then delete and rename. Every rewrite
@@ -1060,22 +1174,29 @@ object Ingest {
     }
   }
 
-  /** One store's snapshot and the merged-row frames of the inserts
-    * committed since it was taken. An insert hands its checkpointed
-    * rows over ([[advance]]) and the next read folds them in with one
-    * batch-sized collect. Reads and hand-overs serialize on the holder,
-    * so concurrent readers fold each delta once. A removal or a catalog
-    * rebuild ([[reloadCatalog]]) discards the holder, so the next read
-    * loads catalog.parquet whole into a new one; a delta folded after a
-    * load that already saw it replaces its rows with the same rows. */
+  /** One store's snapshot, the merged-row frames of the [[appendBatch]]
+    * calls committed since it was taken, and the catalog.parquet file
+    * set the two stand for. [[appendRows]] merges into the snapshot and
+    * installs the result ([[install]]); [[appendBatch]] hands its
+    * checkpointed rows over ([[advance]]) and the next read folds them
+    * in with one batch-sized collect. Reads and hand-overs serialize on
+    * the holder, so concurrent readers fold each delta once. A removal
+    * or a catalog rebuild ([[reloadCatalog]]) discards the holder, so
+    * the next read loads catalog.parquet whole into a new one; a delta
+    * folded after a load that already saw it replaces its rows with the
+    * same rows. */
   private final class CatalogHolder(storeDir: String) {
     private var snap: Option[CatalogSnapshot] = None
     private var pending: Vector[DataFrame] = Vector.empty
+    private var files: Set[(String, Long, Long)] = Set.empty
 
     def read(spark: SparkSession): CatalogSnapshot = synchronized {
       val s = snap match {
-        case None => new CatalogSnapshot(spark,
-          catalog(spark, storeDir).collect().toVector)
+        case None =>
+          // listed before the read: a rewrite in between makes the
+          // listing stale, never the rows
+          files = catalogFiles(spark, storeDir)
+          new CatalogSnapshot(spark, catalog(spark, storeDir).collect().toVector)
         case Some(cur) if pending.isEmpty => cur
         case Some(cur) => cur.advance(pending.reduce(_ unionByName _)
           .select(CatalogSchema.fieldNames.toSeq.map(col): _*).collect())
@@ -1085,17 +1206,52 @@ object Ingest {
       s
     }
 
-    /** Hold an insert's merged rows for the next read. Before any read
-      * there is nothing to advance: the first read loads the file. The
-      * held frames pin their checkpoint blocks, so a store that is
-      * written far more often than read drops them past
+    /** The snapshot an insert merges into (the caller holds the store
+      * lock): this holder's, while catalog.parquet is still the file set
+      * it was loaded from or last written as; otherwise catalog.parquet
+      * reloaded. */
+    def current(spark: SparkSession): CatalogSnapshot = synchronized {
+      if (files != catalogFiles(spark, storeDir)) snap = None
+      read(spark)
+    }
+
+    /** The snapshot an insert merged, and the files it wrote. */
+    def install(s: CatalogSnapshot, written: Set[(String, Long, Long)]): Unit =
+      synchronized {
+        snap = Some(s)
+        pending = Vector.empty
+        files = written
+      }
+
+    /** Hold an [[appendBatch]]'s merged rows for the next read, if the
+      * snapshot stands for the files that batch merged into (`before`).
+      * Before any read there is nothing to advance: the first read
+      * loads the file. The held frames pin their checkpoint blocks, so a
+      * store that is written far more often than read drops them past
       * [[MaxPendingDeltas]], and its next read loads the file. */
-    def advance(delta: DataFrame): Unit = synchronized {
-      if (snap.isDefined) {
-        if (pending.size < MaxPendingDeltas) pending :+= delta
-        else { snap = None; pending = Vector.empty }
+    def advance(delta: DataFrame, before: Set[(String, Long, Long)],
+        after: Set[(String, Long, Long)]): Unit = synchronized {
+      if (snap.isDefined && files == before && pending.size < MaxPendingDeltas) {
+        pending :+= delta
+        files = after
+      } else {
+        snap = None
+        pending = Vector.empty
       }
     }
+  }
+
+  /** catalog.parquet's part files as (name, length, modification time).
+    * Every write names its files anew, so an equal listing is the same
+    * catalog. */
+  private def catalogFiles(spark: SparkSession,
+      storeDir: String): Set[(String, Long, Long)] = {
+    val dir = new Path(catalogPath(storeDir))
+    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
+    if (!fs.exists(dir)) Set.empty
+    else fs.listStatus(dir).iterator
+      .filter(_.getPath.getName.startsWith("part-"))
+      .map(st => (st.getPath.getName, st.getLen, st.getModificationTime)).toSet
   }
 
   private val MaxPendingDeltas = 256
@@ -1109,8 +1265,9 @@ object Ingest {
   /** The store's series catalog as driver rows. The first read in this
     * process, and the first after a removal, a catalog rebuild or
     * [[reloadCatalog]], collects catalog.parquet (one job); the first
-    * after an insert collects that insert's merged rows (one
-    * batch-sized job); every other read starts none. */
+    * after an [[appendBatch]] collects its merged rows (one batch-sized
+    * job); every other read, the first after an [[appendRows]] included,
+    * starts none. */
   def catalogSnapshot(spark: SparkSession, storeDir: String): CatalogSnapshot =
     catalogHolder(storeDir).read(spark)
 

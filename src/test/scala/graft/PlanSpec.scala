@@ -30,6 +30,30 @@ class PlanSpec extends AnyFunSuite {
       p.replaceAll("\\s", "").contains("GreaterThanOrEqual(ts"), p)
   }
 
+  test("parquet aggregate pushdown: bare min/max/count over a NaN double column answer as with it off") {
+    // parquet keeps no min/max for a double chunk whose stats hold NaN,
+    // so a footer-answered min/max would have nothing to read
+    val out = java.nio.file.Files.createTempDirectory("graft-aggpush").toString +
+      "/nan.parquet"
+    import spark.implicits._
+    Seq(Double.NaN, 1.5, -2.0, 3.25).toDF("v").coalesce(1).write.parquet(out)
+    val key = "spark.sql.parquet.aggregatePushdown"
+    assert(spark.conf.get(key) === "true")
+    def agg = spark.read.parquet(out).agg(min("v"), max("v"), count(lit(1)))
+    def answer(): Seq[String] = agg.collect().head.toSeq.map(String.valueOf)
+    val session = answer()
+    spark.conf.set(key, "false")
+    val off = try answer() finally spark.conf.set(key, "true")
+    assert(session === off)
+    assert(session === Seq("-2.0", "NaN", "4"))
+    // the setting reaches DataSource V2 parquet scans only: the
+    // session reads parquet through V1, which pushes no aggregate
+    assert(!agg.queryExecution.sparkPlan.toString.contains("PushedAggregation"))
+    spark.conf.set("spark.sql.sources.useV1SourceList", "")
+    try assert(agg.queryExecution.sparkPlan.toString.contains("PushedAggregation"))
+    finally spark.conf.unset("spark.sql.sources.useV1SourceList")
+  }
+
   test("column pruning: a two-column projection reads a narrow schema") {
     val df = SeriesStore.pointsF(spark, dir).select(col("series"), col("ts"))
     df.collect()
