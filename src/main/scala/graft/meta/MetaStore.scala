@@ -14,6 +14,19 @@ import org.apache.spark.sql.functions.{col, lit}
   * like the catalog — one tiny parquet/JSON per entity).
   */
 object MetaStore {
+  /** Process-wide server counters that `show` and `list servers`
+    * report: `activeHandles` counts open CPROTO client connections
+    * (TCP and pipe), `activeTasks` the query and insert requests in
+    * flight — the reference's task counter (siridb tasks.active). */
+  val activeHandles = new java.util.concurrent.atomic.AtomicLong(0)
+  val activeTasks = new java.util.concurrent.atomic.AtomicLong(0)
+
+  /** Run one query or insert request, counted in `activeTasks`. */
+  def task[A](request: => A): A = {
+    activeTasks.incrementAndGet()
+    try request finally activeTasks.decrementAndGet()
+  }
+
   /** db.h:15-17 defaults — also the reset base when a persisted
     * config.json is adopted (loadFrom). */
   val configDefaults: Map[String, String] = Map(

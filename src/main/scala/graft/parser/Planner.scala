@@ -7,6 +7,7 @@ import org.apache.spark.sql.types.{DoubleType, LongType}
 import graft.engine.{Pipeline, SeriesMatch, SeriesStore}
 import graft.engine.Pipeline._
 import graft.engine.SeriesMatch.{All, Env, Name, Sel, Regex => SelRegex}
+import graft.meta.MetaStore
 import graft.streaming.Ingest.{CatalogSchema, CatalogSnapshot}
 
 /** Turns a parsed statement into one Catalyst plan over the typed
@@ -329,8 +330,8 @@ object Planner {
       "version" -> lit("2.0.55"),
       "online" -> lit("true"),
       "status" -> lit(if (backup) "running | backup-mode" else "running"),
-      "active_handles" -> lit(1L),
-      "active_tasks" -> lit(1L),
+      "active_handles" -> lit(MetaStore.activeHandles.get()),
+      "active_tasks" -> lit(MetaStore.activeTasks.get()),
       "buffer_path" -> lit(env.dir),
       "buffer_size" -> lit(1024L),
       "dbpath" -> lit(env.dir),
@@ -523,7 +524,8 @@ object Planner {
         "status" -> (if (env.meta.config.getOrElse("backup_mode", "false") == "true")
           "running | backup-mode" else "running"),
         "pool" -> "0", "ip_support" -> "ALL",
-        "active_handles" -> "1", "active_tasks" -> "1", "fifo_files" -> "0",
+        "active_handles" -> MetaStore.activeHandles.get().toString,
+        "active_tasks" -> MetaStore.activeTasks.get().toString, "fifo_files" -> "0",
         "startup_time" -> "0", "sync_progress" -> "synced",
         "reindex_progress" -> "none", "libuv" -> "n/a (Spark engine)",
         "uptime" -> env.meta.uptimeSeconds.toString,

@@ -4,6 +4,7 @@ import java.io.{DataInputStream, EOFException, IOException, InputStream, OutputS
 
 import com.fasterxml.jackson.databind.ObjectMapper
 
+import graft.meta.MetaStore
 import graft.parser.{AccessError, QueryError}
 
 /** Transport-independent CPROTO connection loop: the same framing and
@@ -54,25 +55,39 @@ private[graft] object Cproto {
     (pid, tp, data)
   }
 
+  /** Header and data go out as one contiguous buffer in ONE write, like
+    * the reference's package (pkg.h:37-45). Two writes would let
+    * Nagle's algorithm hold the data segment back until the peer's
+    * delayed ACK of the header, about 40 ms per reply. */
   def sendPkg(out: OutputStream, pid: Int, tp: Int, data: Array[Byte]): Unit = {
-    val h = new Array[Byte](8)
     val len = data.length
-    h(0) = (len & 0xFF).toByte; h(1) = ((len >> 8) & 0xFF).toByte
-    h(2) = ((len >> 16) & 0xFF).toByte; h(3) = ((len >> 24) & 0xFF).toByte
-    h(4) = (pid & 0xFF).toByte; h(5) = ((pid >> 8) & 0xFF).toByte
-    h(6) = tp.toByte; h(7) = (tp ^ 255).toByte
-    out.write(h); out.write(data); out.flush()
+    val pkg = new Array[Byte](8 + len)
+    pkg(0) = (len & 0xFF).toByte; pkg(1) = ((len >> 8) & 0xFF).toByte
+    pkg(2) = ((len >> 16) & 0xFF).toByte; pkg(3) = ((len >> 24) & 0xFF).toByte
+    pkg(4) = (pid & 0xFF).toByte; pkg(5) = ((pid >> 8) & 0xFF).toByte
+    pkg(6) = tp.toByte; pkg(7) = (tp ^ 255).toByte
+    System.arraycopy(data, 0, pkg, 8, len)
+    out.write(pkg); out.flush()
   }
 
   private def errData(msg: String): Array[Byte] =
     QPack.encode(mapper.createObjectNode().put("error_msg", msg))
 
+  /** The error text a client gets for an unexpected exception: the
+    * first non-blank line of its message, else its class name (a
+    * null or empty message must still produce a reply). */
+  def errorLine(e: Throwable): String =
+    Option(e.getMessage).iterator.flatMap(_.linesIterator)
+      .find(_.trim.nonEmpty).getOrElse(e.getClass.getName)
+
   /** Serve one connection until the peer goes away
     * (dispatch: clserver.c:274-310). The auth handshake binds the
-    * connection to one database from the registry. */
+    * connection to one database from the registry. The connection
+    * counts in `MetaStore.activeHandles` while it is served. */
   def serve(reg: ServerRegistry, rawIn: InputStream, out: OutputStream): Unit = {
     val in = new DataInputStream(rawIn)
     var session: Option[(String, DbHandler)] = None // connection auth state
+    MetaStore.activeHandles.incrementAndGet()
     try {
       while (true) {
         val (pid, tp, data) = readPkg(in)
@@ -112,26 +127,22 @@ private[graft] object Cproto {
                     .filter(t => t >= 0 && t <= 3)
                     .map(t => math.pow(1000.0, (t - dbPow).toDouble))
                     .getOrElse(0.0)
-                  (0, QPack.encode(core.runQuery(q, tsFactor, u)))
+                  (0, QPack.encode(MetaStore.task(core.runQuery(q, tsFactor, u))))
                 }
               } catch {
                 case e: AccessError => (69, errData(e.msg))
                 case e: QueryError => (65, errData(e.msg))
-                case e: Exception =>
-                  (65, errData(Option(e.getMessage).getOrElse(e.toString)
-                    .linesIterator.next()))
+                case e: Exception => (65, errData(errorLine(e)))
               }
           }
           case 1 => session match { // INSERT
             case None => (71, Array.emptyByteArray)
             case Some((u, core)) =>
-              try (1, QPack.encode(core.runInsert(QPack.decode(data), u)))
+              try (1, QPack.encode(MetaStore.task(core.runInsert(QPack.decode(data), u))))
               catch {
                 case e: AccessError => (69, errData(e.msg))
                 case e: QueryError => (66, errData(e.msg))
-                case e: Exception =>
-                  (66, errData(Option(e.getMessage).getOrElse(e.toString)
-                    .linesIterator.next()))
+                case e: Exception => (66, errData(errorLine(e)))
               }
           }
           case 32 => // REQ_SERVICE (user, password, request, {...})
@@ -157,9 +168,7 @@ private[graft] object Cproto {
                 }
               }
             } catch {
-              case e: Exception =>
-                (96, errData(Option(e.getMessage).getOrElse(e.toString)
-                  .linesIterator.next()))
+              case e: Exception => (96, errData(errorLine(e)))
             }
           case _ => (70, Array.emptyByteArray) // CPROTO_ERR
         }
@@ -167,7 +176,7 @@ private[graft] object Cproto {
       }
     } catch {
       case _: EOFException | _: IOException => () // client went away
-    }
+    } finally MetaStore.activeHandles.decrementAndGet()
   }
 
   /** The accept loop both listeners share (TCP and unix socket): a

@@ -8,6 +8,7 @@ import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.SparkSession
 
+import graft.meta.MetaStore
 import graft.parser.{AccessError, QueryError}
 
 /** Thin HTTP façade over the engine — the Spark analog of the
@@ -39,7 +40,7 @@ final class HttpApi(spark: SparkSession, storeDir: String, port: Int = 0,
     .getOrElse(new ServerRegistry(spark, "graft", storeDir))
   private val mapper = new ObjectMapper()
 
-  private val server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
+  private val server = HttpApi.create(port)
   server.createContext("/query/", exchange(handleQuery))
   server.createContext("/insert/", exchange(handleInsert))
   Seq("get-version", "get-accounts", "get-databases", "new-account",
@@ -121,9 +122,7 @@ final class HttpApi(spark: SparkSession, storeDir: String, port: Int = 0,
         case e: HttpError => (e.code, errNode(e.msg))
         case e: AccessError => (403, errNode(e.msg))
         case e: QueryError => (400, errNode(e.msg))
-        case e: Exception =>
-          val m = Option(e.getMessage).getOrElse(e.toString).linesIterator.next()
-          (500, errNode(m))
+        case e: Exception => (500, errNode(Cproto.errorLine(e)))
       }
     val bytes =
       if (qpack) QPack.encode(body) else mapper.writeValueAsBytes(body)
@@ -155,12 +154,12 @@ final class HttpApi(spark: SparkSession, storeDir: String, port: Int = 0,
         throw QueryError(s"unknown time precision '$t' (use s, ms, us or ns)")))
       .map(p => math.pow(1000.0, (p - dbPow).toDouble))
       .getOrElse(0.0)
-    (200, core.runQuery(q, tsFactor, user))
+    (200, MetaStore.task(core.runQuery(q, tsFactor, user)))
   }
 
   private def handleInsert(ex: HttpExchange, req: JsonNode, params: Map[String, String]): (Int, JsonNode) = {
     val core = dbOf(ex, "/insert/")
-    (200, core.runInsert(req, userOf(ex, core)))
+    (200, MetaStore.task(core.runInsert(req, userOf(ex, core))))
   }
 
   /** Service endpoints authenticate against service accounts
@@ -174,4 +173,18 @@ final class HttpApi(spark: SparkSession, storeDir: String, port: Int = 0,
     val (isErr, body) = reg.service(svc, req)
     (if (isErr) 400 else 200, body)
   }
+}
+
+object HttpApi {
+  /** TCP_NODELAY on every accepted HTTP socket: the JDK server flushes
+    * the response headers before the body, and with Nagle's algorithm
+    * on the body then waits for the client's delayed ACK (about 40 ms
+    * per reply). `sun.net.httpserver.ServerConfig` reads this property
+    * once, when the JVM's first `HttpServer` is created, so it is set
+    * here, before [[create]]; a value given with `-D` wins. */
+  if (System.getProperty("sun.net.httpserver.nodelay") == null)
+    System.setProperty("sun.net.httpserver.nodelay", "true")
+
+  private def create(port: Int): HttpServer =
+    HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
 }

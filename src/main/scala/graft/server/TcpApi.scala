@@ -30,7 +30,13 @@ final class TcpApi(spark: SparkSession, storeDir: String, port: Int = 0,
 
   def stop(): Unit = { running = false; server.close() }
 
+  /** TCP_NODELAY: with Nagle's algorithm on, a partial segment waits
+    * until the client ACKs the data sent before it, and a client that
+    * delays its ACK adds about 40 ms. Each reply is already one write
+    * ([[Cproto.sendPkg]]), so holding it back coalesces nothing. */
   private def serve(sock: Socket): Unit =
-    try Cproto.serve(reg, sock.getInputStream, sock.getOutputStream)
-    finally sock.close()
+    try {
+      sock.setTcpNoDelay(true)
+      Cproto.serve(reg, sock.getInputStream, sock.getOutputStream)
+    } finally sock.close()
 }

@@ -1,8 +1,11 @@
 package graft
 
-import java.net.URI
+import java.io.{BufferedInputStream, EOFException}
+import java.net.{Socket, URI}
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
+import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.Files
+import java.util.Base64
 import org.scalatest.funsuite.AnyFunSuite
 import graft.server.HttpApi
 
@@ -19,6 +22,79 @@ class HttpApiSpec extends AnyFunSuite {
       .header("Content-Type", "application/json").build()
     val res = client.send(req, HttpResponse.BodyHandlers.ofString())
     (res.statusCode(), res.body())
+  }
+
+  /** One keep-alive HTTP/1.1 connection that sends each request as a
+    * single write with TCP_NODELAY on, so a round trip measures the
+    * server's reply. */
+  private final class RawHttp(port: Int) {
+    private val sock = new Socket("127.0.0.1", port)
+    sock.setTcpNoDelay(true)
+    private val in = new BufferedInputStream(sock.getInputStream)
+    private val out = sock.getOutputStream
+
+    def post(path: String, body: String, basic: Option[String] = None): (Int, String) = {
+      val b = body.getBytes(UTF_8)
+      val auth = basic.map(a =>
+        s"Authorization: Basic ${Base64.getEncoder.encodeToString(a.getBytes(UTF_8))}\r\n")
+      val head = s"POST $path HTTP/1.1\r\nHost: 127.0.0.1:$port\r\n" +
+        "Content-Type: application/json\r\n" + auth.getOrElse("") +
+        s"Content-Length: ${b.length}\r\n\r\n"
+      out.write(head.getBytes(UTF_8) ++ b); out.flush()
+      val status = line().split(" ")(1).toInt
+      var len = 0
+      var h = line()
+      while (h.nonEmpty) {
+        if (h.toLowerCase.startsWith("content-length:")) len = h.drop(15).trim.toInt
+        h = line()
+      }
+      (status, new String(in.readNBytes(len), UTF_8))
+    }
+
+    private def line(): String = {
+      val sb = new StringBuilder
+      var c = in.read()
+      while (c != '\n') {
+        if (c < 0) throw new EOFException("connection closed without a reply")
+        if (c != '\r') sb += c.toChar
+        c = in.read()
+      }
+      sb.toString
+    }
+
+    def close(): Unit = sock.close()
+  }
+
+  test("a reply leaves without a delayed-ACK stall: 20 round trips, median under 20 ms") {
+    val api = new HttpApi(spark, Files.createTempDirectory("graft-http-rtt").toString)
+    val c = new RawHttp(api.start())
+    try {
+      // bad service credentials: a 401 with an error body, no Spark job
+      val ms = (1 to 20).map { _ =>
+        val t0 = System.nanoTime()
+        val (code, body) = c.post("/get-version", "{}", Some("sa:wrong"))
+        val dt = (System.nanoTime() - t0) / 1e6
+        assert(code === 401 && body.contains("error_msg"), body)
+        dt
+      }.sorted
+      val median = (ms(9) + ms(10)) / 2
+      assert(median < 20.0, s"median round trip $median ms; all: $ms")
+    } finally { c.close(); api.stop() }
+  }
+
+  test("an exception with an empty message still gets a 500 reply") {
+    val api = new HttpApi(spark, Files.createTempDirectory("graft-http-empty").toString)
+    api.registry.dbs.put("boom",
+      new ThrowingDb(api.registry.db("graft").get.meta, "", ""))
+    val c = new RawHttp(api.start())
+    try {
+      val (qc, qb) = c.post("/query/boom", """{"q": "count series"}""")
+      assert(qc === 500 && qb.contains("java.lang.RuntimeException"), qb)
+      val (ic, ib) = c.post("/insert/boom", """{"s": [[1, 1]]}""")
+      assert(ic === 500 && ib.contains("java.lang.RuntimeException"), ib)
+      // the connection still serves
+      assert(c.post("/get-version", "{}")._1 === 200)
+    } finally { c.close(); api.stop() }
   }
 
   test("insert both wire forms, query select/list/calc, errors") {

@@ -1,13 +1,13 @@
 package graft
 
-import java.io.DataInputStream
+import java.io.{DataInputStream, OutputStream}
 import java.net.Socket
 import java.nio.file.Files
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.server.{QPack, TcpApi}
+import graft.server.{Cproto, QPack, TcpApi}
 
 /** The CPROTO/qpack transport end-to-end over a raw TCP socket: auth
   * handshake, ping, both insert forms, the reference's 20-point `aggr`
@@ -18,32 +18,21 @@ class TcpApiSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   private val mapper = new ObjectMapper()
 
-  /** Minimal CPROTO client. */
+  /** Minimal CPROTO client, framing with the server's own
+    * `Cproto.sendPkg` / `readPkg`. TCP_NODELAY on, so a round trip
+    * measures the server's reply, not this client's send. */
   private final class Client(port: Int) {
     private val sock = new Socket("127.0.0.1", port)
+    sock.setTcpNoDelay(true)
     private val in = new DataInputStream(sock.getInputStream)
     private val out = sock.getOutputStream
     private var pid = 0
 
     def request(tp: Int, data: Array[Byte]): (Int, Array[Byte]) = {
       pid += 1
-      val h = new Array[Byte](8)
-      val len = data.length
-      h(0) = (len & 0xFF).toByte; h(1) = ((len >> 8) & 0xFF).toByte
-      h(2) = ((len >> 16) & 0xFF).toByte; h(3) = ((len >> 24) & 0xFF).toByte
-      h(4) = (pid & 0xFF).toByte; h(5) = ((pid >> 8) & 0xFF).toByte
-      h(6) = tp.toByte; h(7) = (tp ^ 255).toByte
-      out.write(h); out.write(data); out.flush()
-      val rh = new Array[Byte](8)
-      in.readFully(rh)
-      val rlen = (rh(0) & 0xFF) | ((rh(1) & 0xFF) << 8) |
-        ((rh(2) & 0xFF) << 16) | ((rh(3) & 0xFF) << 24)
-      val rpid = (rh(4) & 0xFF) | ((rh(5) & 0xFF) << 8)
+      Cproto.sendPkg(out, pid, tp, data)
+      val (rpid, rtp, rdata) = Cproto.readPkg(in)
       assert(rpid === pid, "response pid must echo the request pid")
-      val rtp = rh(6) & 0xFF
-      assert((rh(7) & 0xFF) === (rtp ^ 255), "response checkbit")
-      val rdata = new Array[Byte](rlen)
-      in.readFully(rdata)
       (rtp, rdata)
     }
 
@@ -244,5 +233,91 @@ class TcpApiSpec extends AnyFunSuite {
       api.meta.config.put("backup_mode", "false")
       assert(c.request(1, c.json("""{"s": [[2, 2]]}"""))._1 === 1)
     }
+  }
+
+  test("sendPkg hands its stream one write per package, header and data together") {
+    final class CountingStream extends OutputStream {
+      var writes = 0
+      val bytes = new java.io.ByteArrayOutputStream
+      override def write(b: Int): Unit = { writes += 1; bytes.write(b) }
+      override def write(b: Array[Byte], off: Int, len: Int): Unit = {
+        writes += 1; bytes.write(b, off, len)
+      }
+    }
+    Seq(Array.emptyByteArray, Array[Byte](1, 2, 3), new Array[Byte](70000)).foreach { data =>
+      val out = new CountingStream
+      Cproto.sendPkg(out, 258, 33, data)
+      assert(out.writes === 1, s"writes for a ${data.length}-byte package")
+      val (pid, tp, back) = Cproto.readPkg(
+        new DataInputStream(new java.io.ByteArrayInputStream(out.bytes.toByteArray)))
+      assert((pid, tp) === ((258, 33)))
+      assert(back.sameElements(data))
+    }
+  }
+
+  test("a reply leaves without a delayed-ACK stall: 20 round trips, median under 20 ms") {
+    withServer { (c, _) =>
+      // REQ_SERVICE with bad credentials: a non-empty error body, no Spark job
+      val req = c.json("""["sa", "wrong", "get-version", {}]""")
+      val ms = (1 to 20).map { _ =>
+        val t0 = System.nanoTime()
+        val (tp, body) = c.request(32, req)
+        val dt = (System.nanoTime() - t0) / 1e6
+        assert(tp === 96 && body.nonEmpty)
+        dt
+      }.sorted
+      val median = (ms(9) + ms(10)) / 2
+      assert(median < 20.0, s"median round trip $median ms; all: $ms")
+    }
+  }
+
+  /** Poll `show <prop>` on `c` until it reads `want`, for up to 10 s. */
+  private def awaitShow(c: Client, prop: String, want: Long => Boolean): Long = {
+    def read(): Long = {
+      val (tp, body) = c.request(0, c.json(s"""["show $prop"]"""))
+      assert(tp === 0)
+      QPack.decode(body).get("rows").get(0).get(1).asText().toLong
+    }
+    val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+    var v = read()
+    while (!want(v) && System.nanoTime() < deadline) { Thread.sleep(20); v = read() }
+    v
+  }
+
+  test("show active_handles counts open connections; active_tasks counts the request") {
+    val dir = Files.createTempDirectory("graft-tcp-handles").toString
+    val api = new TcpApi(spark, dir)
+    val port = api.start()
+    val c = new Client(port)
+    try {
+      assert(c.request(2, c.json("""["iris", "siri", "graft"]"""))._1 === 2)
+      // the asking request itself is in flight
+      assert(awaitShow(c, "active_tasks", _ >= 1) >= 1)
+      val base = awaitShow(c, "active_handles", _ >= 1)
+      val extra = (1 to 3).map(_ => new Client(port))
+      try {
+        extra.foreach(p => assert(p.request(2, p.json("""["iris", "siri", "graft"]"""))._1 === 2))
+        assert(awaitShow(c, "active_handles", _ == base + 3) === base + 3)
+      } finally extra.foreach(_.close())
+      assert(awaitShow(c, "active_handles", _ == base) === base)
+    } finally { c.close(); api.stop() }
+  }
+
+  test("an exception with an empty message still gets an error reply") {
+    val dir = Files.createTempDirectory("graft-tcp-empty").toString
+    val api = new TcpApi(spark, dir)
+    api.registry.dbs.put("boom", new ThrowingDb(api.meta, "", "\n"))
+    val c = new Client(api.start())
+    try {
+      assert(c.request(2, c.json("""["iris", "siri", "boom"]"""))._1 === 2)
+      val (qtp, qbody) = c.request(0, c.json("""["count series"]"""))
+      assert(qtp === 65) // ERR_QUERY
+      assert(QPack.decode(qbody).get("error_msg").asText() === "java.lang.RuntimeException")
+      val (itp, ibody) = c.request(1, c.json("""{"s": [[1, 1]]}"""))
+      assert(itp === 66) // ERR_INSERT
+      assert(QPack.decode(ibody).get("error_msg").asText() === "java.lang.RuntimeException")
+      // the connection still serves
+      assert(c.request(3, Array.emptyByteArray)._1 === 3)
+    } finally { c.close(); api.stop() }
   }
 }

@@ -14,8 +14,16 @@ requests: `insert`; the selects `agg` (an aggregate over a regex
 selection), `raw` (`select *` of one series), `diff` (`=> difference()`)
 and `merge` (`merge as ... using`); and one class per metadata verb
 (`list series`, `count series`, `count series length`, ...).
+
+When the run's `-detail.json` sits beside the spans file, a second table
+sets the client-side p50 of perfbench's `select_ms`, `meta_ms` and
+`insert_ms` (what the load generator measured over the wire) next to the
+handler ms of the same kind (selects: agg/raw/diff/merge; meta: every
+metadata verb). The difference of the two p50s is what a request of
+that kind spends outside the handler: codec, transport and client.
 """
 import json
+import os
 import sys
 from collections import OrderedDict
 
@@ -64,6 +72,48 @@ def summarize(spans):
     return rows
 
 
+SELECTS = ("agg", "raw", "diff", "merge")
+
+
+def request_kind(cls):
+    if cls == "insert":
+        return "insert"
+    return "select" if cls in SELECTS else "meta"
+
+
+def pct(xs, p):
+    """Linear-interpolated percentile, as perfbench's `Stats.pct`."""
+    if not xs:
+        return float("nan")
+    s = sorted(xs)
+    r = p / 100.0 * (len(s) - 1)
+    lo, hi = int(r), min(int(r) + 1, len(s) - 1)
+    return s[lo] + (s[hi] - s[lo]) * (r - lo)
+
+
+def wire_rows(spans, detail):
+    handler = {"select": [], "meta": [], "insert": []}
+    for s in spans:
+        handler[request_kind(request_class(s))].append(s["handler_ms"])
+    rows = []
+    for kind, h in handler.items():
+        client = detail.get(f"{kind}_ms", [])
+        if not h and not client:
+            continue
+        mean = sum(h) / len(h) if h else float("nan")
+        hp50, cp50 = pct(h, 50), pct(client, 50)
+        rows.append([kind, str(len(h)), f"{mean:.1f}", f"{hp50:.1f}",
+                     str(len(client)), f"{cp50:.1f}", f"{cp50 - hp50:.1f}"])
+    return rows
+
+
+def print_table(rows):
+    widths = [max(len(r[i]) for r in rows) for i in range(len(rows[0]))]
+    for r in rows:
+        print("  ".join(c.ljust(w) if i == 0 else c.rjust(w)
+                        for i, (c, w) in enumerate(zip(r, widths))))
+
+
 def main(argv):
     if len(argv) != 2:
         print("usage: python3 tools/span_summary.py <spans.jsonl>", file=sys.stderr)
@@ -71,11 +121,15 @@ def main(argv):
     with open(argv[1]) as f:
         spans = [json.loads(line) for line in f if line.strip()]
     header = ["class", "n"] + [label for label, _ in MEANS] + ["jobs/stages/tasks"]
-    rows = [header] + summarize(spans)
-    widths = [max(len(r[i]) for r in rows) for i in range(len(header))]
-    for r in rows:
-        print("  ".join(c.ljust(w) if i == 0 else c.rjust(w)
-                        for i, (c, w) in enumerate(zip(r, widths))))
+    print_table([header] + summarize(spans))
+    detail_path = argv[1][:-len("-spans.jsonl")] + "-detail.json"
+    if argv[1].endswith("-spans.jsonl") and os.path.exists(detail_path):
+        with open(detail_path) as f:
+            detail = json.load(f)
+        print()
+        print(f"wire overhead per kind (client p50 from {os.path.basename(detail_path)})")
+        print_table([["kind", "n", "handler ms", "handler p50", "client n",
+                      "client p50", "client - handler p50"]] + wire_rows(spans, detail))
     return 0
 
 
