@@ -421,6 +421,78 @@ class PlanSpec extends AnyFunSuite {
       s"gaps are conditional aggregates, not passes: $gOne -> $gFour")
   }
 
+  test("lshCurve: each bits setting re-signs the corpus (the nlistCurve side of the contrast)") {
+    def shuffles(df: DataFrame): Int = {
+      df.collect()
+      "Exchange hashpartitioning".r
+        .findAllIn(plan(df).split("== Initial Plan ==").head).size
+    }
+    def signings(df: DataFrame): Int =
+      "graft_lsh_sigs".r.findAllIn(plan(df).split("== Initial Plan ==").head).size
+    // bits is baked into the signature, so every setting brings its
+    // own corpus and query signing, bucket join, pair distinct and
+    // exact re-score into the one lazy plan
+    val emb = graft.core.Tables.embeddings(spark, dir)
+    val one = graft.llm.Ann.lshCurve(emb, nQueries = 5, k = 3,
+      bitsList = Seq(4), tables = 4)
+    val two = graft.llm.Ann.lshCurve(emb, nQueries = 5, k = 3,
+      bitsList = Seq(4, 6), tables = 4)
+    val (sOne, sTwo) = (shuffles(one), shuffles(two))
+    assert(sTwo - sOne >= 4, s"a bits setting re-buckets by design: $sOne -> $sTwo")
+    assert(signings(two) === 2 * signings(one) && signings(one) >= 1,
+      s"a bits setting re-signs by design: ${signings(one)} -> ${signings(two)}")
+  }
+
+  test("bandCurve: extra band settings add no second shingle or signature pass") {
+    import spark.implicits._
+    def shuffles(df: DataFrame): Int = {
+      df.collect()
+      "Exchange hashpartitioning".r
+        .findAllIn(plan(df).split("== Initial Plan ==").head).size
+    }
+    val docs = (0L until 64L)
+      .map(i => (i, s"w${i % 8} x${i % 8} y${i % 8} z${i % 8} q$i r${i % 5}"))
+      .toDF("doc_id", "text")
+    // the shingle pass and the signature aggregation run once, into
+    // checkpointed truth and signatures: each setting's lazy rows are
+    // only its decile grade over those (one aggregation exchange, at
+    // most one join exchange), never shingles or minhashes again
+    val one = graft.llm.Dedup.bandCurve(docs, n = 3, numHashes = 128,
+      bandsList = Seq(32), theta = 0.3, sampleMod = 1L)
+    val three = graft.llm.Dedup.bandCurve(docs, n = 3, numHashes = 128,
+      bandsList = Seq(16, 32, 64), theta = 0.3, sampleMod = 1L)
+    val (sOne, sThree) = (shuffles(one), shuffles(three))
+    assert(sThree - sOne <= 2 * 2,
+      s"extra band settings must not re-shingle or re-sign: $sOne -> $sThree")
+    val p = plan(three).split("== Initial Plan ==").head
+    assert(!p.contains("shingle") && !p.contains("md5"), p)
+  }
+
+  test("bucketCurve: extra caps reuse the one checkpointed band-key frame") {
+    import spark.implicits._
+    def shuffles(df: DataFrame): Int = {
+      df.collect()
+      "Exchange hashpartitioning".r
+        .findAllIn(plan(df).split("== Initial Plan ==").head).size
+    }
+    val docs = (0L until 64L)
+      .map(i => (i, s"w${i % 8} x${i % 8} y${i % 8} z${i % 8} q$i r${i % 5}"))
+      .toDF("doc_id", "text")
+    // band keys are built once at the fixed `bands` and checkpointed;
+    // a cap only filters buckets inside its own candidate checkpoint,
+    // so each cap's lazy rows are its decile grade alone: no band-key
+    // hashing and no signature slicing in the plan
+    val one = graft.llm.Dedup.bucketCurve(docs, n = 3, numHashes = 128,
+      bands = 32, caps = Seq(0L), theta = 0.3, sampleMod = 1L)
+    val three = graft.llm.Dedup.bucketCurve(docs, n = 3, numHashes = 128,
+      bands = 32, caps = Seq(0L, 4L, 16L), theta = 0.3, sampleMod = 1L)
+    val (sOne, sThree) = (shuffles(one), shuffles(three))
+    assert(sThree - sOne <= 2 * 2,
+      s"extra caps must not rebuild band keys: $sOne -> $sThree")
+    val p = plan(three).split("== Initial Plan ==").head
+    assert(!p.contains("md5") && !p.contains("bkey"), p)
+  }
+
   test("LM-score/BM25/PMI: corpus stats broadcast, no windows, no global sort") {
     import spark.implicits._
     val docs = (0L until 64L)
