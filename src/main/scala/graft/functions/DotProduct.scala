@@ -21,12 +21,13 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * Registered as `graft_dot` by Tables.sessionBuilder via
   * SparkSessionExtensions.injectFunction — sessions built elsewhere
   * must inject it the same way. Whole-array nulls propagate null
-  * (handled by BinaryExpression's null-safe contract); element nulls
-  * cannot occur on the guarded inputs (vectors are CASTs of non-null
-  * float arrays). Mismatched dimensions yield NULL — exactly what the
+  * (handled by BinaryExpression's null-safe contract); a null element
+  * yields NULL, and so do mismatched dimensions — exactly what the
   * documented-equivalent `aggregate(zip_with(...))` HOF does — so a
   * malformed embedding surfaces as a detectable null, never as a
-  * silently-truncated but plausible similarity.
+  * silently-truncated but plausible similarity. Elements are
+  * null-checked only when an input type has `containsNull = true`;
+  * over non-null element types the loop is unchanged.
   */
 case class DotProduct(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -48,6 +49,11 @@ case class DotProduct(left: Expression, right: Expression)
 
   override def prettyName: String = "graft_dot"
 
+  private def elemNulls(e: Expression): Boolean =
+    e.dataType.asInstanceOf[ArrayType].containsNull
+  private lazy val leftNulls = elemNulls(left)
+  private lazy val rightNulls = elemNulls(right)
+
   override protected def nullSafeEval(l: Any, r: Any): Any = {
     val a = l.asInstanceOf[ArrayData]
     val b = r.asInstanceOf[ArrayData]
@@ -56,7 +62,12 @@ case class DotProduct(left: Expression, right: Expression)
     else {
       var s = 0.0
       var i = 0
-      while (i < n) { s += a.getDouble(i) * b.getDouble(i); i += 1 }
+      while (i < n) {
+        if (leftNulls && a.isNullAt(i) || rightNulls && b.isNullAt(i))
+          return null
+        s += a.getDouble(i) * b.getDouble(i)
+        i += 1
+      }
       s
     }
   }
@@ -66,6 +77,12 @@ case class DotProduct(left: Expression, right: Expression)
       val n = ctx.freshName("n")
       val s = ctx.freshName("s")
       val i = ctx.freshName("i")
+      val nullAt = Seq(leftNulls -> a, rightNulls -> b)
+        .collect { case (true, x) => s"$x.isNullAt($i)" }
+      // a null element ends the fold with NULL
+      val nullCheck =
+        if (nullAt.isEmpty) ""
+        else s"if (${nullAt.mkString(" || ")}) { ${ev.isNull} = true; break; }"
       s"""
          |int $n = $a.numElements();
          |if ($b.numElements() != $n) {
@@ -73,6 +90,7 @@ case class DotProduct(left: Expression, right: Expression)
          |} else {
          |  double $s = 0.0;
          |  for (int $i = 0; $i < $n; $i++) {
+         |    $nullCheck
          |    $s += $a.getDouble($i) * $b.getDouble($i);
          |  }
          |  ${ev.value} = $s;

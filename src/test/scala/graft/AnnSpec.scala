@@ -619,7 +619,9 @@ class AnnSpec extends AnyFunSuite {
     val pairs = Seq(
       "graft_dist2(a, b)" -> dist.format("a", "b"),
       "graft_dist2(b, a)" -> dist.format("b", "a"),
-      "graft_norm2(a)" -> "aggregate(a, 0D, (acc, x) -> acc + x * x)")
+      "graft_norm2(a)" -> "aggregate(a, 0D, (acc, x) -> acc + x * x)",
+      "graft_dot(a, b)" -> "aggregate(zip_with(a, b, (x, y) -> x * y), 0D, (acc, v) -> acc + v)",
+      "graft_dot(b, a)" -> "aggregate(zip_with(b, a, (x, y) -> x * y), 0D, (acc, v) -> acc + v)")
     def check(mode: String): Unit = {
       val rows = df.select(pairs.flatMap { case (k, h) => Seq(expr(k), expr(h)) }: _*)
         .collect()
