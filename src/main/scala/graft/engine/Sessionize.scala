@@ -55,32 +55,22 @@ object Sessionize {
         (col("__nxt") - col("ts")).as("gap"))
   }
 
-  /** Session-gap tuning curve — the gaps-and-islands family's one
-    * knob (`gap`) measured the way the approximate families' knobs
-    * are: per candidate gap, how many sessions the corpus would split
-    * into, how many silences the [[gaps]] report would raise, the
-    * total silent seconds, and the availability those silences imply
-    * — the table an operator picks a session/alert threshold from
-    * instead of guessing one off a traffic histogram. One row per
-    * gap: (gap, n_series, n_sessions, n_gaps, silent_seconds,
-    * span_seconds, avail_q6); n_series / span_seconds repeat across
-    * rows so each row is a self-contained availability statement.
-    *
-    * Single-pass by construction: every statistic is a function of
-    * the per-point predecessor gap Δ, so ONE lag window pass feeds a
-    * per-series aggregation carrying each candidate as a CONDITIONAL
-    * aggregate (sessions per series = 1 + #(Δ > g); silence = Σ Δ
-    * over Δ > g) — the [[graft.llm.TextStats.boilerplateCurve]]
-    * shape. Raising g filters the SAME Δ column, so n_sessions /
-    * n_gaps / silent are pointwise non-increasing and avail
-    * non-decreasing (TsAnalyticsSpec pins it). The groupBy(series)
-    * rides the window's own series exchange — extra settings add
-    * zero exchanges and zero passes (PlanSpec pins it).
-    *
-    * avail_q6 = (span − silent)·1e6 DIV span is exact int64 below
-    * ~9.2e12 total span-seconds (≈ 300k series-years — the epochs_q6
-    * headroom convention); span 0 (every series a single point)
-    * reads vacuously available (1e6). */
+  /** Session-gap tuning curve: per candidate gap, how many sessions
+    * the corpus would split into, how many silences the [[gaps]]
+    * report would raise, the total silent seconds, and the
+    * availability those silences imply. One row per gap: (gap,
+    * n_series, n_sessions, n_gaps, silent_seconds, span_seconds,
+    * avail_q6); n_series / span_seconds repeat across rows so each row
+    * is a self-contained availability statement. Raising g filters the
+    * SAME predecessor gap Δ, so n_sessions / n_gaps / silent are
+    * pointwise non-increasing and avail non-decreasing (TsAnalyticsSpec
+    * pins it). avail_q6 = (span − silent)·1e6 DIV span is exact int64
+    * below ~9.2e12 total span-seconds; span 0 (every series a single
+    * point) reads vacuously available (1e6). A [[graft.llm.Sweep]] on
+    * the shared side: one lag window pass, every gap a conditional
+    * aggregate (sessions per series = 1 + #(Δ > g); silence = Σ Δ over
+    * Δ > g), and the groupBy(series) rides the window's own series
+    * exchange. */
   def gapCurve(points: DataFrame,
       gaps: Seq[Long] = Seq(300L, 900L, 3600L, 21600L)): DataFrame = {
     require(gaps.nonEmpty && gaps.forall(_ > 0L),
@@ -101,17 +91,13 @@ object Sessionize {
         coalesce(sum(col(s"nb_$i")), lit(0L)).as(s"nbt_$i"),
         coalesce(sum(col(s"sl_$i")), lit(0L)).as(s"slt_$i"))
       }
-    val tot = perSeries.agg(totCols.head, totCols.tail: _*)
-    val rows = gaps.zipWithIndex.map { case (g, i) =>
-      struct(lit(g).as("gap"), col("ns").as("n_series"),
-        (col("ns") + col(s"nbt_$i")).as("n_sessions"),
-        col(s"nbt_$i").as("n_gaps"), col(s"slt_$i").as("silent_seconds"))
-    }
-    tot.select(col("span"), explode(array(rows: _*)).as("r"))
-      .select(col("r.gap").as("gap"), col("r.n_series").as("n_series"),
-        col("r.n_sessions").as("n_sessions"), col("r.n_gaps").as("n_gaps"),
-        col("r.silent_seconds").as("silent_seconds"),
-        col("span").as("span_seconds"))
+    graft.llm.Sweep.unstack(perSeries.agg(totCols.head, totCols.tail: _*),
+        Seq("gap", "n_series", "n_sessions", "n_gaps", "silent_seconds",
+          "span_seconds"))(
+        gaps.zipWithIndex.map { case (g, i) =>
+          Seq(lit(g), col("ns"), col("ns") + col(s"nbt_$i"), col(s"nbt_$i"),
+            col(s"slt_$i"), col("span"))
+        })
       .withColumn("avail_q6", when(col("span_seconds") === 0L, lit(1000000L))
         .otherwise(expr(
           "(span_seconds - silent_seconds) * 1000000L DIV span_seconds")))

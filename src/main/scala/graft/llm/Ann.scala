@@ -305,81 +305,45 @@ object Ann {
       .withColumn("sim", round(dotCol / (col("qn") * col("nrm")), 9))
   }
 
-  /** IVF nprobe tuning curve — the table the ONE tunable IVF knob is
-    * actually set from: for each probe setting, micro-averaged
-    * recall@k against the exact top-k AND the MEASURED number of
-    * candidates scored (cell occupancies are skewed, so the real
-    * scan cost is not the analytic nprobe/nlist fraction — measure,
-    * don't guess). One row per nprobe:
-    * (nprobe, n_queries, n_scanned, n_hit, n_truth, recall_q6);
-    * recall is monotone in nprobe and reaches exactly 1e6 at
-    * nprobe = nlist (a full probe scans every cell — AnnSpec pins
-    * both properties).
-    *
-    * Cost: the coarse quantizer trains ONCE (the curve varies only
-    * the search-time knob); the exact truth list is one
-    * query-bounded corpus scan, localCheckpoint'ed at nQueries·k
-    * rows so the per-setting joins replay nothing. Each setting then
-    * re-runs the probe scan — a narrow query-bounded pass whose size
-    * is precisely the n_scanned it reports; persisting the
-    * corpus-sized assignment to dodge those passes would be the
-    * wrong trade at 100 TB (the trainCoarse persist rationale). */
+  /** IVF nprobe tuning curve: per probe setting, micro-averaged
+    * recall@k against the exact top-k and the MEASURED number of
+    * candidates scored (cell occupancies are skewed, so the scan cost
+    * is not the analytic nprobe/nlist fraction). One row per nprobe:
+    * (nprobe, n_queries, n_scanned, n_hit, n_truth, recall_q6).
+    * Recall is monotone in nprobe and reaches exactly 1e6 at
+    * nprobe = nlist, where a full probe scans every cell (AnnSpec pins
+    * both). A [[Sweep]] on the shared side: the quantizer trains once,
+    * and each setting re-runs only its narrow probe scan, whose size is
+    * the n_scanned it reports. */
   def nprobeCurve(emb: DataFrame, nQueries: Int = 10, k: Int = 5,
       nlist: Int = 8, iters: Int = 2, trainMod: Int = 1,
       nprobes: Seq[Int] = Seq(1, 2, 4, 8)): DataFrame = {
     require(nprobes.nonEmpty && nprobes.forall(p => p >= 1 && p <= nlist),
       "each nprobe must be in [1, nlist]")
     val e = withNorm(emb)
-    // training and the exact-truth scan are independent eager chains:
-    // overlap them (Par.all) — the search-time settings stay lazy
-    // inside the one unioned query below, unchanged
-    val eager = Par.all[DataFrame](Seq(
+    val Seq(cent, exact) = Par.all[DataFrame](Seq(
       () => trainCoarse(e, nlist, iters, trainMod),
-      () => cosineTopK(emb, nQueries, k)
-        .select(col("query_id"), col("neighbor_id")).localCheckpoint(true)))
-    val cent = eager(0)
-    val exact = eager(1)
+      () => Sweep.truth(cosineTopK(emb, nQueries, k))))
     val assigned = coarseAssign(e, cent)
-    val truth = exact.agg(count(lit(1)).as("n_truth"))
-    nprobes.map { p =>
+    Sweep.recall(Sweep.union(nprobes) { p =>
       val scored = probeScored(assigned, cent, nQueries, p)
-      val scanned = scored.agg(count(lit(1)).as("n_scanned"))
-      val hits = exact
-        .join(topK(scored, k)
-          .select(col("query_id"), col("neighbor_id"), lit(1L).as("__hit")),
-          Seq("query_id", "neighbor_id"), "left")
-        .agg(coalesce(sum(col("__hit")), lit(0L)).as("n_hit"))
-      scanned.crossJoin(hits)
-        .select(lit(p.toLong).as("nprobe"),
-          lit(nQueries.toLong).as("n_queries"),
-          col("n_scanned"), col("n_hit"))
-    }.reduce(_ unionAll _)
-      .crossJoin(broadcast(truth))
-      .withColumn("recall_q6", expr("n_hit * 1000000L DIV n_truth"))
-      .select(col("nprobe"), col("n_queries"), col("n_scanned"),
-        col("n_hit"), col("n_truth"), col("recall_q6"))
+      Seq("nprobe" -> p.toLong, "n_queries" -> nQueries.toLong) ->
+        Sweep.hits(scored.agg(count(lit(1)).as("n_scanned")), exact,
+          topK(scored, k))
+    }, exact)
   }
 
-  /** IVF nlist tuning curve — the OTHER half of the IVF tuning
-    * surface ([[nprobeCurve]] varies the runtime knob; this varies
-    * the INDEX knob): for each candidate cell count, at a fixed
-    * probe fraction (nprobe = ⌈nlist·probeFrac⌉), the recall@k
-    * against the exact top-k, the measured scan cost, and the
-    * TRAINING cost the setting commits the index builder to. One row
-    * per nlist: (nlist, nprobe, n_queries, n_train_vectors,
-    * train_pairs, n_scanned, n_hit, n_truth, recall_q6), where
-    * `train_pairs` = n_train_vectors·nlist·iters is the exact number
-    * of (vector, centroid) distance evaluations Lloyd performs —
-    * exact by construction (every sampled vector scores every
-    * centroid each round; no skew term), so reporting the product IS
-    * the measurement.
-    *
-    * Cost: unlike nprobeCurve, each setting legitimately RE-TRAINS —
-    * nlist is baked into the quantizer, so per-setting training
-    * chains are the expected plan shape here (PlanSpec pins the
-    * contrast). The exact truth list is shared (one checkpointed
-    * query-bounded scan); each setting adds its own sampled Lloyd
-    * plus a narrow probe scan. */
+  /** IVF nlist tuning curve, the INDEX knob ([[nprobeCurve]] varies
+    * the runtime one): per cell count, at a fixed probe fraction
+    * (nprobe = ⌈nlist·probeFrac⌉), the recall@k against the exact
+    * top-k, the measured scan cost, and the training cost the setting
+    * commits to. One row per nlist: (nlist, nprobe, n_queries,
+    * n_train_vectors, train_pairs, n_scanned, n_hit, n_truth,
+    * recall_q6). `train_pairs` = n_train_vectors·nlist·iters is exact
+    * by construction: every sampled vector scores every centroid each
+    * Lloyd round. A [[Sweep]] on the rebuild side: nlist is baked into
+    * the quantizer, so each setting re-trains (an eager chain) and
+    * adds its own probe scan. */
   def nlistCurve(emb: DataFrame, nQueries: Int = 10, k: Int = 5,
       nlists: Seq[Int] = Seq(2, 4, 8, 16), iters: Int = 2,
       trainMod: Int = 1, probeFrac: Double = 0.25): DataFrame = {
@@ -397,40 +361,22 @@ object Ann {
     val te = if (doPersist)
       te0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     else te0
-    // the exact-truth scan and the per-nlist Lloyd chains are all
-    // independent eager materializations: submit them concurrently
-    // (Par.all) so the curve pays the longest chain, not the sum —
-    // per-setting retraining itself stays the operator's semantics
-    // (nlist is baked into the quantizer; PlanSpec pins the contrast)
-    val eager = try Par.all[DataFrame](
-      (() => cosineTopK(emb, nQueries, k)
-        .select(col("query_id"), col("neighbor_id")).localCheckpoint(true)) +:
-      nlists.map(nl => () => trainCoarseOn(te, nl, iters, trainMod)))
+    val exact +: cents = try Sweep.eager(nlists,
+      () => Sweep.truth(cosineTopK(emb, nQueries, k)))(
+      nl => trainCoarseOn(te, nl, iters, trainMod))
     finally if (doPersist) te.unpersist(blocking = true)
-    val exact = eager.head
-    val cents = nlists.zip(eager.tail).toMap
-    val truth = exact.agg(count(lit(1)).as("n_truth"))
     val nTrain = trainSample(e, trainMod)
       .agg(count(lit(1)).as("n_train_vectors"))
-    nlists.map { nl =>
+    Sweep.recall(Sweep.union(nlists.zip(cents)) { case (nl, cent) =>
       val np = math.max(1, math.ceil(nl * probeFrac).toInt)
-      val cent = cents(nl)
       val scored = probeScored(coarseAssign(e, cent), cent, nQueries, np)
-      val scanned = scored.agg(count(lit(1)).as("n_scanned"))
-      val hits = exact
-        .join(topK(scored, k)
-          .select(col("query_id"), col("neighbor_id"), lit(1L).as("__hit")),
-          Seq("query_id", "neighbor_id"), "left")
-        .agg(coalesce(sum(col("__hit")), lit(0L)).as("n_hit"))
-      scanned.crossJoin(hits)
-        .select(lit(nl.toLong).as("nlist"), lit(np.toLong).as("nprobe"),
-          lit(nQueries.toLong).as("n_queries"),
-          col("n_scanned"), col("n_hit"))
-    }.reduce(_ unionAll _)
-      .crossJoin(broadcast(truth))
+      Seq("nlist" -> nl.toLong, "nprobe" -> np.toLong,
+        "n_queries" -> nQueries.toLong) ->
+        Sweep.hits(scored.agg(count(lit(1)).as("n_scanned")), exact,
+          topK(scored, k))
+    }, exact)
       .crossJoin(broadcast(nTrain))
       .withColumn("train_pairs", expr(s"n_train_vectors * nlist * ${iters}L"))
-      .withColumn("recall_q6", expr("n_hit * 1000000L DIV n_truth"))
       .select(col("nlist"), col("nprobe"), col("n_queries"),
         col("n_train_vectors"), col("train_pairs"), col("n_scanned"),
         col("n_hit"), col("n_truth"), col("recall_q6"))
@@ -779,25 +725,15 @@ object Ann {
       .groupBy(col("vec_id")).agg(sum(col("seq")).as("se"))
   }
 
-  /** PQ rate-distortion tuning curve — the compression family's knob
-    * measured like the four search-side curves ([[nprobeCurve]] /
-    * [[nlistCurve]] / [[rerankCurve]] / [[lshCurve]]): per `m`
-    * (subspace count, fixed `ks`-entry codebooks) the measured
-    * reconstruction error (sum/mse/max, q9 — the [[quantDistortion]]
-    * error path) NEXT TO the storage it buys (dim·8 raw bytes → m
-    * byte-aligned codes, the faiss layout; ks = 16 fits 4 bits but
-    * ships as a byte). One row per m: (m, ks, n_vectors, bytes_raw,
-    * bytes_code, compression_x, sum_se_q9, mse_q9, max_se_q9) — the
-    * table a 100 TB store picks its m from with evidence instead of
-    * the "more subspaces = finer" rule of thumb.
-    *
-    * Cost: `m` is baked into the codebook geometry (the subvector
-    * split feeds training), so each setting legitimately re-trains —
-    * the [[nlistCurve]] side of the per-setting contrast (PlanSpec
-    * pins it): mList.size full Lloyd chains, each the already-audited
-    * broadcast-codebook shape. Error aggregation per setting is one
-    * integer agg over the code stream; nothing else touches the
-    * corpus. */
+  /** PQ rate-distortion tuning curve: per `m` (subspace count, fixed
+    * `ks`-entry codebooks) the measured reconstruction error
+    * (sum/mse/max, q9, the [[quantDistortion]] error path) next to the
+    * storage it buys (dim·8 raw bytes → m byte-aligned codes, the
+    * faiss layout; ks = 16 fits 4 bits but ships as a byte). One row
+    * per m: (m, ks, n_vectors, bytes_raw, bytes_code, compression_x,
+    * sum_se_q9, mse_q9, max_se_q9); the errors are exact integer sums.
+    * A [[Sweep]] on the rebuild side: `m` is baked into the codebook
+    * geometry, so each setting re-trains (an eager Lloyd chain). */
   def pqCurve(emb: DataFrame, mList: Seq[Int] = Seq(4, 8, 16),
       ks: Int = 16, iters: Int = 2, trainMod: Int = 1): DataFrame = {
     require(mList.nonEmpty && mList.forall(_ >= 1), "each m must be >= 1")
@@ -806,22 +742,17 @@ object Ann {
       .select(size(col("embedding")).as("d")).head().getInt(0)
     mList.foreach(m =>
       require(dim % m == 0, s"dim $dim not divisible into $m subspaces"))
-    // the per-m Lloyd chains are independent (m is baked into the
-    // codebook geometry, nothing is shared past the normed frame):
-    // submit them concurrently so the curve's wall-clock is the
-    // longest training, not the sum (Par.all — each chain is
-    // deterministic in isolation, results are position-stable)
-    val pers = Par.all(mList.map(m =>
-      () => pqSeQ9(pqSubs(e, m, dim / m), ks, iters, trainMod)))
-    mList.zip(pers).map { case (m, per) =>
-      per.agg(count(lit(1)).as("n_vectors"), sum(col("se")).as("sum_se_q9"),
-          max(col("se")).as("max_se_q9"))
-        .select(lit(m.toLong).as("m"), lit(ks.toLong).as("ks"),
-          col("n_vectors"), lit(dim * 8L).as("bytes_raw"),
-          lit(m.toLong).as("bytes_code"),
-          lit(dim * 8L / m).as("compression_x"), col("sum_se_q9"),
-          expr("sum_se_q9 DIV n_vectors").as("mse_q9"), col("max_se_q9"))
-    }.reduce(_ unionAll _)
+    val pers = Sweep.eager(mList)(m =>
+      pqSeQ9(pqSubs(e, m, dim / m), ks, iters, trainMod))
+    Sweep.union(mList.zip(pers)) { case (m, per) =>
+      Seq("m" -> m.toLong, "ks" -> ks.toLong) ->
+        per.agg(count(lit(1)).as("n_vectors"),
+            sum(col("se")).as("sum_se_q9"), max(col("se")).as("max_se_q9"))
+          .select(col("n_vectors"), lit(dim * 8L).as("bytes_raw"),
+            lit(m.toLong).as("bytes_code"),
+            lit(dim * 8L / m).as("compression_x"), col("sum_se_q9"),
+            expr("sum_se_q9 DIV n_vectors").as("mse_q9"), col("max_se_q9"))
+    }
   }
 
   /** Hyperplane constant j, derived from md5("plane:j") — the
@@ -873,13 +804,7 @@ object Ann {
     val useBits =
       if (bits > 0) bits
       else autoBits(emb.where(col("embedding").isNotNull).count())
-    val pairs = lshCandidates(e, nQueries, useBits, tables, dim)
-    val cands = pairs
-      .join(e.select(col("vec_id").as("query_id"), col("v").as("qv"),
-        col("nrm").as("qn")), Seq("query_id"))
-      .join(e, Seq("vec_id"))
-    val scored = cands.withColumn("sim", round(dotCol / (col("qn") * col("nrm")), 9))
-    topK(scored, k)
+    topK(rescore(lshCandidates(e, nQueries, useBits, tables, dim), e), k)
   }
 
   /** Corpus-sized default for [[lshTopK]]'s `bits` knob — the
@@ -928,29 +853,18 @@ object Ann {
       .select(col("query_id"), col("vec_id")).distinct()
   }
 
-  /** LSH bits tuning curve — the hyperplane family's bucket-size knob
-    * measured like the other three index curves ([[nprobeCurve]] /
-    * [[nlistCurve]] / [[rerankCurve]]): per `bits` setting at a fixed
-    * table count, the micro-averaged recall@k against the exact top-k
-    * AND the MEASURED deduped candidate-pair count the buckets
-    * actually emitted (expected occupancy is N/2^bits per table, but
-    * real corpora are skewed — measure, don't guess). One row per
-    * setting: (bits, tables, n_queries, n_candidates, n_hit, n_truth,
-    * recall_q6) — the table that picks log2(N/30) with evidence
-    * instead of the docstring rule of thumb.
-    *
-    * Cost: `bits` is baked into the signature (the plane index is
-    * (t·bits + b)·dim + i), so each setting legitimately re-signs the
-    * corpus — the [[nlistCurve]] side of the per-setting contrast,
-    * but each pass is one narrow codegen'd projection, not a Lloyd
-    * chain. The exact truth is the same checkpointed query-bounded
-    * scan as the other curves; candidate counting reuses the
-    * two-long pair frame, never re-attached vectors.
-    *
-    * This curve is the calibration evidence behind [[autoBits]],
-    * [[lshTopK]]'s corpus-sized default: its sf10 sweep measured the
-    * coarse fixed settings' candidate counts growing 5.6× at 100×
-    * data — the mistuning the occupancy rule exists to prevent. */
+  /** LSH bits tuning curve: per `bits` setting at a fixed table count,
+    * the micro-averaged recall@k against the exact top-k and the
+    * MEASURED deduped candidate-pair count the buckets emitted
+    * (expected occupancy is N/2^bits per table, but real corpora are
+    * skewed). One row per setting: (bits, tables, n_queries,
+    * n_candidates, n_hit, n_truth, recall_q6). A [[Sweep]] on the
+    * rebuild side: `bits` is baked into the signature, so each setting
+    * re-signs the corpus, one narrow codegen'd projection inside the
+    * lazy plan; candidates are counted on the two-long pair frame.
+    * This curve is the calibration evidence behind [[autoBits]]: its
+    * sf10 sweep measured the coarse fixed settings' candidate counts
+    * growing 5.6× at 100× data. */
   def lshCurve(emb: DataFrame, nQueries: Int = 10, k: Int = 5,
       bitsList: Seq[Int] = Seq(2, 4, 6, 8), tables: Int = 16): DataFrame = {
     require(bitsList.nonEmpty && bitsList.forall(b => b >= 1 && b <= 30),
@@ -958,32 +872,14 @@ object Ann {
     val e = withNorm(emb)
     val dim = emb.where(col("embedding").isNotNull)
       .select(size(col("embedding")).as("d")).head().getInt(0)
-    val exact = cosineTopK(emb, nQueries, k)
-      .select(col("query_id"), col("neighbor_id")).localCheckpoint(true)
-    val truth = exact.agg(count(lit(1)).as("n_truth"))
-    bitsList.map { b =>
+    val exact = Sweep.truth(cosineTopK(emb, nQueries, k))
+    Sweep.recall(Sweep.union(bitsList) { b =>
       val pairs = lshCandidates(e, nQueries, b, tables, dim)
-      val nCand = pairs.agg(count(lit(1)).as("n_candidates"))
-      val scored = pairs
-        .join(e.select(col("vec_id").as("query_id"), col("v").as("qv"),
-          col("nrm").as("qn")), Seq("query_id"))
-        .join(e, Seq("vec_id"))
-        .withColumn("sim", round(dotCol / (col("qn") * col("nrm")), 9))
-      val hits = exact
-        .join(topK(scored, k)
-          .select(col("query_id"), col("neighbor_id"), lit(1L).as("__hit")),
-          Seq("query_id", "neighbor_id"), "left")
-        .agg(coalesce(sum(col("__hit")), lit(0L)).as("n_hit"))
-      nCand.crossJoin(hits)
-        .select(lit(b.toLong).as("bits"), lit(tables.toLong).as("tables"),
-          lit(nQueries.toLong).as("n_queries"),
-          col("n_candidates"), col("n_hit"))
-    }.reduce(_ unionAll _)
-      .crossJoin(broadcast(truth))
-      .withColumn("recall_q6", expr("n_hit * 1000000L DIV n_truth"))
-      .select(col("bits"), col("tables"), col("n_queries"),
-        col("n_candidates"), col("n_hit"), col("n_truth"),
-        col("recall_q6"))
+      Seq("bits" -> b.toLong, "tables" -> tables.toLong,
+        "n_queries" -> nQueries.toLong) ->
+        Sweep.hits(pairs.agg(count(lit(1)).as("n_candidates")), exact,
+          topK(rescore(pairs, e), k))
+    }, exact)
   }
 
   /** Product-quantized search — the classic memory-bound scale path
@@ -1483,7 +1379,7 @@ object Ann {
     val cand = rankedHamming(e, rerank, nQueries)
       .select(col("query_id"), col("vec_id"))
     // exact rerank: only rerank*nQueries ids rejoin the float corpus
-    topK(binaryRescore(cand, e), k)
+    topK(rescore(cand, e), k)
   }
 
   /** The sign-bit Hamming candidate list shared by [[binaryTopK]] and
@@ -1537,68 +1433,41 @@ object Ann {
   }
 
   /** Exact float re-score of a (query_id, vec_id) candidate frame:
-    * only the candidates' ids rejoin the float corpus (rerank-bounded
+    * only the candidates' ids rejoin the float corpus (candidate-bounded
     * reads), round-9 cosine like every sim in the family. Shared by
-    * [[binaryTopK]] and [[rerankCurve]]. */
-  private def binaryRescore(cand: DataFrame, e: DataFrame): DataFrame =
+    * [[binaryTopK]], [[lshTopK]] and their curves. */
+  private def rescore(cand: DataFrame, e: DataFrame): DataFrame =
     cand
       .join(e.select(col("vec_id").as("query_id"), col("v").as("qv"),
         col("nrm").as("qn")), Seq("query_id"))
       .join(e, Seq("vec_id"))
       .withColumn("sim", round(dotCol / (col("qn") * col("nrm")), 9))
 
-  /** Binary-search rerank tuning curve — the sign-bit family's one
-    * knob measured the way [[nprobeCurve]] measures nprobe: per rerank
-    * depth, the micro-averaged recall@k against the exact top-k AND
-    * the number of float-vector reads the rerank actually paid (the
-    * cost a binary index trades recall against — the Hamming scan is
-    * 32× compressed and depth-independent; the float reads are the
-    * only depth-scaled cost). One row per depth: (rerank, n_queries,
-    * n_float_reads, n_hit, n_truth, recall_q6); recall is monotone in
-    * depth, and a depth >= corpus size makes the prefilter vacuous —
-    * the result IS the exact top-k (AnnSpec pins both).
-    *
-    * Cost: signatures are computed and Hamming-scanned ONCE at
-    * max(reranks) — the candidate order (ham asc, vec_id asc) is a
-    * deterministic TOTAL order, so every smaller depth's candidate
-    * set is exactly a prefix of the max-depth ranking; the curve
-    * localCheckpoints the <= nQueries·max(reranks) ranked survivors
-    * and each setting replays only its rerank-bounded float re-score
-    * (PlanSpec pins the single-scan shape: unlike [[nlistCurve]],
-    * nothing per-setting touches the signature frame). The exact
-    * truth is the same checkpointed query-bounded scan as the other
-    * curves. */
+  /** Binary-search rerank tuning curve: per rerank depth, the
+    * micro-averaged recall@k against the exact top-k and the number of
+    * float-vector reads the rerank paid (the Hamming scan is
+    * depth-independent; the float reads are the only depth-scaled
+    * cost). One row per depth: (rerank, n_queries, n_float_reads,
+    * n_hit, n_truth, recall_q6). Recall is monotone in depth, and a
+    * depth >= corpus size makes the prefilter vacuous: the result IS
+    * the exact top-k (AnnSpec pins both). A [[Sweep]] on the shared
+    * side: the candidate order (ham asc, vec_id asc) is a total order,
+    * so every depth's candidates are a prefix of ONE checkpointed
+    * max-depth Hamming ranking, and each setting replays only its
+    * float re-score. */
   def rerankCurve(emb: DataFrame, nQueries: Int = 10, k: Int = 5,
       reranks: Seq[Int] = Seq(8, 16, 32, 64)): DataFrame = {
     require(reranks.nonEmpty && reranks.forall(_ >= k),
       "each rerank depth must be >= k (fewer candidates than results)")
     val e = withNorm(emb).where(col("embedding").isNotNull)
-    // the max-depth Hamming scan and the exact-truth scan are
-    // independent eager chains: overlap them (Par.all)
-    val eager = Par.all[DataFrame](Seq(
+    val Seq(cand, exact) = Par.all[DataFrame](Seq(
       () => rankedHamming(e, reranks.max, nQueries).localCheckpoint(true),
-      () => cosineTopK(emb, nQueries, k)
-        .select(col("query_id"), col("neighbor_id")).localCheckpoint(true)))
-    val cand = eager(0)
-    val exact = eager(1)
-    val truth = exact.agg(count(lit(1)).as("n_truth"))
-    reranks.map { d =>
+      () => Sweep.truth(cosineTopK(emb, nQueries, k))))
+    Sweep.recall(Sweep.union(reranks) { d =>
       val sel = cand.where(col("r") <= d)
-      val reads = sel.agg(count(lit(1)).as("n_float_reads"))
-      val hits = exact
-        .join(topK(binaryRescore(
-            sel.select(col("query_id"), col("vec_id")), e), k)
-          .select(col("query_id"), col("neighbor_id"), lit(1L).as("__hit")),
-          Seq("query_id", "neighbor_id"), "left")
-        .agg(coalesce(sum(col("__hit")), lit(0L)).as("n_hit"))
-      reads.crossJoin(hits)
-        .select(lit(d.toLong).as("rerank"),
-          lit(nQueries.toLong).as("n_queries"),
-          col("n_float_reads"), col("n_hit"))
-    }.reduce(_ unionAll _)
-      .crossJoin(broadcast(truth))
-      .withColumn("recall_q6", expr("n_hit * 1000000L DIV n_truth"))
-      .select(col("rerank"), col("n_queries"), col("n_float_reads"),
-        col("n_hit"), col("n_truth"), col("recall_q6"))
+      Seq("rerank" -> d.toLong, "n_queries" -> nQueries.toLong) ->
+        Sweep.hits(sel.agg(count(lit(1)).as("n_float_reads")), exact,
+          topK(rescore(sel.select(col("query_id"), col("vec_id")), e), k))
+    }, exact)
   }
 }

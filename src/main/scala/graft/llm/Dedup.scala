@@ -602,38 +602,20 @@ object Dedup {
       .withColumn("recall_q6", expr("n_caught * 1000000L div n_true"))
   }
 
-  /** SemDeDup threshold (θ) tuning curve — the semantic family's own
-    * knob measured like the banding/bucket/nprobe knobs (the last
-    * dedup knob still picked from the paper's sweep instead of a
-    * measurement on the corpus at hand): per θ, what the celled
+  /** SemDeDup threshold (θ) tuning curve: per θ, what the celled
     * operator would DO (candidate pairs found, documents touched by
-    * ≥1 pair — the population a dedup at that θ clusters) and what it
-    * would MISS (recall of the cell-restricted pair stage against the
-    * exact all-pairs truth over the shared adaptive slice). One row
-    * per θ: (theta_q2, n_pairs, n_docs_dup, n_true, n_caught,
-    * recall_q6) — the table a corpus owner picks a SemDeDup θ from.
-    *
-    * Single-pass by construction: the celled pair stage computes sims
-    * UNthresholded-down-to-min(θ) ONCE and every θ is a conditional
-    * aggregate over that frame (each pair explodes into its two
-    * endpoints inline, so the expensive cell join executes exactly
-    * once); on the audit side CELL-SHARING IS θ-INDEPENDENT — a truth
-    * pair is caught at θ iff the two vectors share a cell, so the
-    * whole grid grades off ONE truth⟕cell-share join with no
-    * per-setting pair recompute (the nprobe side of the per-setting
-    * contrast; PlanSpec pins one celled join each side). Monotonicity
-    * is pointwise, not statistical: raising θ filters the SAME sim
-    * column, so n_pairs / n_docs_dup / n_true / n_caught are all
-    * non-increasing in θ by construction (DedupSpec pins it).
-    * recall_q6 reads 1e6 when a θ band has no truth pairs on the
-    * slice (vacuously complete — nothing to miss; documented, not
-    * NULL, so the row stays comparable).
-    *
-    * Scale shape: the full-corpus side is the [[semanticPairs]]
-    * occupancy-bounded cell join (linear at fixed `targetCell`); the
-    * truth side is the [[semanticRecallAudit]] adaptive slice
-    * (~`sampleTarget` vectors at ANY corpus size) and its cell-share
-    * partner needs NO dot products at all. */
+    * ≥1 pair) and what it would MISS (recall of the cell-restricted
+    * pair stage against the exact all-pairs truth over the
+    * [[semanticRecallAudit]] adaptive slice). One row per θ:
+    * (theta_q2, n_pairs, n_docs_dup, n_true, n_caught, recall_q6).
+    * Raising θ filters the SAME sim column, so n_pairs / n_docs_dup /
+    * n_true / n_caught are pointwise non-increasing in θ (DedupSpec
+    * pins it). recall_q6 reads 1e6 when a θ band has no truth pairs on
+    * the slice (vacuously complete, not NULL). A [[Sweep]] on the
+    * shared side: one celled pair pass keeps sims down to min(θ), and
+    * every θ is a conditional aggregate of it; a truth pair is caught
+    * at θ iff its two vectors share a cell, which is θ-independent, so
+    * the audit grades off one truth ⟕ cell-share join. */
   def semanticThetaCurve(emb: DataFrame,
       thetas: Seq[Double] = Seq(0.45, 0.6, 0.75, 0.9),
       targetCell: Int = 256, sampleMod: Long = 0L,
@@ -685,16 +667,12 @@ object Dedup {
         1L).otherwise(0L)), lit(0L)).as(s"nc_$i"))
     }
     val sliceAgg = tf.agg(sliceCols.head, sliceCols.tail: _*)
-    val rows = thetas.zipWithIndex.map { case (th, i) =>
-      struct(lit(math.round(th * 100)).as("theta_q2"),
-        col(s"np_$i").as("n_pairs"), col(s"nd_$i").as("n_docs_dup"),
-        col(s"nt_$i").as("n_true"), col(s"nc_$i").as("n_caught"))
-    }
-    fullAgg.crossJoin(sliceAgg)
-      .select(explode(array(rows: _*)).as("r"))
-      .select(col("r.theta_q2").as("theta_q2"), col("r.n_pairs").as("n_pairs"),
-        col("r.n_docs_dup").as("n_docs_dup"), col("r.n_true").as("n_true"),
-        col("r.n_caught").as("n_caught"))
+    Sweep.unstack(fullAgg.crossJoin(sliceAgg),
+        Seq("theta_q2", "n_pairs", "n_docs_dup", "n_true", "n_caught"))(
+        thetas.zipWithIndex.map { case (th, i) =>
+          Seq(lit(math.round(th * 100)), col(s"np_$i"), col(s"nd_$i"),
+            col(s"nt_$i"), col(s"nc_$i"))
+        })
       .withColumn("recall_q6", when(col("n_true") === 0L, lit(1000000L))
         .otherwise(expr("n_caught * 1000000L DIV n_true")))
   }
@@ -991,38 +969,6 @@ object Dedup {
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Long]]()
   }
 
-  /** MinHash banding tuning curve — the banding knob measured at the
-    * operator's OWN settings instead of the (1−J^r)^b formula (the
-    * scoped ≈13%-at-J=0.5 caveat in [[graft.llm.Curate]], converted
-    * to evidence): per (bands, rows) split of `numHashes` portable
-    * minhashes, the per-Jaccard-band recall of the BAND-BUCKET
-    * candidate stage against the exact pair truth, plus the measured
-    * deduped candidate-pair count the buckets emitted. One row per
-    * (setting × Jaccard decile): (bands, rows_per_band, band, n_true,
-    * n_caught, recall_q6, n_candidates) — the table a corpus owner
-    * picks banding from like the four ANN curves.
-    *
-    * Determinism: signatures use the PORTABLE affine family
-    * ([[mhA]]/[[mhB]] mod 2³¹−1 over md5-low-60 shingle values) so
-    * the DuckDB oracle recomputes the exact signatures, buckets,
-    * candidates and therefore the exact same misses — a curve whose
-    * whole point is the pairs that DON'T collide cannot assert
-    * recall 1 the way the production entries do. Band keys are
-    * md5 over the comma-joined decimal band slice (engine-identical
-    * strings). Because the settings divide 128 into CONTIGUOUS
-    * slices with rows halving (16×8 → 32×4 → 64×2), band sets are
-    * nested refinements: agreeing on an 8-row band implies agreeing
-    * on both its 4-row halves, so finer-banded candidate sets are
-    * POINTWISE supersets — recall and candidate count are monotone
-    * nondecreasing in `bands` by construction, not just in
-    * expectation (DedupSpec pins it).
-    *
-    * Scale shape: the [[simhashRecallAudit]] adaptive slice bounds
-    * the audit at ~`sampleTarget` docs at ANY corpus size; ONE
-    * shingle pass feeds truth and signatures, ONE signature
-    * aggregation feeds every setting (bands only re-slice the
-    * checkpointed 128-long rows — nothing per-setting touches
-    * shingles, the nprobe side of the per-setting contrast). */
   /** Shared prep for the two portable-minhash curves ([[bandCurve]] /
     * [[bucketCurve]]): the adaptive slice, ONE shingle pass feeding
     * both the exact pair truth and the portable signatures, both
@@ -1064,10 +1010,9 @@ object Dedup {
 
   /** The per-Jaccard-decile grade shared by the two curves: deduped
     * candidate pairs vs the checkpointed truth, plus the measured
-    * candidate count attached to every decile row. `maxBucket` > 0
-    * drops over-cap buckets inside the ONE [[bucketPairs]]
-    * aggregation (the bucketCurve cap, previously a separate
-    * occupancy table + per-cap anti-join). */
+    * candidate count attached to every decile row: (band, n_true,
+    * n_caught, recall_q6, n_candidates). `maxBucket` > 0 drops
+    * over-cap buckets inside the ONE [[bucketPairs]] aggregation. */
   private def gradeCandidates(truth: DataFrame, bk: DataFrame,
       maxBucket: Long = 0L): DataFrame = {
     val cands = bucketPairs(bk, "bpos", maxBucket)
@@ -1079,10 +1024,30 @@ object Dedup {
         .as("band"))
       .agg(count(lit(1)).as("n_true"),
         sum(coalesce(col("__hit"), lit(0L))).as("n_caught"))
-      .crossJoin(broadcast(nCand))
       .withColumn("recall_q6", expr("n_caught * 1000000L DIV n_true"))
+      .crossJoin(broadcast(nCand))
   }
 
+  /** MinHash banding tuning curve, measured at the operator's own
+    * settings instead of the (1−J^r)^b formula (the ≈13%-at-J=0.5
+    * caveat in [[graft.llm.Curate]]): per (bands, rows) split of
+    * `numHashes` portable minhashes, the per-Jaccard-decile recall of
+    * the band-bucket candidate stage against the exact pair truth,
+    * plus the measured deduped candidate-pair count. One row per
+    * (setting × Jaccard decile): (bands, rows_per_band, band, n_true,
+    * n_caught, recall_q6, n_candidates).
+    *
+    * Exact: signatures use the PORTABLE affine family ([[mhA]]/[[mhB]]
+    * mod 2³¹−1 over md5-low-60 shingle values) and band keys are md5
+    * over the comma-joined decimal band slice, so the DuckDB oracle
+    * recomputes the same buckets and therefore the same misses.
+    * Monotone: settings that split 128 into contiguous slices with
+    * rows halving (16×8 → 32×4 → 64×2) are nested refinements, so
+    * finer-banded candidate sets are POINTWISE supersets and recall
+    * and candidate count are nondecreasing in `bands` (DedupSpec pins
+    * it). A [[Sweep]] on the shared side: bands only re-slice the
+    * checkpointed signatures; each setting's candidates are one eager
+    * checkpoint. */
   def bandCurve(docs: DataFrame, n: Int = 3, numHashes: Int = 128,
       bandsList: Seq[Int] = Seq(16, 32, 64), theta: Double = 0.5,
       sampleMod: Long = 0L, sampleTarget: Long = 2500L): DataFrame = {
@@ -1091,42 +1056,31 @@ object Dedup {
       "each bands setting must divide numHashes")
     val (truth, sig) = portableCurvePrep(docs, n, numHashes, theta,
       sampleMod, sampleTarget)
-    // each setting's candidate checkpoint is an independent eager
-    // chain over the checkpointed signatures: run them concurrently
-    // (Par.all; results are position-stable, so the output rows and
-    // their order are unchanged)
-    val graded = Par.all(bandsList.map(bands =>
-      () => gradeCandidates(truth, portableBandKeys(sig, numHashes, bands))))
-    bandsList.zip(graded).map { case (bands, g) =>
-      g.select(lit(bands.toLong).as("bands"),
-        lit((numHashes / bands).toLong).as("rows_per_band"), col("band"),
-        col("n_true"), col("n_caught"), col("recall_q6"),
-        col("n_candidates"))
-    }.reduce(_ unionAll _)
+    val graded = Sweep.eager(bandsList)(bands =>
+      gradeCandidates(truth, portableBandKeys(sig, numHashes, bands)))
+    Sweep.union(bandsList.zip(graded)) { case (bands, g) =>
+      Seq("bands" -> bands.toLong,
+        "rows_per_band" -> (numHashes / bands).toLong) -> g
+    }
   }
 
-  /** MinHash bucket-cap tuning curve — [[minhashLshPairs]]'s OTHER
-    * knob (`maxBucket`, the skew guard) measured like [[bandCurve]]
-    * measures banding: per cap, the per-Jaccard-decile recall of the
-    * band-bucket candidate stage after dropping over-cap buckets,
-    * plus the measured candidate count the cap actually admitted —
-    * the table that justifies a production cap (16 in
-    * [[graft.llm.Curate.sourceQualityReport]]) with evidence instead
-    * of the docstring's mega-cluster argument. cap 0 = uncapped.
+  /** MinHash bucket-cap tuning curve, [[minhashLshPairs]]'s skew
+    * guard (`maxBucket`): per cap, the per-Jaccard-decile recall of the
+    * band-bucket candidate stage after dropping over-cap buckets, plus
+    * the measured candidate count the cap admitted (cap 0 = uncapped).
+    * One row per (cap × Jaccard decile): (max_bucket, bands, band,
+    * n_true, n_caught, recall_q6, n_candidates).
     *
-    * Same portable family and shared prep as [[bandCurve]] (the
-    * DuckDB oracle recomputes the exact buckets, occupancies and
-    * drops); band keys are built ONCE at the fixed `bands` setting
-    * and each cap only filters over-cap buckets inside its one
-    * bucket aggregation — a
-    * SUBSET of a larger cap's buckets, so candidates and catches are
-    * POINTWISE monotone nondecreasing in the cap (DedupSpec pins it,
-    * plus the planted contrast: a 20-doc identical cluster's C(20,2)
-    * pairs vanish under both real caps, an 8-doc cluster's survive
-    * cap 16 but not cap 4, occupancy-2 near-dup pairs survive every
-    * cap). Recall cost is confined to identical MEGA-groups exactly
-    * as [[minhashLshPairs]] documents — this curve is that claim,
-    * measured. */
+    * Exact: the same portable family and prep as [[bandCurve]], so the
+    * DuckDB oracle recomputes the buckets, occupancies and drops.
+    * Monotone: a cap keeps a SUBSET of a larger cap's buckets, so
+    * candidates and catches are pointwise nondecreasing in the cap
+    * (DedupSpec pins it, plus the planted contrast: a 20-doc identical
+    * cluster's pairs vanish under both real caps, an 8-doc cluster's
+    * survive cap 16 but not cap 4, occupancy-2 pairs survive every
+    * cap). A [[Sweep]] on the shared side: band keys are built and
+    * checkpointed once; each cap filters buckets inside its one eager
+    * candidate checkpoint. */
   def bucketCurve(docs: DataFrame, n: Int = 3, numHashes: Int = 128,
       bands: Int = 32, caps: Seq[Long] = Seq(0L, 4L, 16L),
       theta: Double = 0.5, sampleMod: Long = 0L,
@@ -1138,21 +1092,10 @@ object Dedup {
       sampleMod, sampleTarget)
     val bk = portableBandKeys(sig, numHashes, bands)
       .localCheckpoint(eager = true)
-    // per-cap candidate checkpoints are independent eager chains over
-    // the checkpointed band keys: run them concurrently. Each cap is
-    // one bucketPairs aggregation with the cap as a size() filter —
-    // the previous shape built a shared occupancy table and per-cap
-    // anti-joined it away before a band-key SELF-join (two more
-    // exchanges of the band-key stream per cap)
-    val graded = Par.all(caps.map { cap => () =>
-      gradeCandidates(truth, bk, cap)
-    })
-    caps.zip(graded).map { case (cap, g) =>
-      g.select(lit(cap).as("max_bucket"),
-        lit(bands.toLong).as("bands"), col("band"),
-        col("n_true"), col("n_caught"), col("recall_q6"),
-        col("n_candidates"))
-    }.reduce(_ unionAll _)
+    val graded = Sweep.eager(caps)(cap => gradeCandidates(truth, bk, cap))
+    Sweep.union(caps.zip(graded)) { case (cap, g) =>
+      Seq("max_bucket" -> cap, "bands" -> bands.toLong) -> g
+    }
   }
 
   def simhash(docs: DataFrame): DataFrame = {

@@ -1,6 +1,6 @@
 package graft.llm
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** The adaptive md5-sampled slice shared by every trust-gate audit
@@ -81,6 +81,81 @@ private[graft] object Par {
       } finally pool.shutdown()
     }
   }
+}
+
+/** The skeleton of the knob-tuning curves ([[Ann.nprobeCurve]],
+  * [[Ann.nlistCurve]], [[Ann.lshCurve]], [[Ann.rerankCurve]],
+  * [[Ann.pqCurve]], [[Dedup.bandCurve]], [[Dedup.bucketCurve]],
+  * [[Dedup.semanticThetaCurve]], [[TextStats.boilerplateCurve]],
+  * [[TextStats.temperatureCurve]], [[graft.engine.Sessionize.gapCurve]]):
+  * one row, or one group of rows, per setting, in setting order.
+  *
+  * The cost argument they share:
+  *  - Truth is computed ONCE. What a curve grades against (the exact
+  *    top-k list, the exact pair truth) is one checkpointed pass at its
+  *    own small size; every setting's grade reads it, and its size joins
+  *    as one broadcast 1-row `n_truth`.
+  *  - The per-setting contrast. A knob that only selects from shared
+  *    state (nprobe, rerank depth, band split, bucket cap, θ, gap,
+  *    minDf, α) never repeats the shared pass: its settings are lazy
+  *    rows over checkpointed state, or conditional aggregates of one
+  *    pass unstacked to rows. A knob baked into the index (nlist, LSH
+  *    bits, PQ m) rebuilds per setting by design. Per-setting work that
+  *    must be materialized (a re-trained quantizer or codebook, a
+  *    candidate checkpoint) runs as independent eager chains, admitted
+  *    together through [[Par.all]], so a curve pays its longest chain,
+  *    not the sum. PlanSpec pins each curve's side.
+  *
+  * The parts: (a) recall grading against a checkpointed exact list
+  * ([[truth]], [[hits]], [[recall]]); (b) labelled per-setting chains
+  * ([[eager]], [[union]]); (c) per-setting columns to rows
+  * ([[unstack]]). */
+private[graft] object Sweep {
+  /** (a) The exact (query_id, neighbor_id) list, checkpointed once so
+    * no setting's grade replays the exact scan. */
+  def truth(exact: DataFrame): DataFrame =
+    exact.select(col("query_id"), col("neighbor_id")).localCheckpoint(true)
+
+  /** (a) One setting's row: its 1-row `cost` frame beside `n_hit`, the
+    * truth pairs that the (query_id, neighbor_id) frame `found` holds. */
+  def hits(cost: DataFrame, truth: DataFrame, found: DataFrame): DataFrame =
+    cost.crossJoin(truth
+      .join(found.select(col("query_id"), col("neighbor_id"),
+        lit(1L).as("__hit")), Seq("query_id", "neighbor_id"), "left")
+      .agg(coalesce(sum(col("__hit")), lit(0L)).as("n_hit")))
+
+  /** (a) Appends `n_truth` (broadcast) and
+    * `recall_q6 = n_hit * 1000000 DIV n_truth` to the settings' rows. */
+  def recall(rows: DataFrame, truth: DataFrame): DataFrame =
+    rows.crossJoin(broadcast(truth.agg(count(lit(1)).as("n_truth"))))
+      .withColumn("recall_q6", expr("n_hit * 1000000L DIV n_truth"))
+
+  /** (b) One eager chain per setting, admitted through one [[Par.all]]
+    * together with `shared`, the sweep's other independent eager work
+    * (its truth list). Results: `shared`'s first, then one per setting
+    * in setting order. */
+  def eager[S](settings: Seq[S], shared: (() => DataFrame)*)(
+      chain: S => DataFrame): Seq[DataFrame] =
+    Par.all(shared ++ settings.map(s => () => chain(s)))
+
+  /** (b) Each setting's rows behind its labels (name -> literal),
+    * unioned in setting order; lazy per-setting chains stay inside this
+    * one plan. */
+  def union[S](settings: Seq[S])(
+      row: S => (Seq[(String, Any)], DataFrame)): DataFrame =
+    settings.map { s =>
+      val (labels, df) = row(s)
+      df.select(labels.map { case (n, v) => lit(v).as(n) } :+ col("*"): _*)
+    }.reduce(_ unionAll _)
+
+  /** (c) Each input row becomes one output row per entry of `rows` (one
+    * entry per setting, its columns named `names`), through
+    * explode(array(struct …)). */
+  def unstack(wide: DataFrame, names: Seq[String])(
+      rows: Seq[Seq[Column]]): DataFrame =
+    wide.select(explode(array(rows.map(r =>
+        struct(r.zip(names).map { case (c, n) => c.as(n) }: _*)): _*)).as("__r"))
+      .select(names.map(n => col(s"__r.$n").as(n)): _*)
 }
 
 /** The deterministic embedding cell shared by the SemDeDup family

@@ -264,41 +264,26 @@ object TextStats {
       .select(col("doc_id"), col("source"))
   }
 
-  /** Temperature (α) tuning curve — the sampling family's knob
-    * measured the way the index families' knobs are ([[nprobeCurve]]
-    * / rerank / bits curves): per α and per source, the corpus count,
-    * the drawn count, the α-flattened TARGET share n_s^α / Σ n^α, the
-    * ACHIEVED share, and their signed gap — the one table a
-    * multilingual mix picks its temperature from (α = 1 keeps every
-    * document, so achieved ≡ raw proportions and err reads 0 up to
-    * the two quantizers' last digit — exactly 0 on dyadic count
-    * ratios; smaller α flattens toward uniform, upweighting small
-    * sources at the cost of repeating them). Each setting replays [[sampleTemperature]]'s
-    * deterministic draw, so the curve is oracle-checkable end to end.
+  /** Temperature (α) tuning curve: per α and per source, the corpus
+    * count, the drawn count, the α-flattened TARGET share
+    * n_s^α / Σ n^α, the ACHIEVED share, and their signed gap: rows
+    * (alpha_q2, source, n_docs, n_sampled, target_q6, achieved_q6,
+    * err_q6). α = 1 keeps every document, so achieved ≡ raw
+    * proportions and err reads 0 up to the two quantizers' last digit
+    * (exactly 0 on dyadic count ratios). Each setting keeps exactly
+    * the documents [[sampleTemperature]]'s deterministic draw keeps,
+    * so the curve is oracle-checkable end to end.
     *
     * Fixed-point contract: per source ONE pow (the measure-zero 1-ulp
     * acceptance [[sampleTemperature]] already carries), normalized by
-    * the MAX pow before quantization — wq = floor(w/w_max · 1e9) ≤
-    * 1e9, so wq·1e6 and Σwq stay inside int64 at ANY corpus size
-    * (quantizing pow(n) directly would overflow a 9.2M-doc source at
-    * α = 1); w_max = max(w) equals pow(max n) bitwise (pow is
-    * monotone and both engines compute it from the same integer).
-    * Everything past the two IEEE ops (pow, the w/w_max·1e9 scale) is
-    * exact int64 `·1e6 DIV`. SINGLE-PASS over the whole grid: every
-    * per-α quantity is a per-(α, source) CONSTANT, so the curve
-    * builds one broadcast threshold table on the source-sized count
-    * frame (α × sources rows — w, t = min n/w, and
-    * [[sampleTemperature]]'s threshold ((w·t)/n)·2⁶⁰ in the identical
-    * operation order) and drives ONE corpus scan against it: the
-    * md5 draw is computed once per document, the broadcast join fans
-    * each row across the α settings, and the narrow filter + ONE
-    * (α × source)-sized count aggregate finish the draw side (the
-    * draw total is a per-α window sum over that frame — every drawn
-    * row's source exists in cnt, so Σ n_sampled IS the total; the
-    * weight window-sums ride the same frame, the [[mixtureReport]]
-    * shape). Growing the α grid adds broadcast rows, never corpus
-    * passes — the replay-per-α form this replaced scanned the corpus
-    * 3× per setting. */
+    * the MAX pow before quantization: wq = floor(w/w_max · 1e9) ≤ 1e9,
+    * so wq·1e6 and Σwq stay inside int64 at ANY corpus size;
+    * w_max = max(w) equals pow(max n) bitwise. Everything past the two
+    * IEEE ops (pow, the w/w_max·1e9 scale) is exact int64 `·1e6 DIV`.
+    * A [[Sweep]] on the shared side: the source counts fan out to one
+    * (α, source) threshold row per setting, and ONE corpus scan
+    * computes the md5 draw once per document and meets every setting
+    * through a broadcast join. */
   def temperatureCurve(docs: DataFrame,
       alphas: Seq[Double] = Seq(0.3, 0.5, 0.7, 1.0)): DataFrame = {
     require(alphas.nonEmpty && alphas.forall(a => a > 0.0 && a <= 1.0),
@@ -306,19 +291,15 @@ object TextStats {
     val hv = expr(
       "CAST(CAST(conv(substring(md5(CAST(doc_id AS STRING)), 1, 15), 16, 10) AS BIGINT) AS DOUBLE)")
     val wA = org.apache.spark.sql.expressions.Window.partitionBy("alpha_q2")
-    // per-(α, source) constants on ONE source-sized count frame × an
-    // inline α table (lit(a) is the same IEEE double the replay's
-    // interpolated literal parsed to, and the threshold's operation
-    // order is identical to sampleTemperature's — the single-pass
-    // filter keeps exactly the documents the per-α replay kept)
+    // per-(α, source) constants: ONE source-sized count frame, each
+    // row fanned out to one row per α (lit(a) is the same IEEE double
+    // the replay's interpolated literal parsed to, and the threshold's
+    // operation order is identical to sampleTemperature's — the
+    // single-pass filter keeps exactly the documents the replay kept)
     val cnt = docs.groupBy(col("source")).agg(count(lit(1)).as("n_docs"))
-    val aTab = alphas.map(a =>
-      struct(lit(math.round(a * 100)).as("alpha_q2"), lit(a).as("alpha")))
-    val perA = cnt
-      .select(col("source"), col("n_docs"),
-        explode(array(aTab: _*)).as("a"))
-      .select(col("source"), col("n_docs"),
-        col("a.alpha_q2").as("alpha_q2"), col("a.alpha").as("alpha"))
+    val perA = Sweep.unstack(cnt, Seq("source", "n_docs", "alpha_q2", "alpha"))(
+        alphas.map(a => Seq(col("source"), col("n_docs"),
+          lit(math.round(a * 100)), lit(a))))
       .withColumn("wd", expr("pow(CAST(n_docs AS DOUBLE), alpha)"))
       .withColumn("t", min(col("n_docs").cast("double") / col("wd")).over(wA))
     val thr = perA.select(col("alpha_q2"), col("source"),
@@ -1237,23 +1218,15 @@ object TextStats {
       .unionAll(boilerplateIndex(deltaDocs, normalized))
       .groupBy(col("lh")).agg(sum(col("df")).as("df"))
 
-  /** Boilerplate aggressiveness curve — the scrub's `minDf` knob
-    * measured like the tuning curves of the approximate families: per
+  /** Boilerplate aggressiveness curve, the scrub's `minDf` knob: per
     * threshold, how many lines would flag, how many characters they
     * carry (what a scrub would remove), and how many documents are
     * touched. One row per threshold: (min_df, n_lines, n_flagged,
-    * chars_flagged, n_docs_hit) — the table that picks the
-    * aggressiveness/precision trade from evidence (minDf 2 removes
-    * every repeated line; a conservative pipeline raises it until
-    * chars_flagged stops being dominated by legitimate repeated
-    * content).
-    *
-    * Cost: the whole curve rides the ONE df-join pass
-    * [[boilerplateLines]] already does — thresholds are conditional
-    * aggregates over the same (df, chars) line frame, stacked to
-    * rows; no per-setting pass anywhere (the nprobe side of the
-    * per-setting contrast). Blank lines report df 0 and can never
-    * flag, exactly as the scrub treats them. */
+    * chars_flagged, n_docs_hit); the flagged counts are exact and
+    * non-increasing in the threshold. Blank lines report df 0 and never flag, exactly
+    * as the scrub treats them. A [[Sweep]] on the shared side: every
+    * threshold is a conditional aggregate over the ONE df-join pass
+    * [[boilerplateLines]] already does. */
   def boilerplateCurve(docs: DataFrame,
       thresholds: Seq[Long] = Seq(2L, 3L, 5L, 10L),
       normalized: Boolean = false): DataFrame = {
@@ -1268,15 +1241,11 @@ object TextStats {
         sum(when(col("df") >= t, col("nc")).otherwise(0L)).as(s"c$i"),
         countDistinct(when(col("df") >= t, col("doc_id"))).as(s"d$i"))
     }
-    val one = lf.agg(count(lit(1)).as("n_lines"), aggs: _*)
-    val stackExpr = thresholds.zipWithIndex
-      .map { case (t, i) => s"CAST($t AS BIGINT), n$i, c$i, d$i" }
-      .mkString(", ")
-    one.selectExpr("n_lines",
-        s"stack(${thresholds.size}, $stackExpr)" +
-          " AS (min_df, n_flagged, chars_flagged, n_docs_hit)")
-      .select(col("min_df"), col("n_lines"), col("n_flagged"),
-        col("chars_flagged"), col("n_docs_hit"))
+    Sweep.unstack(lf.agg(count(lit(1)).as("n_lines"), aggs: _*),
+        Seq("min_df", "n_lines", "n_flagged", "chars_flagged", "n_docs_hit"))(
+      thresholds.zipWithIndex.map { case (t, i) =>
+        Seq(lit(t), col("n_lines"), col(s"n$i"), col(s"c$i"), col(s"d$i"))
+      })
   }
 
   /** Live boilerplate flagging — the streaming twin of
