@@ -1223,10 +1223,10 @@ object TextStats {
     * carry (what a scrub would remove), and how many documents are
     * touched. One row per threshold: (min_df, n_lines, n_flagged,
     * chars_flagged, n_docs_hit); the flagged counts are exact and
-    * non-increasing in the threshold. Blank lines report df 0 and never flag, exactly
-    * as the scrub treats them. A [[Sweep]] on the shared side: every
-    * threshold is a conditional aggregate over the ONE df-join pass
-    * [[boilerplateLines]] already does. */
+    * non-increasing in the threshold. Blank lines report df 0 and
+    * never flag, exactly as the scrub treats them. A [[Sweep]] on the
+    * shared side: every threshold is a conditional aggregate over the
+    * ONE df-join pass [[boilerplateLines]] already does. */
   def boilerplateCurve(docs: DataFrame,
       thresholds: Seq[Long] = Seq(2L, 3L, 5L, 10L),
       normalized: Boolean = false): DataFrame = {
